@@ -17,15 +17,12 @@ object Probe {
     // SPARK_GRAFT_CPUS: match Bench's session shape at any core count so
     // 8-vs-32 scaling anomalies can be profiled stage by stage.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v": session-conf A/B hook (same syntax
-    // as Verify's) so config hypotheses can be measured in isolation.
-    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap
+    // SPARK_GRAFT_EXTRA_CONF: session-conf A/B hook so config hypotheses
+    // can be measured in isolation.
     val spark = graft.engine.Graft.session(
       master = s"local[$cpus]", shufflePartitions = cpus,
       appName = "graft-probe",
-      extraConf = Map("spark.ui.enabled" -> "false") ++ extra)
+      extraConf = Map("spark.ui.enabled" -> "false") ++ graft.engine.Graft.envExtraConf())
     // SPARK_GRAFT_STAGES=1: per-stage wall/executor-time breakdown of the
     // LAST rep, from a listener (stage name ≈ the operator line).
     val stageLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()

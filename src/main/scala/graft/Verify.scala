@@ -8,16 +8,13 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Same engine-recommended session the bench measures (Graft.session
     // sets the nanos flag events.parquet needs and the graft extensions).
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overrides any session default —
-    // the invariance-harness hook (re-run the registry with AQE off, a
+    // SPARK_GRAFT_EXTRA_CONF overrides any session default — the
+    // invariance-harness hook (re-run the registry with AQE off, a
     // different broadcast threshold, …) without touching the contract
-    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap
     val spark = graft.engine.Graft.session(
       master = s"local[$cpus]", shufflePartitions = cpus.toInt,
       appName = "graft-verify",
-      extraConf = Map("spark.ui.enabled" -> "false") ++ extra)
+      extraConf = Map("spark.ui.enabled" -> "false") ++ graft.engine.Graft.envExtraConf())
     new java.io.File(outDir).mkdirs()
     // Optional trailing args restrict the dump to named queries — a
     // builder-side shortcut for spot-checking one oracle; the driver

@@ -215,17 +215,4 @@ object EmbeddingLsh {
     val best = candidates.minBy(_._3)
     (best._1, best._2)
   }
-
-  /** nearPairs with banding tuned to the threshold (the production
-    * configuration: callers state the similarity regime, the engine picks
-    * the recall/cost point — cos ≥ 0.9 near-dup passes get deep cheap
-    * bands, low-threshold exploratory scans get the wide exhaustive ones).
-    */
-  def nearPairsTuned(
-      emb: DataFrame, idCol: String, embCol: String, threshold: Double,
-      dim: Int = 64, seed: Long = 4242L, maxMiss: Double = 1e-4,
-      maxBucketSize: Int = 4096): DataFrame = {
-    val (r, b) = tunedBands(threshold, maxMiss)
-    nearPairs(emb, idCol, embCol, threshold, r, b, dim, seed, maxBucketSize)
-  }
 }

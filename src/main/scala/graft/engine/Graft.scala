@@ -81,6 +81,14 @@ object Graft {
     s
   }
 
+  /** Session overrides from `SPARK_GRAFT_EXTRA_CONF="k=v;k=v"` (entries
+    * without `=` are ignored), for `session`'s `extraConf`.
+    */
+  def envExtraConf(): Map[String, String] =
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(';')).map(_.trim).filter(_.contains("="))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap
+
   /** Per-scan execution statistics — the analog of Pinot's query response
     * metadata (`numSegmentsQueried` / `numSegmentsProcessed` /
     * `numSegmentsMatched`, reference: /root/reference/basics/

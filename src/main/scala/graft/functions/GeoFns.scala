@@ -84,18 +84,4 @@ object GeoFns {
     lat.between(lats.min, lats.max) && lon.between(lons.min, lons.max) &&
       crossings % 2 === 1
   }
-
-  /** ST_Within-circle analog with a sargable bounding-box pre-filter:
-    * the box predicate prunes row groups; haversine refines.
-    */
-  def withinRadiusKm(
-      lat: Column, lon: Column,
-      centerLat: Double, centerLon: Double, radiusKm: Double): Column = {
-    val latDelta = math.toDegrees(radiusKm / EarthRadiusKm)
-    val lonDelta = math.toDegrees(
-      radiusKm / (EarthRadiusKm * math.max(math.cos(math.toRadians(centerLat)), 1e-9)))
-    lat.between(centerLat - latDelta, centerLat + latDelta) &&
-      lon.between(centerLon - lonDelta, centerLon + lonDelta) &&
-      haversineKm(lat, lon, lit(centerLat), lit(centerLon)) <= radiusKm
-  }
 }

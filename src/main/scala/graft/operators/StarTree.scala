@@ -98,30 +98,40 @@ object StarTree {
     * path (Pinot keeps star-trees per segment and merges at query time;
     * here the cube table absorbs each appended segment batch). Only the
     * DELTA is aggregated — the fact history is never rescanned; the merge
-    * itself runs over two cube-sized inputs. The merged cube is
-    * materialized (localCheckpoint) before the overwrite so reading and
-    * rewriting the same path cannot race, then the catalog entry is
-    * re-registered so the transparent rewrite serves the refreshed cube.
+    * itself runs over two cube-sized inputs (`foldInto`). The catalog
+    * entry is then re-registered so the transparent rewrite serves the
+    * refreshed cube.
     */
   def refreshIncremental(
       spark: org.apache.spark.sql.SparkSession, factPath: String, delta: DataFrame,
       dims: Seq[String], sumMetrics: Seq[String], cubePath: String,
       distinctMetrics: Seq[String] = Nil,
       quantileMetrics: Seq[String] = Nil): Unit = {
-    val existing = spark.read.parquet(cubePath)
-    val merged = mergeCubes(existing,
-        buildCube(delta, dims, sumMetrics, distinctMetrics, quantileMetrics),
-        dims, sumMetrics, distinctMetrics, quantileMetrics)
-      .localCheckpoint(true)
-    // Natural (shuffle) partitioning on the write: AQE coalesces a small
-    // cube to few files, and a big cube (realistic dim cardinalities at
-    // 100 TB) parallelizes across writers instead of bottlenecking on one
-    // task and producing one unsplittable parquet. The rewrite rule reads
-    // the directory either way.
-    merged.write.mode("overwrite").parquet(cubePath)
+    foldInto(cubePath,
+      buildCube(delta, dims, sumMetrics, distinctMetrics, quantileMetrics))(
+      mergeCubes(_, _, dims, sumMetrics, distinctMetrics, quantileMetrics))
     graft.plans.StarTreeCatalog.register(
       factPath, dims, sumMetrics, cubePath, distinctMetrics, quantileMetrics)
   }
+
+  /** The one read–merge–overwrite step of every folded table (the sum,
+    * hist and sketch cubes, the streamed SCD2 dim): `merge` the table
+    * stored at `path` with `delta` and replace it. The
+    * merged result is materialized (localCheckpoint) before the overwrite
+    * because it reads the very files the overwrite deletes. Successive
+    * folds never race; a concurrent READER can, since the overwrite is in
+    * place (no atomic publish yet).
+    */
+  private[graft] def foldInto(path: String, delta: DataFrame)(
+      merge: (DataFrame, DataFrame) => DataFrame): Unit =
+    // Natural (shuffle) partitioning on the write: AQE coalesces a small
+    // cube to few files, and a big cube (realistic dim cardinalities at
+    // 100 TB) parallelizes across writers instead of bottlenecking on one
+    // task and producing one unsplittable parquet. Readers read the
+    // directory either way.
+    merge(delta.sparkSession.read.parquet(path), delta)
+      .localCheckpoint(true)
+      .write.mode("overwrite").parquet(path)
 
   /** QUANTILE-in-star-tree (Pinot's PERCENTILE sketch metric family,
     * configuration-reference/schema.md sketch metrics): per cell, a value

@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.StructType
   * formats). Spark-native: `spark.read` already speaks every needed
   * format and filesystem; these helpers pin the engine's conventions
   * (explicit schema for text formats — schema inference is a full extra
-  * scan at 100 TB — and ingestion lands as sorted/partitioned segments
-  * via SegmentWriter).
+  * scan at 100 TB); SegmentWriter.write lands the result as
+  * sorted/partitioned segments.
   */
 object Ingest {
 
@@ -94,8 +94,4 @@ object Ingest {
       .select(col("_corrupt_record").as("raw_line"))
     (good, bad)
   }
-
-  /** Ingest + land as query-optimized segments in one step. */
-  def toSegments(df: DataFrame, path: String, cfg: SegmentWriter.Config): Unit =
-    SegmentWriter.write(df, path, cfg)
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** A realtime event row (mirrors the `events` table schema). */
 final case class Event(
@@ -314,128 +314,146 @@ object Realtime {
       broadcast(dim.select((keyCol +: dimCols).map(col): _*)),
       Seq(keyCol), "left_outer")
 
+  /** Starts `stream` as an append-mode `foreachBatch` sink whose progress
+    * lives in `checkpointDir` — the start-up every checkpointed sink below
+    * shares.
+    */
+  private def foreachBatchSink(stream: DataFrame, checkpointDir: String)(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(f)
+      .start()
+
+  /** One micro-batch of a FOLDING CUBE SINK — the skeleton all five cube
+    * sinks below run: only the batch's own mini-cube (`build`) is
+    * aggregated, and it folds into the materialized cube at `cubePath`
+    * (`merge`, through StarTree.foldInto) — history is never rescanned.
+    * The first batch builds the cube; an empty batch changes nothing.
+    *
+    * Replay contract: foreachBatch is AT-LEAST-ONCE — after a crash
+    * between the batch's side effects and the checkpoint commit, the same
+    * (batchId, rows) is re-delivered. With an `archive` (fact root, batch
+    * id), two guards make a weight-additive fold safe:
+    *  - the batch is archived to `<fact root>/batch_id=<id>` with
+    *    overwrite (re-running replaces the same files — no duplicate rows);
+    *  - a batch id whose subdir already exists is a re-delivery, so the
+    *    cube may ALREADY contain its partials: instead of folding the
+    *    delta again (double counting), the cube is rebuilt from the whole
+    *    archive — correct by construction, and the rebuild is paid only on
+    *    crash recovery, never in steady state.
+    * Without an archive every batch folds unconditionally, which is only
+    * correct for a set-idempotent `merge`.
+    *
+    * foreachBatch runs batches serially per query, so folds never race
+    * each other; the cube is overwritten in place, so a concurrent reader
+    * can still hit missing files. Returns whether a cube was written.
+    */
+  private def foldCubeBatch(
+      batch: DataFrame, cubePath: String, archive: Option[(String, Long)],
+      build: DataFrame => DataFrame,
+      merge: (DataFrame, DataFrame) => DataFrame): Boolean = {
+    val spark = batch.sparkSession
+    val hc = spark.sparkContext.hadoopConfiguration
+    def exists(path: String): Boolean = {
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(hc).exists(p)
+    }
+    def publish(cube: DataFrame): Unit = cube.write.mode("overwrite").parquet(cubePath)
+    batch.persist()
+    try {
+      if (batch.isEmpty) false
+      else {
+        val replay = archive.exists { case (factPath, id) =>
+          val batchDir = s"$factPath/batch_id=$id"
+          val seen = exists(batchDir)
+          batch.write.mode("overwrite").parquet(batchDir)
+          seen
+        }
+        if (!exists(cubePath)) publish(build(batch))
+        else if (replay) publish(build(spark.read.parquet(archive.get._1)))
+        else graft.operators.StarTree.foldInto(cubePath, build(batch))(merge)
+        true
+      }
+    } finally batch.unpersist()
+  }
+
+  /** A sketch cube: one `sk` blob per `dims` cell. */
+  private def sketchCube(dims: Seq[String], sketch: Column)(df: DataFrame): DataFrame =
+    df.groupBy(dims.map(col): _*).agg(sketch.as("sk"))
+
+  /** Folds two sketch cubes: a cell on one side only carries over, a
+    * shared cell `union`s its two blobs.
+    */
+  private def mergeSketchCells(dims: Seq[String], union: (Column, Column) => Column)(
+      old: DataFrame, delta: DataFrame): DataFrame =
+    old.withColumnRenamed("sk", "sk_old")
+      .join(delta.withColumnRenamed("sk", "sk_new"), dims, "full_outer")
+      .select(dims.map(col) :+
+        when(col("sk_old").isNull, col("sk_new"))
+          .when(col("sk_new").isNull, col("sk_old"))
+          .otherwise(union(col("sk_old"), col("sk_new"))).as("sk"): _*)
+
   /** Streaming star-tree maintenance: each micro-batch appends to the
-    * fact archive and folds its OWN mini-cube into the materialized cube
-    * (Pinot's realtime servers build star-trees per consuming segment and
-    * serve them fresh — reference: /root/reference/basics/Architecture.md
-    * realtime flow + basics/indexing/README.md:16 star-tree). Only the
-    * delta is ever aggregated — history is never rescanned — and after
-    * every batch the transparent rewrite (StarTreeRewriteRule) serves the
-    * refreshed cube, so dashboard aggregates stay cube-fast while the
-    * stream runs. foreachBatch executes batches serially per query, so
-    * the read-merge-overwrite refresh never races itself.
+    * fact archive and folds its OWN mini-cube (sums, counts, min/max, HLL
+    * `distinctMetrics`) into the materialized cube (Pinot's realtime
+    * servers build star-trees per consuming segment and serve them fresh
+    * — the reference's basics/Architecture.md realtime flow +
+    * basics/indexing/README.md:16 star-tree). After every batch the cube
+    * is re-registered, so the transparent rewrite (StarTreeRewriteRule)
+    * serves the refreshed cube and dashboard aggregates stay cube-fast
+    * while the stream runs. Archived replay guard (`foldCubeBatch`).
     */
   def cubeRefreshSink(
       stream: DataFrame, factPath: String, cubePath: String,
       dims: Seq[String], sumMetrics: Seq[String],
       checkpointDir: String,
-      distinctMetrics: Seq[String] = Nil): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processCubeBatch(batch, id, factPath, cubePath, dims, sumMetrics, distinctMetrics)
-      }
-      .start()
+      distinctMetrics: Seq[String] = Nil): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir)(
+      processCubeBatch(_, _, factPath, cubePath, dims, sumMetrics, distinctMetrics))
 
-  /** One micro-batch of the cube-maintenance sink. foreachBatch is
-    * AT-LEAST-ONCE: after a crash between the batch side effects and the
-    * checkpoint commit, the same (batchId, rows) is re-delivered. Two
-    * guards make the replay safe:
-    *  - the fact archive is written to a batch-id-keyed subdir with
-    *    overwrite (re-running replaces the same files — no duplicate rows),
-    *  - a re-delivered batch id (its subdir already exists) means the cube
-    *    may ALREADY contain this batch's partials, so instead of folding
-    *    the delta again (double counting), the cube is rebuilt from the
-    *    full fact archive — correct by construction, and the one-time
-    *    rebuild cost is paid only on crash recovery, never steady-state.
-    */
   private[graft] def processCubeBatch(
       batch: DataFrame, id: Long, factPath: String, cubePath: String,
       dims: Seq[String], sumMetrics: Seq[String],
       distinctMetrics: Seq[String]): Unit = {
-    val spark = batch.sparkSession
-    batch.persist()
-    try {
-      if (batch.isEmpty) ()
-      else {
-        val hc = spark.sparkContext.hadoopConfiguration
-        val batchDir = new org.apache.hadoop.fs.Path(s"$factPath/batch_id=$id")
-        val replay = batchDir.getFileSystem(hc).exists(batchDir)
-        batch.write.mode("overwrite").parquet(batchDir.toString)
-        val cp = new org.apache.hadoop.fs.Path(cubePath)
-        val cubeExists = cp.getFileSystem(hc).exists(cp)
-        if (!cubeExists)
-          graft.operators.StarTree.materializeAndRegister(
-            batch, factPath, dims, sumMetrics, cubePath, distinctMetrics)
-        else if (replay)
-          graft.operators.StarTree.materializeAndRegister(
-            spark.read.parquet(factPath), factPath,
-            dims, sumMetrics, cubePath, distinctMetrics)
-        else
-          graft.operators.StarTree.refreshIncremental(
-            spark, factPath, batch, dims, sumMetrics, cubePath, distinctMetrics)
-      }
-    } finally batch.unpersist()
+    import graft.operators.StarTree
+    if (foldCubeBatch(batch, cubePath, Some(factPath -> id),
+        StarTree.buildCube(_, dims, sumMetrics, distinctMetrics),
+        StarTree.mergeCubes(_, _, dims, sumMetrics, distinctMetrics)))
+      graft.plans.StarTreeCatalog.register(
+        factPath, dims, sumMetrics, cubePath, distinctMetrics)
   }
 
   /** Streaming QUANTILE-cube maintenance — the hist-metric twin of
     * `cubeRefreshSink`: each micro-batch's value histogram folds into the
     * materialized per-cell histograms (StarTree.mergeHistCubes — counts
     * add value-wise, losslessly), so `StarTree.percentileRollup` serves
-    * EXACT percentiles over everything ingested so far without ever
-    * rescanning history. Same at-least-once replay guards as the sum
-    * cube: batch-id-keyed archive subdirs + full rebuild on re-delivery.
-    * The metric must be dictionary-encoded (integral — enforced by
+    * EXACT percentiles over everything ingested so far. Counts add, so
+    * the sink keeps the archived replay guard (`foldCubeBatch`). The
+    * metric must be dictionary-encoded (integral — enforced by
     * buildHistCube) or per-cell state would grow with rows, not values.
     */
   def histCubeRefreshSink(
       stream: DataFrame, factPath: String, cubePath: String,
       dims: Seq[String], metric: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processHistCubeBatch(batch, id, factPath, cubePath, dims, metric)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir)(
+      processHistCubeBatch(_, _, factPath, cubePath, dims, metric))
 
   private[graft] def processHistCubeBatch(
       batch: DataFrame, id: Long, factPath: String, cubePath: String,
       dims: Seq[String], metric: String): Unit = {
     import graft.operators.StarTree
-    val spark = batch.sparkSession
-    batch.persist()
-    try {
-      if (batch.isEmpty) ()
-      else {
-        val hc = spark.sparkContext.hadoopConfiguration
-        val batchDir = new org.apache.hadoop.fs.Path(s"$factPath/batch_id=$id")
-        val replay = batchDir.getFileSystem(hc).exists(batchDir)
-        batch.write.mode("overwrite").parquet(batchDir.toString)
-        val cp = new org.apache.hadoop.fs.Path(cubePath)
-        val cubeExists = cp.getFileSystem(hc).exists(cp)
-        val next =
-          if (!cubeExists) StarTree.buildHistCube(batch, dims, metric)
-          else if (replay)
-            StarTree.buildHistCube(spark.read.parquet(factPath), dims, metric)
-          else StarTree.mergeHistCubes(
-            spark.read.parquet(cubePath),
-            StarTree.buildHistCube(batch, dims, metric), dims, metric)
-        // materialize before the overwrite so reading and rewriting the
-        // same path cannot race (the refreshIncremental discipline)
-        next.localCheckpoint(true).write.mode("overwrite").parquet(cubePath)
-      }
-    } finally batch.unpersist()
+    foldCubeBatch(batch, cubePath, Some(factPath -> id),
+      StarTree.buildHistCube(_, dims, metric),
+      StarTree.mergeHistCubes(_, _, dims, metric))
   }
 
-  /** Streaming DISTINCT-COUNT cube via theta sketches — the
-    * distinct-metric member of the cube-sink family, with a STRONGER
-    * replay story than either sibling: KMV union is SET-idempotent
-    * (re-merging the hashes of an already-folded batch changes nothing),
-    * so an at-least-once re-delivery needs no batch-id bookkeeping and
-    * no rebuild path — the delta folds unconditionally, every time.
+  /** Streaming DISTINCT-COUNT cube via theta sketches. KMV union is
+    * SET-idempotent (re-merging the hashes of an already-folded batch
+    * changes nothing), so an at-least-once re-delivery needs no archive
+    * and no rebuild path — the delta folds unconditionally, every time.
     * State per dim cell is O(k) regardless of ingested volume, and the
     * folded sketches keep the FULL set algebra: union/intersect/a-not-b
     * across cells still work on the materialized cube.
@@ -443,155 +461,66 @@ object Realtime {
   def thetaCubeRefreshSink(
       stream: DataFrame, cubePath: String,
       dims: Seq[String], valueCol: String, k: Int,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processThetaBatch(batch, cubePath, dims, valueCol, k)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir)((batch, _) =>
+      processThetaBatch(batch, cubePath, dims, valueCol, k))
 
   private[graft] def processThetaBatch(
       batch: DataFrame, cubePath: String,
       dims: Seq[String], valueCol: String, k: Int): Unit = {
     import graft.functions.SketchFns._
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return
-    val mini = batch.groupBy(dims.map(col): _*)
-      .agg(thetaSketch(col(valueCol), k).as("sk"))
-    val cp = new org.apache.hadoop.fs.Path(cubePath)
-    val exists = cp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(cp)
-    val next =
-      if (!exists) mini
-      else {
-        val old = spark.read.parquet(cubePath)
-          .withColumnRenamed("sk", "sk_old")
-        old.join(mini.withColumnRenamed("sk", "sk_new"), dims, "full_outer")
-          .select(dims.map(col) :+
-            when(col("sk_old").isNull, col("sk_new"))
-              .when(col("sk_new").isNull, col("sk_old"))
-              .otherwise(thetaUnion(col("sk_old"), col("sk_new"))).as("sk"): _*)
-      }
-    next.localCheckpoint(true).write.mode("overwrite").parquet(cubePath)
+    foldCubeBatch(batch, cubePath, archive = None,
+      sketchCube(dims, thetaSketch(col(valueCol), k)),
+      mergeSketchCells(dims, thetaUnion))
   }
 
-  /** Streaming QUANTILE cube via KLL sketches — the order-statistics
-    * member of the cube-sink family. Per-cell state is O(k) regardless of
-    * ingested volume (the theta economics, for quantiles), and the folded
-    * blobs keep composing: any coarser grouping unions the cells. Unlike
-    * the theta sink, KLL union is weight-ADDITIVE, not set-idempotent —
-    * re-merging a re-delivered batch would double-count — so this sink
-    * carries histCubeRefreshSink's at-least-once replay guard
-    * (batch-id-keyed fact archive + full rebuild on re-delivery). The
-    * trade vs the hist cube: CONTINUOUS metrics work (any double column,
-    * not just dictionary-encoded integral ones) at bounded-error instead
-    * of exact percentiles — exact while cells stay under k.
+  /** Streaming QUANTILE cube via KLL sketches: per-cell state is O(k)
+    * regardless of ingested volume, and the folded blobs keep composing
+    * (any coarser grouping unions the cells). KLL union is weight-ADDITIVE,
+    * so the sink keeps the archived replay guard (`foldCubeBatch`). The
+    * trade vs the hist cube: CONTINUOUS metrics work (any double column)
+    * at bounded-error instead of exact percentiles — exact while cells
+    * stay under k.
     */
   def kllCubeRefreshSink(
       stream: DataFrame, factPath: String, cubePath: String,
       dims: Seq[String], valueCol: String, k: Int,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processKllCubeBatch(batch, id, factPath, cubePath, dims, valueCol, k)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir)(
+      processKllCubeBatch(_, _, factPath, cubePath, dims, valueCol, k))
 
   private[graft] def processKllCubeBatch(
       batch: DataFrame, id: Long, factPath: String, cubePath: String,
       dims: Seq[String], valueCol: String, k: Int): Unit = {
     import graft.functions.SketchFns._
-    val spark = batch.sparkSession
-    def sketchOf(df: DataFrame): DataFrame =
-      df.groupBy(dims.map(col): _*).agg(kllSketch(col(valueCol), k).as("sk"))
-    batch.persist()
-    try {
-      if (batch.isEmpty) ()
-      else {
-        val hc = spark.sparkContext.hadoopConfiguration
-        val batchDir = new org.apache.hadoop.fs.Path(s"$factPath/batch_id=$id")
-        val replay = batchDir.getFileSystem(hc).exists(batchDir)
-        batch.write.mode("overwrite").parquet(batchDir.toString)
-        val cp = new org.apache.hadoop.fs.Path(cubePath)
-        val cubeExists = cp.getFileSystem(hc).exists(cp)
-        val next =
-          if (!cubeExists) sketchOf(batch)
-          else if (replay) sketchOf(spark.read.parquet(factPath))
-          else {
-            val old = spark.read.parquet(cubePath).withColumnRenamed("sk", "sk_old")
-            old.join(sketchOf(batch).withColumnRenamed("sk", "sk_new"),
-                dims, "full_outer")
-              .select(dims.map(col) :+
-                when(col("sk_old").isNull, col("sk_new"))
-                  .when(col("sk_new").isNull, col("sk_old"))
-                  .otherwise(kllUnion(col("sk_old"), col("sk_new"))).as("sk"): _*)
-          }
-        next.localCheckpoint(true).write.mode("overwrite").parquet(cubePath)
-      }
-    } finally batch.unpersist()
+    foldCubeBatch(batch, cubePath, Some(factPath -> id),
+      sketchCube(dims, kllSketch(col(valueCol), k)),
+      mergeSketchCells(dims, kllUnion))
   }
 
-  /** Streaming TUPLE-sketch cube — the (distinct count AND metric total)
-    * member of the cube-sink family: per-cell tuple blobs carry a summed
-    * long metric per retained key, so the refreshed cube answers "how
-    * many distinct users and how much revenue per segment" (and their
-    * intersections) from O(cells · k) state. Tuple union is
-    * summary-ADDITIVE per key — re-merging a re-delivered batch would
-    * double-count the carried metric even though the key set is
-    * idempotent — so this sink carries the kllCubeRefreshSink replay
-    * guard (batch-id-keyed fact archive + full rebuild on re-delivery).
-    * The metric must be a LONG (quantize money to cents per row first —
-    * the integer-grid rule), so rebuild and fold agree exactly.
+  /** Streaming TUPLE-sketch cube — (distinct count AND metric total) per
+    * cell: tuple blobs carry a summed long metric per retained key, so
+    * the refreshed cube answers "how many distinct users and how much
+    * revenue per segment" (and their intersections) from O(cells · k)
+    * state. Tuple union is summary-ADDITIVE per key, so the sink keeps the
+    * archived replay guard (`foldCubeBatch`). The metric must be a LONG
+    * (quantize money to cents per row first — the integer-grid rule), so
+    * rebuild and fold agree exactly.
     */
   def tupleCubeRefreshSink(
       stream: DataFrame, factPath: String, cubePath: String,
       dims: Seq[String], keyCol: String, metricCol: String, k: Int,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processTupleCubeBatch(batch, id, factPath, cubePath, dims,
-          keyCol, metricCol, k)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir)(
+      processTupleCubeBatch(_, _, factPath, cubePath, dims, keyCol, metricCol, k))
 
   private[graft] def processTupleCubeBatch(
       batch: DataFrame, id: Long, factPath: String, cubePath: String,
       dims: Seq[String], keyCol: String, metricCol: String, k: Int): Unit = {
     import graft.functions.SketchFns._
-    val spark = batch.sparkSession
-    def sketchOf(df: DataFrame): DataFrame =
-      df.groupBy(dims.map(col): _*)
-        .agg(tupleSketch(col(keyCol), col(metricCol), k).as("sk"))
-    batch.persist()
-    try {
-      if (batch.isEmpty) ()
-      else {
-        val hc = spark.sparkContext.hadoopConfiguration
-        val batchDir = new org.apache.hadoop.fs.Path(s"$factPath/batch_id=$id")
-        val replay = batchDir.getFileSystem(hc).exists(batchDir)
-        batch.write.mode("overwrite").parquet(batchDir.toString)
-        val cp = new org.apache.hadoop.fs.Path(cubePath)
-        val cubeExists = cp.getFileSystem(hc).exists(cp)
-        val next =
-          if (!cubeExists) sketchOf(batch)
-          else if (replay) sketchOf(spark.read.parquet(factPath))
-          else {
-            val old = spark.read.parquet(cubePath).withColumnRenamed("sk", "sk_old")
-            old.join(sketchOf(batch).withColumnRenamed("sk", "sk_new"),
-                dims, "full_outer")
-              .select(dims.map(col) :+
-                when(col("sk_old").isNull, col("sk_new"))
-                  .when(col("sk_new").isNull, col("sk_old"))
-                  .otherwise(tupleUnion(col("sk_old"), col("sk_new"))).as("sk"): _*)
-          }
-        next.localCheckpoint(true).write.mode("overwrite").parquet(cubePath)
-      }
-    } finally batch.unpersist()
+    foldCubeBatch(batch, cubePath, Some(factPath -> id),
+      sketchCube(dims, tupleSketch(col(keyCol), col(metricCol), k)),
+      mergeSketchCells(dims, tupleUnion))
   }
 
   /** Streaming SCD TYPE-2 maintenance — the history-preserving dual of
@@ -609,14 +538,8 @@ object Realtime {
     */
   def scd2IngestSink(
       stream: DataFrame, factPath: String, dimPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processScd2Batch(batch, id, factPath, dimPath)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir)(processScd2Batch(_, _, factPath, dimPath))
 
   private[graft] def processScd2Batch(
       batch: DataFrame, id: Long, factPath: String, dimPath: String): Unit = {
@@ -633,12 +556,10 @@ object Realtime {
           .join(keys, Seq("user_id"), "left_semi")
         val rebuilt = graft.operators.Scd2.build(affected)
         val dp = new org.apache.hadoop.fs.Path(dimPath)
-        val next =
-          if (!dp.getFileSystem(hc).exists(dp)) rebuilt
-          else spark.read.parquet(dimPath)
-            .join(keys, Seq("user_id"), "left_anti")
-            .unionByName(rebuilt)
-        next.localCheckpoint(true).write.mode("overwrite").parquet(dimPath)
+        if (!dp.getFileSystem(hc).exists(dp))
+          rebuilt.write.mode("overwrite").parquet(dimPath)
+        else graft.operators.StarTree.foldInto(dimPath, rebuilt)(
+          _.join(keys, Seq("user_id"), "left_anti").unionByName(_))
       }
     } finally batch.unpersist()
   }
@@ -655,16 +576,12 @@ object Realtime {
   def denormIngestSink(
       stream: DataFrame, dim: () => DataFrame, key: String,
       viewPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.sources.DenormView.refreshIncremental(
-            batch.sparkSession, viewPath, batch, dim(), key)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir) { (batch, _) =>
+      if (!batch.isEmpty)
+        graft.sources.DenormView.refreshIncremental(
+          batch.sparkSession, viewPath, batch, dim(), key)
+    }
 
   /** Streaming ingest INTO A HYBRID TABLE with cadenced realtime→offline
     * promotion — Pinot's consuming-segment + RealtimeToOfflineSegments
@@ -690,23 +607,19 @@ object Realtime {
   def hybridIngestSink(
       stream: DataFrame, root: String, tsCol: String, checkpointDir: String,
       promoteEvery: Int = 0, granuleUs: Long = 86400000000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        graft.sources.HybridTable.withMicrosTimestamps(spark) {
-          batch.write.mode("overwrite")
-            .parquet(s"${graft.sources.HybridTable.realtimeDir(root)}/batch_id=$id")
-        }
-        if (promoteEvery > 0 && id > 0 && id % promoteEvery == 0) {
-          graft.sources.HybridTable.promoteRealtime(
-            spark, root, tsCol, granuleUs, gcRealtime = false)
-          () // None = lease held elsewhere: skip, next cadence tick retries
-        }
+      : StreamingQuery =
+    foreachBatchSink(stream, checkpointDir) { (batch, id) =>
+      val spark = batch.sparkSession
+      graft.sources.HybridTable.withMicrosTimestamps(spark) {
+        batch.write.mode("overwrite")
+          .parquet(s"${graft.sources.HybridTable.realtimeDir(root)}/batch_id=$id")
       }
-      .start()
+      if (promoteEvery > 0 && id > 0 && id % promoteEvery == 0) {
+        graft.sources.HybridTable.promoteRealtime(
+          spark, root, tsCol, granuleUs, gcRealtime = false)
+        () // None = lease held elsewhere: skip, next cadence tick retries
+      }
+    }
 
   /** Streaming INGEST dedup against a SELF-GROWING MinHash band index —
     * the q_dedup_incremental loop run continuously: each micro-batch
@@ -740,22 +653,18 @@ object Realtime {
         * job owning the cadence).
         */
       compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processDedupBatch(batch, id, idCol, textCol, indexPath,
-          acceptedPath, threshold, shingleSize, numBands)
-        if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
-          // skip-on-held-lease: a concurrent external compactor must not
-          // fail the streaming batch; the next cadence tick retries
-          tryCompactDedupIndex(batch.sparkSession, indexPath, acceptedPath,
-            idCol)
-          ()
-        }
+      : StreamingQuery =
+    foreachBatchSink(stream, checkpointDir) { (batch, id) =>
+      processDedupBatch(batch, id, idCol, textCol, indexPath,
+        acceptedPath, threshold, shingleSize, numBands)
+      if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
+        // skip-on-held-lease: a concurrent external compactor must not
+        // fail the streaming batch; the next cadence tick retries
+        tryCompactDedupIndex(batch.sparkSession, indexPath, acceptedPath,
+          idCol)
+        ()
       }
-      .start()
+    }
 
   private[graft] def processDedupBatch(
       batch: DataFrame, id: Long, idCol: String, textCol: String,
@@ -1012,7 +921,7 @@ object Realtime {
     */
   def annServe(
       queryStream: DataFrame, indexPath: String, k: Int, nProbe: Int = 2)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
     queryStream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         sink(graft.similarity.IvfAnn.knnIvfIndexed(
@@ -1032,7 +941,7 @@ object Realtime {
   def annServePq(
       queryStream: DataFrame, indexPath: String, corpus: DataFrame,
       k: Int, rerankFactor: Int = 8)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
     queryStream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         sink(graft.similarity.Pq.knnPqIndexed(

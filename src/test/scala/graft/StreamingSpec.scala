@@ -644,6 +644,73 @@ class StreamingSpec extends SparkSpec {
     assert(merged.getLong(1) === 1900L)
   }
 
+  test("hist, theta, KLL and tuple cube sinks fold two MemoryStream micro-batches into the batch build") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.functions.SketchFns._
+    import graft.operators.StarTree
+    val base = java.nio.file.Files.createTempDirectory("cube_sinks").toString
+    val dims = Seq("event_type")
+    // (event_type, user_id, cents): "view" only in batch 1 and "buy" only
+    // in batch 2, so the folds both carry over cells and merge shared ones
+    val batch1 = (1L to 40L).map(u => ("click", u, u * 7)) ++
+      (1L to 5L).map(u => ("view", u, 100L))
+    val batch2 = (31L to 80L).map(u => ("click", u, u * 3)) ++
+      (1L to 9L).map(u => ("buy", u, 250L))
+    val all = (batch1 ++ batch2).toDF("event_type", "user_id", "cents")
+    // k exceeds every cell's size, so every sketch here is exact
+    val k = 1024
+
+    val inputs = Seq.fill(4)(MemoryStream[(String, Long, Long)])
+    def rows(i: Int) = inputs(i).toDF().toDF("event_type", "user_id", "cents")
+    def dir(name: String) = s"$base/$name"
+    val queries = Seq(
+      Realtime.histCubeRefreshSink(rows(0), dir("hist_fact"), dir("hist"),
+        dims, "cents", dir("hist_ckpt")),
+      Realtime.thetaCubeRefreshSink(rows(1), dir("theta"),
+        dims, "user_id", k, dir("theta_ckpt")),
+      Realtime.kllCubeRefreshSink(
+        rows(2).withColumn("cents", col("cents").cast("double")),
+        dir("kll_fact"), dir("kll"), dims, "cents", k, dir("kll_ckpt")),
+      Realtime.tupleCubeRefreshSink(rows(3), dir("tuple_fact"), dir("tuple"),
+        dims, "user_id", "cents", k, dir("tuple_ckpt")))
+    try {
+      Seq(batch1, batch2).foreach { b =>
+        inputs.foreach(_.addData(b: _*))
+        queries.foreach(_.processAllAvailable())
+      }
+    } finally queries.foreach(_.stop())
+
+    // each folded cube, and the same cube built in one batch over all
+    // rows, read through what it serves per cell
+    def cells(cube: DataFrame, served: Column*): Map[String, Seq[Any]] =
+      cube.select(col("event_type") +: served: _*).collect()
+        .map(r => r.getString(0) -> r.toSeq.tail).toMap
+    def same(name: String, folded: DataFrame, batch: DataFrame, served: Column*) = {
+      val got = cells(folded, served: _*)
+      assert(got.keySet === Set("click", "view", "buy"), name)
+      assert(got === cells(batch, served: _*), s"$name cube diverged from the batch build")
+    }
+    same("hist", spark.read.parquet(dir("hist")),
+      StarTree.buildHistCube(all, dims, "cents"), col("hist_cents"))
+    same("theta", spark.read.parquet(dir("theta")),
+      all.groupBy("event_type").agg(thetaSketch(col("user_id"), k).as("sk")),
+      thetaEstimate(col("sk")))
+    val ranks = Seq(0.1, 0.5, 0.9, 1.0).map(p => kllQuantile(col("sk"), lit(p)))
+    same("kll", spark.read.parquet(dir("kll")),
+      all.groupBy("event_type")
+        .agg(kllSketch(col("cents").cast("double"), k).as("sk")),
+      ranks: _*)
+    same("tuple", spark.read.parquet(dir("tuple")),
+      all.groupBy("event_type")
+        .agg(tupleSketch(col("user_id"), col("cents"), k).as("sk")),
+      tupleDistinct(col("sk")), tupleSum(col("sk")))
+    assert(spark.read.parquet(dir("theta")).filter(col("event_type") === "click")
+      .select(thetaEstimate(col("sk"))).head().getLong(0) === 80L)
+  }
+
   test("streaming SCD2 maintenance matches the batch build at every prefix; replay is idempotent") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
