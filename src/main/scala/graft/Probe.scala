@@ -1,9 +1,13 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Scratch single-query profiler (not part of the driver contract).
   *
   * Usage: runMain graft.Probe <name>[,<name>...] [sfDir] [reps]
-  * Each query is timed `reps` times through the noop sink; the formatted
+  * Each query is timed `reps` times through the noop sink, each rep's line
+  * also giving the classes it compiled and their compile time; the formatted
   * physical plan is printed and — when SPARK_GRAFT_PLAN_OUT names a
   * directory — also written to <dir>/<name>.txt so plan evidence can be
   * committed (the plans/r15 before/after files).
@@ -43,9 +47,16 @@ object Probe {
       val fn = SparkEntry.queries(name)
       (1 to reps).foreach { i =>
         stageLog.clear()
+        // codegen counters are JVM-global; Probe runs one query at a time,
+        // so the deltas over a rep are that rep's compiles
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val cNs0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        println(f"PROBE $name rep$i ${(System.nanoTime() - t0) / 1e9}%.3f s")
+        val secs = (System.nanoTime() - t0) / 1e9
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+        val compileMs = (CodeGenerator.compileTime - cNs0) / 1e6
+        println(f"PROBE $name rep$i $secs%.3f s codegen $compiles%d classes $compileMs%.0f ms")
       }
       stageLog.forEach(l => println(s"$name $l"))
       val df = fn(spark, sfDir)

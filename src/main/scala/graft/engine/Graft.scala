@@ -8,6 +8,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Graft {
 
+  /** `spark.sql.codegen.cache.maxEntries` for every engine session and the
+    * test session; the measurement is at its use in `session`.
+    */
+  private[graft] val CodegenCacheEntries = 2000
+
   def session(
       master: String = "local[*]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors,
@@ -65,6 +70,23 @@ object Graft {
       // ExplicitGCInvokesConcurrent was A/B-measured WORSE (219 s) than
       // ParallelGC + this cadence on the same bench.
       .config("spark.cleaner.periodicGC.interval", "60s")
+      // Generated classes are cached by their source in one JVM-wide map
+      // that holds 100 entries by default, while interleaved query shapes
+      // need more: perfbench's `query` workload (17 shapes in seeded
+      // order) compiles 222-237 distinct classes on its cold pass and
+      // q_rfm_segments alone 137, so with 100 entries every warm pass
+      // recompiled 102-111 classes. At 2000 entries, same-day A/B on a
+      // 4-core host, medians of 10 alternating runs: warm compiles per
+      // pass → 0, `query` p50 204 → 131 ms, pass 3.92 → 2.51 s; `ingest`
+      // (8 runs) read round 1.54 → 0.90 s, its sinks no longer recompiling
+      // per micro-batch. A cached class holds about 65 KB of live heap
+      // (`query` +17 MB for its working set), so 2000 entries cap it near
+      // 130 MB. The full registry compiles ≈6,000 classes cold; Bench's
+      // back-to-back reps need only one query's set.
+      // A STATIC conf, read once when CodeGenerator's cache first
+      // initializes and shared by the whole JVM: the value applies only
+      // if a session carrying it is the first to generate code in the JVM.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // read parquet timestamps written without isAdjustedToUTC as plain
       // TIMESTAMP, not TIMESTAMP_NTZ — the session timezone is pinned to

@@ -23,6 +23,10 @@ object SparkSpec {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .config("spark.sql.extensions", "graft.engine.GraftExtensions")
+      // the engine's codegen cache size (static: this session generates
+      // the suite's first code, so the JVM-wide cache takes it)
+      .config("spark.sql.codegen.cache.maxEntries",
+        graft.engine.Graft.CodegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
