@@ -145,13 +145,10 @@ object ScaleBench {
     def timeAll(dir: String, reps: Int): Map[String, Double] = names.map { name =>
       val fn = resolve(name)
       val times = (1 to reps).flatMap { _ =>
-        // Cold per rep: the session-scoped pairs/cluster/IVF caches would
-        // otherwise make reps 2..N measure a cache lookup instead of the
-        // work whose scaling we're here to measure.
-        graft.queries.DedupQueries.invalidateCaches()
-        graft.similarity.IvfAnn.invalidateIndexCache()
-        graft.similarity.Pq.invalidateCache()
-        graft.queries.CorpusQueries.invalidateBpeCache()
+        // Cold per rep: memoized artifacts would otherwise make reps 2..N
+        // measure a memo lookup instead of the work whose scaling we're
+        // here to measure.
+        graft.engine.Artifacts.invalidateAll()
         val t0 = System.nanoTime()
         try { fn(spark, dir).write.format("noop").mode("overwrite").save()
               Some((System.nanoTime() - t0) / 1e9) }

@@ -24,22 +24,15 @@ object Tables {
     * production SegmentWriter layout (many files, sized row groups) scans
     * split natively and none of this arises.
     */
-  /** Schema cache: without an explicit schema every `spark.read.parquet`
-    * fires a footer-inference Spark job, so EVERY query build paid one
-    * job per table touched (the BuildLazinessSpec floor was 1, not 0).
-    * A production catalog knows its table schemas; here the first touch
-    * of a (dir, table) infers once and every later build passes the
-    * cached StructType — zero jobs to declare a plan. Keyed by full path
-    * so scaled corpora under /tmp coexist with the sf fixtures.
+  /** Reads through SegmentCatalog.readStableSchema's schema cache: without
+    * an explicit schema every `spark.read.parquet` fires a footer-inference
+    * Spark job, so EVERY query build paid one job per table touched (the
+    * BuildLazinessSpec floor was 1, not 0). A production catalog knows its
+    * table schemas; the first touch of a path infers once and every later
+    * build plans with zero jobs.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val sch = schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
-    spark.read.schema(sch).parquet(path)
-  }
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    graft.sources.SegmentCatalog.readStableSchema(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

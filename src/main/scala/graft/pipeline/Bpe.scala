@@ -71,8 +71,8 @@ object Bpe {
     * of any downstream use must not replay the merge chain); the CALLER
     * owns its lifecycle — either `unpersist()` it when done or memoize
     * one instance per (session, input) the way the registry wrappers do
-    * (CorpusQueries.bpeCache), so repeated invocations cannot leak one
-    * cached plan each.
+    * (CorpusQueries, through engine.Artifacts), so repeated invocations
+    * cannot leak one cached plan each.
     */
   def train(docs: DataFrame, textCol: String, k: Int)
       : (Seq[(Int, String, String, Long)], DataFrame) = {

@@ -1948,7 +1948,7 @@ object CorpusQueries {
     QueryDef(
       "q_bpe_train",
       (s, d) => {
-        val (merges, _) = bpeTrained(s, d)
+        val (merges, _) = bpeTrained(Tables.documents(s, d))
         import s.implicits._
         merges.toDF("step", "a", "b", "pair_cnt").orderBy("step")
       },
@@ -1966,7 +1966,7 @@ object CorpusQueries {
       "q_bpe_encode",
       (s, d) => {
         val docs = graft.engine.Tables.documents(s, d)
-        val (_, dict) = bpeTrained(s, d)
+        val (_, dict) = bpeTrained(docs)
         graft.pipeline.Bpe.encodeStats(docs, "text", "source", dict)
           .orderBy("source")
       },
@@ -1987,7 +1987,7 @@ object CorpusQueries {
     QueryDef(
       "q_bpe_train_exact",
       (s, d) => {
-        val (merges, _) = bpeTrainedExact(s, d)
+        val (merges, _) = bpeTrained(bpeExactDocs(s, d))
         import s.implicits._
         merges.toDF("step", "a", "b", "pair_cnt").orderBy("step")
       },
@@ -2010,8 +2010,9 @@ object CorpusQueries {
     QueryDef(
       "q_bpe_encode_exact",
       (s, d) => {
-        val (_, dict) = bpeTrainedExact(s, d)
-        graft.pipeline.Bpe.encodeStats(bpeExactDocs(s, d), "text", "source", dict)
+        val docs = bpeExactDocs(s, d)
+        val (_, dict) = bpeTrained(docs)
+        graft.pipeline.Bpe.encodeStats(docs, "text", "source", dict)
           .orderBy("source")
       },
       Some("""WITH c AS (SELECT source,
@@ -2107,19 +2108,15 @@ object CorpusQueries {
               FROM documents GROUP BY 1, 2 ORDER BY source, lang"""))
   )
 
-  /** One trained BPE artifact per (session, sfDir) — Bpe.train leaves its
-    * dictionary persisted by contract (see its scaladoc), so memoizing
-    * here both discharges the caller's unpersist obligation (bounded: one
-    * cached dict per dataset per session, not one per invocation) and
-    * lets q_bpe_train / q_bpe_encode / bench reps share a single training
-    * run, the tsSegCache pattern.
+  /** The trained BPE artifact is memoized: Bpe.train leaves its
+    * dictionary persisted by contract (see its scaladoc), so the memo both
+    * discharges the caller's unpersist obligation (one cached dict per
+    * corpus, not one per invocation) and lets q_bpe_train / q_bpe_encode /
+    * bench reps share a single training run.
     */
-  private val bpeCache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String),
-    (Seq[(Int, String, String, Long)], org.apache.spark.sql.DataFrame)]()
-  private def bpeTrained(s: org.apache.spark.sql.SparkSession, d: String) =
-    bpeCache.getOrElseUpdate((s, d),
-      graft.pipeline.Bpe.train(graft.engine.Tables.documents(s, d), "text", k = 8))
+  private def bpeTrained(docs: org.apache.spark.sql.DataFrame) =
+    graft.engine.Artifacts.memo("bpe", docs)(
+      graft.pipeline.Bpe.train(docs, "text", k = 8))(_._2.unpersist(blocking = true))
 
   /** The exact-regime twins' provable corpus: word "abcdefghi" weighted
     * (2 + doc_id % 3) per doc plus "jklmnop" once per doc — see
@@ -2131,16 +2128,4 @@ object CorpusQueries {
       col("source"),
       expr("concat(repeat(' abcdefghi', cast(2 + doc_id % 3 as int))," +
         " ' jklmnop')").as("text"))
-
-  private def bpeTrainedExact(s: org.apache.spark.sql.SparkSession, d: String) =
-    bpeCache.getOrElseUpdate((s, s"bpe_exact#$d"),
-      graft.pipeline.Bpe.train(bpeExactDocs(s, d), "text", k = 8))
-
-  /** Drop (and unpersist) memoized BPE artifacts — ScaleBench calls this
-    * per rep so scale slopes measure the training work, not a cache hit.
-    */
-  def invalidateBpeCache(): Unit = {
-    bpeCache.values.foreach { case (_, dict) => dict.unpersist() }
-    bpeCache.clear()
-  }
 }

@@ -934,26 +934,22 @@ object DateTimeQueries {
               FROM fin, hs ORDER BY h"""))
   )
 
-  // Session-scoped timestamp-index segment (the in-session analog of the
-  // index Pinot materializes next to its segments): events written ONCE
-  // per (session, sfDir) with the ts_day derived column, reused across
-  // reps/queries.
-  private val tsSegCache =
-    scala.collection.concurrent.TrieMap[(org.apache.spark.sql.SparkSession, String), String]()
-  private def tsSegment(s: org.apache.spark.sql.SparkSession, d: String): String =
-    tsSegCache.getOrElseUpdate((s, d), {
-      val dir = java.nio.file.Files.createTempDirectory("graft_tsidx_q").toString
+  // The timestamp-index segment is memoized (the in-session analog of
+  // the index Pinot materializes next to its segments): events written
+  // once with the ts_day derived column, reused across reps/queries.
+  private def tsSegment(s: org.apache.spark.sql.SparkSession, d: String): String = {
+    val ev = Tables.events(s, d).select("event_id", "user_id", "ts", "value")
+    graft.engine.Artifacts.segment("tsidx", ev) { dir =>
       // Pinot's timestamp-index layout in full: the derived day column is
       // also the PARTITION key (one segment dir per day, rows time-sorted
       // within), so a rewritten day-filter prunes whole directories and a
       // rewritten group-by reads the dir value — the 100-TB time-series
       // posture (time partition first; see SURVEY §4).
-      graft.sources.SegmentWriter.write(
-        Tables.events(s, d).select("event_id", "user_id", "ts", "value"), dir,
+      graft.sources.SegmentWriter.write(ev, dir,
         graft.sources.SegmentWriter.Config(
           derivedTimeCols = Seq(("ts", "day")),
           partitionCols = Seq(graft.sources.SegmentWriter.derivedName("ts", "day")),
           sortCols = Seq("ts")))
-      dir
-    })
+    }
+  }
 }

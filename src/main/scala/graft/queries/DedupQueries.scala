@@ -13,60 +13,32 @@ import graft.functions.TextShingles
   */
 object DedupQueries {
 
-  /** Session-scoped materializations of the near-dup pairs and the
-    * cluster map. Three operators (pairs, clusters, keep) share the same
-    * expensive upstream; recomputing it per query tripled the pipeline
-    * cost. In production these are materialized tables written alongside
-    * the corpus (like any Pinot index); within one session, persist()
-    * plays that role. Keyed by (session, dir, threshold, cap) so scale
-    * factors and parameter changes never alias.
+  /** The near-dup pairs, the cluster map and the embedding pairs are
+    * memoized artifacts: three operators (pairs, clusters, keep) share the
+    * same expensive upstream, and recomputing it per query tripled the
+    * pipeline cost. In production these are materialized tables written
+    * alongside the corpus (like any Pinot index).
     */
-  private val pairsCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Double, Long),
-      org.apache.spark.sql.DataFrame]
-  private val clustersCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Double, Long),
-      org.apache.spark.sql.DataFrame]
-
-  /** Drops and unpersists every session-scoped materialization — call
-    * after rewriting the parquet under a cached dir (the caches key on the
-    * path, not the file contents, so stale results would be served
-    * otherwise) or to reclaim executor storage. Mirrors
-    * StarTreeCatalog.register's relation-cache invalidation.
-    */
-  def invalidateCaches(): Unit = {
-    Seq(pairsCache, clustersCache).foreach { c =>
-      c.values.foreach(_.unpersist(blocking = false)); c.clear()
-    }
-    embPairsCache.values.foreach(_.unpersist(blocking = false))
-    embPairsCache.clear()
-  }
-
   private def jaccardPairsCached(
       s: org.apache.spark.sql.SparkSession, d: String, threshold: Double,
       maxShingleDf: Long = 4096L) =
-    pairsCache.getOrElseUpdate((s, d, threshold, maxShingleDf),
-      jaccardPairs(s, d, threshold, maxShingleDf).persist())
-
-  private val embPairsCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Double),
-      org.apache.spark.sql.DataFrame]
+    graft.engine.Artifacts.persisted("dedup_pairs", Tables.documents(s, d),
+      threshold, maxShingleDf)(jaccardPairs(s, d, threshold, maxShingleDf))
 
   private def embeddingPairsCached(
-      s: org.apache.spark.sql.SparkSession, d: String, threshold: Double) =
-    embPairsCache.getOrElseUpdate((s, d, threshold),
-      graft.dedup.EmbeddingLsh
-        .nearPairs(Tables.embeddings(s, d), "vec_id", "embedding", threshold)
-        .persist())
+      s: org.apache.spark.sql.SparkSession, d: String, threshold: Double) = {
+    val emb = Tables.embeddings(s, d)
+    graft.engine.Artifacts.persisted("dedup_emb_pairs", emb, threshold)(
+      graft.dedup.EmbeddingLsh.nearPairs(emb, "vec_id", "embedding", threshold))
+  }
 
   private def clustersCached(
       s: org.apache.spark.sql.SparkSession, d: String, threshold: Double,
       maxShingleDf: Long = 4096L) =
-    clustersCache.getOrElseUpdate((s, d, threshold, maxShingleDf),
-      graft.dedup.Clusters
-        .connectedComponents(
-          jaccardPairsCached(s, d, threshold, maxShingleDf).select("a_id", "b_id"))
-        .persist())
+    graft.engine.Artifacts.persisted("dedup_clusters", Tables.documents(s, d),
+      threshold, maxShingleDf)(
+      graft.dedup.Clusters.connectedComponents(
+        jaccardPairsCached(s, d, threshold, maxShingleDf).select("a_id", "b_id")))
 
   /** Exact word-3-gram Jaccard ≥ threshold pairs (inverted-index join).
     *

@@ -12,16 +12,6 @@ import graft.operators.{AsOfJoin, RangeJoin}
   */
 object JoinQueries {
 
-  /** q_idset_filter's bloom set, content-keyed by source dir + mtime:
-    * the documented ID_SET deployment (IdSet.scala) is build ONCE over
-    * the driving query, then reuse across every downstream scan — so the
-    * build action must not repeat per query BUILD (BuildLazinessSpec).
-    * Driver state is KBs per entry and the key space is the handful of
-    * sf dirs a session touches.
-    */
-  private val idSetCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-
   val defs: Seq[QueryDef] = Seq(
     QueryDef(
       "q_lookup_join",
@@ -406,10 +396,13 @@ object JoinQueries {
         val urgent = Tables.orders(s, d)
           .filter(col("o_orderpriority") === "1-URGENT")
           .select("o_orderkey")
-        val set = idSetCache.computeIfAbsent(
-          s"$d@${new java.io.File(s"$d/orders.parquet").lastModified()}",
-          _ => graft.operators.IdSet.build(
-            urgent, "o_orderkey", expectedItems = 100000L, fpp = 0.01))
+        // The bloom set is memoized: the documented ID_SET deployment
+        // (IdSet.scala) is built ONCE over the driving query, then reuse
+        // across every downstream scan — so the build action must not
+        // repeat per query BUILD (BuildLazinessSpec).
+        val set = graft.engine.Artifacts.memo("idset", urgent)(
+          graft.operators.IdSet.build(
+            urgent, "o_orderkey", expectedItems = 100000L, fpp = 0.01))(_ => ())
         Tables.lineitem(s, d)
           .filter(graft.operators.IdSet.in(col("l_orderkey"), set))
           .join(urgent, col("l_orderkey") === col("o_orderkey"), "left_semi")

@@ -171,18 +171,14 @@ object JsonQueries {
               FROM e WHERE k >= 50 GROUP BY 1 ORDER BY k"""))
   )
 
-  // Session-scoped json-index segment (the in-session analog of the
+  // The json-index segment is memoized (the in-session analog of the
   // flattened columns Pinot materializes next to its segments): events
-  // written ONCE per (session, sfDir) with the props__k derived column,
-  // reused across reps/queries.
-  private val jsonSegCache =
-    scala.collection.concurrent.TrieMap[(org.apache.spark.sql.SparkSession, String), String]()
-  private def jsonSegment(s: org.apache.spark.sql.SparkSession, d: String): String =
-    jsonSegCache.getOrElseUpdate((s, d), {
-      val dir = java.nio.file.Files.createTempDirectory("graft_jsonidx_q").toString
-      graft.sources.SegmentWriter.write(
-        Tables.events(s, d).select("event_id", "props", "value"), dir,
-        graft.sources.SegmentWriter.Config(derivedJsonCols = Seq(("props", "$.k"))))
-      dir
-    })
+  // written once with the props__k derived column, reused across
+  // reps/queries.
+  private def jsonSegment(s: org.apache.spark.sql.SparkSession, d: String): String = {
+    val ev = Tables.events(s, d).select("event_id", "props", "value")
+    graft.engine.Artifacts.segment("jsonidx", ev)(dir =>
+      graft.sources.SegmentWriter.write(ev, dir,
+        graft.sources.SegmentWriter.Config(derivedJsonCols = Seq(("props", "$.k")))))
+  }
 }

@@ -10,9 +10,6 @@ import graft.operators.StarTree
   */
 object StarTreeQueries {
 
-  private val histCubeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
   val defs: Seq[QueryDef] = Seq(
     // End-to-end MERGE-ROLLUP serving under the hash gate: events write
     // through the segment writer (week partitions), SegmentWriter
@@ -306,14 +303,12 @@ object StarTreeQueries {
       (s, d) => {
         val li = Tables.lineitem(s, d)
           .withColumn("cents", round(col("l_extendedprice") * 100).cast("long"))
-        // Session-scoped cube persistence — the deployment materializes
-        // the hist cube with the segments (like the sum/HLL cubes behind
-        // StarTreeCatalog); within one session, persist() plays that role
-        // so repeated queries measure SERVING, not re-building.
-        val cube = histCubeCache.getOrElseUpdate((s, d),
+        // The hist cube is memoized: the deployment materializes it with
+        // the segments (like the sum/HLL cubes behind StarTreeCatalog), so
+        // repeated queries measure SERVING, not re-building.
+        val cube = graft.engine.Artifacts.persisted("hist_cube", li)(
           StarTree.buildHistCube(
-            li, dims = Seq("l_returnflag", "l_linestatus"), metric = "cents")
-            .persist())
+            li, dims = Seq("l_returnflag", "l_linestatus"), metric = "cents"))
         StarTree.percentileRollup(cube, dims = Seq("l_returnflag"),
             metric = "cents", specs = Seq(("p50", 0.5), ("p95", 0.95)))
           .select(col("l_returnflag"),

@@ -287,41 +287,26 @@ object TextQueries {
               ORDER BY doc_id"""))
   )
 
-  // Session-scoped term-index segment (the in-session analog of the
-  // tokenized terms Pinot stores next to its segments): documents written
-  // ONCE per (session, sfDir) with the text__terms array, reused across
-  // reps/queries.
-  private val termSegCache =
-    scala.collection.concurrent.TrieMap[(org.apache.spark.sql.SparkSession, String), String]()
-  private def termSegment(s: org.apache.spark.sql.SparkSession, d: String): String =
-    termSegCache.getOrElseUpdate((s, d), {
-      val dir = java.nio.file.Files.createTempDirectory("graft_termidx_q").toString
-      graft.sources.SegmentWriter.write(
-        Tables.documents(s, d).select("doc_id", "text", "lang"), dir,
-        graft.sources.SegmentWriter.Config(derivedTermCols = Seq("text")))
-      dir
-    })
+  // The term-index segment and the two inverted indexes are memoized
+  // (the in-session analogs of the tokenized terms and text indexes Pinot
+  // materializes next to its segments): built once over documents,
+  // reused across reps/queries.
+  private def termSegment(s: org.apache.spark.sql.SparkSession, d: String): String = {
+    val docs = Tables.documents(s, d).select("doc_id", "text", "lang")
+    graft.engine.Artifacts.segment("termidx", docs)(dir =>
+      graft.sources.SegmentWriter.write(docs, dir,
+        graft.sources.SegmentWriter.Config(derivedTermCols = Seq("text"))))
+  }
 
-  private val textPosIdxCache =
-    scala.collection.concurrent.TrieMap[(org.apache.spark.sql.SparkSession, String), String]()
-  private def textPosIdx(s: org.apache.spark.sql.SparkSession, d: String): String =
-    textPosIdxCache.getOrElseUpdate((s, d), {
-      val dir = java.nio.file.Files.createTempDirectory("graft_textposidx_q").toString
-      graft.sources.TextIndex.materializeWithPositions(
-        Tables.documents(s, d), "doc_id", "text", dir)
-      dir
-    })
+  private def textPosIdx(s: org.apache.spark.sql.SparkSession, d: String): String = {
+    val docs = Tables.documents(s, d)
+    graft.engine.Artifacts.segment("textposidx", docs)(dir =>
+      graft.sources.TextIndex.materializeWithPositions(docs, "doc_id", "text", dir))
+  }
 
-  // Session-scoped inverted-index build (the in-session analog of the
-  // text index Pinot materializes next to its segments): built ONCE per
-  // (session, sfDir), reused across reps/queries.
-  private val textIdxCache =
-    scala.collection.concurrent.TrieMap[(org.apache.spark.sql.SparkSession, String), String]()
-  private def textIdx(s: org.apache.spark.sql.SparkSession, d: String): String =
-    textIdxCache.getOrElseUpdate((s, d), {
-      val dir = java.nio.file.Files.createTempDirectory("graft_textidx_q").toString
-      graft.sources.TextIndex.materialize(
-        Tables.documents(s, d), "doc_id", "text", dir)
-      dir
-    })
+  private def textIdx(s: org.apache.spark.sql.SparkSession, d: String): String = {
+    val docs = Tables.documents(s, d)
+    graft.engine.Artifacts.segment("textidx", docs)(dir =>
+      graft.sources.TextIndex.materialize(docs, "doc_id", "text", dir))
+  }
 }

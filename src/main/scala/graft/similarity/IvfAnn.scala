@@ -20,32 +20,16 @@ import graft.functions.VectorFns
   */
 object IvfAnn {
 
-  /** Session-scoped index cache: a real deployment materializes the cell
-    * assignment with the segments (like any Pinot index) instead of
-    * re-fitting KMeans per query; within one session, persist() plays that
-    * role. Keyed by the corpus plan's semantic hash + parameters.
+  /** The cell assignment is memoized: a real deployment materializes it
+    * with the segments (like any Pinot index) instead of re-fitting KMeans
+    * per query.
     */
-  private val indexCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int, Long), (DataFrame, DataFrame)]
-
-  /** Unpersist + drop every cached index — required after the underlying
-    * corpus files change (the cache keys on the plan, not file contents).
-    */
-  def invalidateIndexCache(): Unit = {
-    indexCache.values.foreach { case (a, c) =>
-      a.unpersist(blocking = false); c.unpersist(blocking = false)
-    }
-    indexCache.clear()
-  }
-
   def buildIndexCached(corpus: DataFrame, numCentroids: Int, seed: Long = 42L)
       : (DataFrame, DataFrame) =
-    indexCache.getOrElseUpdate(
-      (corpus.sparkSession,
-        corpus.queryExecution.analyzed.semanticHash().toString, numCentroids, seed), {
-        val (assigned, centroids) = buildIndex(corpus, numCentroids, seed)
-        (assigned.persist(), centroids.persist())
-      })
+    graft.engine.Artifacts.memo("ivf", corpus, numCentroids, seed) {
+      val (assigned, centroids) = buildIndex(corpus, numCentroids, seed)
+      (assigned.persist(), centroids.persist())
+    } { case (a, c) => a.unpersist(blocking = true); c.unpersist(blocking = true) }
 
   /** Materialize the index next to the corpus segments (the deployment
     * shape: KMeans fit + assignment happen ONCE at build, queries read

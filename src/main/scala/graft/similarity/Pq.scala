@@ -24,21 +24,6 @@ import graft.functions.VectorFns
   */
 object Pq {
 
-  /** Session-scoped codebook+codes cache — the registry query would
-    * otherwise re-fit per run (a real deployment materializes codes with
-    * the segments, like the IVF index). Keyed by corpus plan hash +
-    * parameters; invalidate after the underlying files change.
-    */
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int, Long), (DataFrame, DataFrame)]
-
-  def invalidateCache(): Unit = {
-    cache.values.foreach { case (cb, codes) =>
-      cb.unpersist(blocking = false); codes.unpersist(blocking = false)
-    }
-    cache.clear()
-  }
-
   /** Expression-level let-binding: evaluate `value` ONCE per row and make
     * it available to `body` as a lambda variable. A plain two-step select
     * is NOT enough for loop-invariant hoisting — CollapseProject inlines
@@ -191,16 +176,18 @@ object Pq {
       .select(col(idCol), codes.as("codes"))
   }
 
+  /** Codebooks and codes are memoized: the registry query would otherwise
+    * re-fit per run (a real deployment materializes codes with the
+    * segments, like the IVF index).
+    */
   private def buildCached(
       corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, kCodes: Int, seed: Long): (DataFrame, DataFrame) =
-    cache.getOrElseUpdate(
-      (corpus.sparkSession,
-        corpus.queryExecution.analyzed.semanticHash().toString, m, kCodes, seed), {
-        val cb = trainCodebooks(corpus, idCol, vecCol, m, kCodes, seed).persist()
-        val codes = encode(corpus, idCol, vecCol, cb, m).persist()
-        (cb, codes)
-      })
+    graft.engine.Artifacts.memo("pq", corpus, idCol, vecCol, m, kCodes, seed) {
+      val cb = trainCodebooks(corpus, idCol, vecCol, m, kCodes, seed).persist()
+      val codes = encode(corpus, idCol, vecCol, cb, m).persist()
+      (cb, codes)
+    } { case (cb, codes) => cb.unpersist(blocking = true); codes.unpersist(blocking = true) }
 
   /** ADC top-k: (q_id, cand_id, rank, sim). Self-matches are excluded,
     * ordering is (sim desc, cand_id asc) like every other knn* operator.

@@ -122,15 +122,14 @@ object SegmentCatalog {
       spark.read.option("basePath", dir).parquet(toRead: _*).filter(pred)
   }
 
-  /** Schema-cached parquet read for ARTIFACTS whose schema is fixed by
-    * construction (index/codebook/cube layouts: rows may append, the
-    * column set never changes). Without an explicit schema every
-    * `spark.read.parquet` runs a footer-inference Spark job, so a query
-    * builder that consults an index artifact paid one job per BUILD —
+  /** Schema-cached parquet read for paths whose schema is fixed (the
+    * engine's tables via Tables.apply, and index/codebook/cube layouts:
+    * rows may change, the column set never does). Without an explicit
+    * schema every `spark.read.parquet` runs a footer-inference Spark job,
+    * so a query builder paid one job per table or artifact per BUILD —
     * the BuildLazinessSpec class. First touch of a path infers once;
     * every later read passes the cached StructType and plans with zero
-    * jobs. Do NOT use for paths whose schema can change in place (none
-    * of the engine's artifact layouts do).
+    * jobs. Do NOT use for paths whose schema can change in place.
     */
   private val artifactSchemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()

@@ -146,12 +146,6 @@ object SegmentWriter {
     val before = countFiles(srcPath)
     val df = spark.read.parquet(srcPath)
     write(df, destPath, cfg)
-    // The session-scoped materializations (dedup pairs/cluster maps, IVF
-    // indexes) key on the PATH, not file contents — rewriting a dir they
-    // were built over would silently serve stale results. Compaction is
-    // exactly such a rewrite, so it invalidates them.
-    graft.queries.DedupQueries.invalidateCaches()
-    graft.similarity.IvfAnn.invalidateIndexCache()
     CompactionStats(before, countFiles(destPath), spark.read.parquet(destPath).count())
   }
 
@@ -200,10 +194,6 @@ object SegmentWriter {
         } else kept += 1
       }
     }
-    // Same staleness rule as compact: path-keyed session materializations
-    // over this dir must rebuild.
-    graft.queries.DedupQueries.invalidateCaches()
-    graft.similarity.IvfAnn.invalidateIndexCache()
     RetentionStats(dropped, kept, files)
   }
 
@@ -255,9 +245,6 @@ object SegmentWriter {
       .select(outCols.map(col): _*)
     rolled.unionByName(recent)
       .write.mode("overwrite").partitionBy(timePartitionCol).parquet(destPath)
-    // same staleness rule as compact: this is a rewrite
-    graft.queries.DedupQueries.invalidateCaches()
-    graft.similarity.IvfAnn.invalidateIndexCache()
     val out = spark.read.parquet(destPath)
     RollupStats(
       old.select(timePartitionCol).distinct().count(),

@@ -899,9 +899,6 @@ object Realtime {
     val n = compactRoot(indexPath, Seq("doc_id", "band_idx", "band_hash"),
       bandPartitioned = true)
     compactRoot(acceptedPath, Seq(idCol), bandPartitioned = false)
-    // path-keyed session materializations over these dirs must rebuild —
-    // same staleness rule as SegmentWriter.compact
-    graft.queries.DedupQueries.invalidateCaches()
     DedupCompactionStats(n, ibefore, countFiles(indexPath),
       abefore, countFiles(acceptedPath))
   }

@@ -574,4 +574,53 @@ class PlanLintSpec extends SparkSpec {
     assert(stale.isEmpty,
       s"SURVEY §2 bullets naming no registry query: ${stale.toSeq.sorted.mkString(", ")}")
   }
+
+  /** Concurrent maps in src/main that are NOT artifact memos. Anything
+    * memoized from table data goes through engine.Artifacts, which ties
+    * each entry to its input's files; a hand-rolled map keyed by path or
+    * plan serves stale answers after an in-place rewrite.
+    */
+  private val concurrentMapOk: Map[String, String] = Map(
+    "LshOps.planeCache" -> ("executor-side and a pure function of its " +
+      "parameters (seeded hyperplanes): no table data, nothing to go stale"),
+    "SegmentCatalog.artifactSchemaCache" -> ("the one schema cache, " +
+      "path-keyed for fixed-schema paths (tables and artifact layouts); " +
+      "it holds no data, and keeps query builds at zero jobs"),
+    "StarTreeCatalog.cubes" -> ("cube registry: writers register what " +
+      "they built; the rewrite checks each cube against the fact files"),
+    "StarTreeCatalog.relations" -> ("the registry's analyzed cube " +
+      "relations, dropped on every re-register"),
+    "DenormCatalog.views" -> ("view registry: writers register what " +
+      "they built; the rewrite checks each view's file signatures"),
+    "DenormCatalog.relations" -> ("the registry's analyzed view " +
+      "relations, dropped on every re-register"),
+    "FsLease.inProcess" -> ("the set of leases this JVM holds: " +
+      "coordination state, not a memo"))
+
+  test("no hand-rolled TrieMap/ConcurrentHashMap field outside engine.Artifacts") {
+    import scala.jdk.CollectionConverters._
+    val field = ("""(?:val|var)\s+(\w+)\s*(?::[^=]*)?=\s*(?:new\s+)?""" +
+      """[\w.]*(?:TrieMap|ConcurrentHashMap)\b""").r
+    // the top-level definition enclosing the field
+    val owner = ("""(?m)^(?:(?:private|final|sealed|abstract|case)(?:\[\w+\])?\s+)*""" +
+      """(?:object|class|trait)\s+(\w+)""").r
+    val found = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "Artifacts.scala")
+      .flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        field.findAllMatchIn(src).map { m =>
+          val o = owner.findAllMatchIn(src).takeWhile(_.start < m.start).toSeq.last
+          s"${o.group(1)}.${m.group(1)}"
+        }
+      }.toSet
+    val unlisted = found -- concurrentMapOk.keySet
+    val stale = concurrentMapOk.keySet -- found
+    assert(unlisted.isEmpty,
+      s"hand-rolled caches outside engine.Artifacts (memoize through " +
+        s"Artifacts.memo, or justify in concurrentMapOk): ${unlisted.toSeq.sorted.mkString(", ")}")
+    assert(stale.isEmpty,
+      s"concurrentMapOk names fields that no longer exist — remove them: " +
+        stale.toSeq.sorted.mkString(", "))
+  }
 }
