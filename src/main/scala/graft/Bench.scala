@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
+import graft.Harness.Query
+
 /** Benchmark main. Prints machine-readable results on stdout.
   *
   * Output contract (the driver keeps only a TAIL buffer of stdout, so the
@@ -17,28 +21,40 @@ package graft
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = Harness.sfDir
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
+    // SPARK_GRAFT_ONLY: a subset for targeted profiling runs; the driver
+    // never sets it, so the contract run times the full registry.
+    val selected = Harness.select(Harness.only)
     // Benchmark the ENGINE's recommended session configuration (AQE,
     // broadcast threshold, split sizes — graft.engine.Graft), not a bare
     // default session.
-    val spark = graft.engine.Graft.session(
-      master = s"local[$cpus]", shufflePartitions = cpus.toInt,
-      appName = "graft-bench", extraConf = Map("spark.ui.enabled" -> "false"))
+    val spark = Harness.session("graft-bench")
+    val (lines, failed) = run(spark, sfDir, selected, reps)
+    // Full per-query copy on disk for humans/tools, immune to tail clipping.
+    try {
+      val p = java.nio.file.Paths.get(sys.env.getOrElse(
+        "SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench_queries.json"))
+      java.nio.file.Files.write(p,
+        lines.head.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    } catch { case _: Throwable => () }
+    // The summary the driver parses: short, and LAST.
+    lines.foreach(println)
+    spark.stop()
+    // A broken query must bench as broken, not as "fast".
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Times `selected` on `spark` and returns Bench's two stdout lines
+    * (per-query, then the summary) and the queries that failed.
+    */
+  def run(spark: SparkSession, sfDir: String, selected: Map[String, Query], reps: Int)
+      : (Seq[String], Seq[String]) = {
     // Warm the JVM/codegen/IO paths once so the first timed query isn't
     // charged for session bring-up (Pinot servers are long-lived too).
     try spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
     catch { case _: Throwable => () }
     val failed = scala.collection.mutable.ArrayBuffer[String]()
-    // Optional comma-separated subset for targeted profiling runs; the
-    // driver never sets it, so the contract run times the full registry.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
     // Memoized-artifact warm-up with EXPLICIT cost attribution: several
     // families share session-cached artifacts (BPE's trained dictionary;
     // the dedup family's persisted jaccard/embedding pair streams and CC
@@ -55,32 +71,17 @@ object Bench {
       "q_dedup_ngram_jaccard" -> "jaccard_pairs",
       "q_dedup_embedding" -> "embedding_pairs",
       "q_dedup_clusters" -> "dedup_clusters")
+    // a failed warm-up must NOT emit a bogus small `warm` duration — that
+    // would silently shift the shared-artifact cost back onto whichever
+    // family query runs first (the r9 attribution bug this loop exists to
+    // fix); log and omit the entry, the timing loop will surface the
+    // failure on the query itself
     val warm: Map[String, Double] = warmTargets.flatMap { case (q, label) =>
-      selected.get(q).flatMap { fn =>
-        val t0 = System.nanoTime()
-        // a failed warm-up must NOT emit a bogus small `warm` duration —
-        // that would silently shift the shared-artifact cost back onto
-        // whichever family query runs first (the r9 attribution bug this
-        // loop exists to fix); log and omit the entry, the timing loop
-        // will surface the failure on the query itself
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              Some(label -> (System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] warm $label FAILED: ${e.getMessage}")
-          None }
-      }
+      selected.get(q).flatMap(fn =>
+        Harness.tryTime(spark, sfDir, fn, s"[bench] warm $label").map(label -> _))
     }.toMap
     val results = selected.map { case (name, fn) =>
-      // noop sink: full materialization of every output row/column (count()
-      // lets Spark prune the final project, under-timing wide results).
-      def once(): Option[Double] = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              Some((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          None }
-      }
+      def once(): Option[Double] = Harness.tryTime(spark, sfDir, fn, s"[bench] $name")
       val first = once()
       val times: Seq[Double] = first match {
         case None => Seq.empty
@@ -103,18 +104,8 @@ object Bench {
       .mkString("{", ",", "}")
     val perQueryLine =
       s"""{"metric":"per_query","queries":$qs,"warm":$warmJson,"sf":"$sfDir"}"""
-    // Full per-query copy on disk for humans/tools, immune to tail clipping.
-    try {
-      val p = java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench_queries.json"))
-      java.nio.file.Files.write(p,
-        perQueryLine.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
-    println(perQueryLine)
-    // The summary the driver parses: short, and LAST.
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"failed":${failed.size},"reps":$reps,"sf":"$sfDir"}""")
-    spark.stop()
-    // A broken query must bench as broken, not as "fast".
-    if (failed.nonEmpty) sys.exit(1)
+    val totalLine =
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"failed":${failed.size},"reps":$reps,"sf":"$sfDir"}"""
+    (Seq(perQueryLine, totalLine), failed.toSeq)
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 /** Scratch single-query profiler (not part of the driver contract).
   *
   * Usage: runMain graft.Probe <name>[,<name>...] [sfDir] [reps]
+  * (sfDir defaults to `SPARK_GRAFT_SF_DIR`; session from `Harness`).
   * Each query is timed `reps` times through the noop sink, each rep's line
   * also giving the classes it compiled and their compile time; the formatted
   * physical plan is printed and — when SPARK_GRAFT_PLAN_OUT names a
@@ -14,19 +15,15 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
+    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val queries = Harness.select(names)
+    val sfDir = if (args.length > 1) args(1) else Harness.sfDir
     val reps = if (args.length > 2) args(2).toInt else 3
     val planOut = sys.env.get("SPARK_GRAFT_PLAN_OUT")
-    // SPARK_GRAFT_CPUS: match Bench's session shape at any core count so
-    // 8-vs-32 scaling anomalies can be profiled stage by stage.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // SPARK_GRAFT_EXTRA_CONF: session-conf A/B hook so config hypotheses
-    // can be measured in isolation.
-    val spark = graft.engine.Graft.session(
-      master = s"local[$cpus]", shufflePartitions = cpus,
-      appName = "graft-probe",
-      extraConf = Map("spark.ui.enabled" -> "false") ++ graft.engine.Graft.envExtraConf())
+    // the Harness session: SPARK_GRAFT_CPUS matches Bench's session shape
+    // at any core count, SPARK_GRAFT_EXTRA_CONF measures a conf hypothesis
+    // in isolation
+    val spark = Harness.session("graft-probe")
     // SPARK_GRAFT_STAGES=1: per-stage wall/executor-time breakdown of the
     // LAST rep, from a listener (stage name ≈ the operator line).
     val stageLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -44,16 +41,14 @@ object Probe {
           }
         })
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
+      val fn = queries(name)
       (1 to reps).foreach { i =>
         stageLog.clear()
         // codegen counters are JVM-global; Probe runs one query at a time,
         // so the deltas over a rep are that rep's compiles
         val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val cNs0 = CodeGenerator.compileTime
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val secs = (System.nanoTime() - t0) / 1e9
+        val secs = Harness.time(spark, sfDir, fn)
         val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
         val compileMs = (CodeGenerator.compileTime - cNs0) / 1e6
         println(f"PROBE $name rep$i $secs%.3f s codegen $compiles%d classes $compileMs%.0f ms")

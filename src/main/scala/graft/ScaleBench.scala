@@ -39,7 +39,7 @@ object ScaleBench {
 
   private val QueryNames = Seq(
     "q_dedup_embedding", "q_dedup_ngram_jaccard", "q_dedup_clusters",
-    "q_ann_ivf", "q_curation", "dedup_embedding_t09",
+    "q_ann_ivf", "q_curation",
     // round-6 corpus family: the three shuffle-bearing new operators
     // (span-dedup window, LM-score explode+join, n-gram rollup);
     // q_mix_weighted is a pure scan predicate and has nothing to measure.
@@ -78,29 +78,20 @@ object ScaleBench {
     // its slope stays under standing measurement (7.8x at 100x in r14).
     "q_curation_exact")
 
-  /** The registry's q_dedup_embedding runs the fixture-calibrated
+  /** The shortlist's builders: the registry entries above plus
+    * `dedup_embedding_t09`. An unknown name is a wiring bug and throws:
+    * output-growth adjudication against a mismatched builder would quietly
+    * mis-grade a future shortlist entry.
+    *
+    * The registry's q_dedup_embedding runs the fixture-calibrated
     * threshold 0.4, where ~0.4% of RANDOM pairs qualify — so the true-pair
     * OUTPUT grows quadratically with corpus size by construction and no
     * exact pair-finder can look linear in input rows. The production
     * near-dup setting (cos ≥ 0.9, r=8/b=16 per EmbeddingLsh's analysis) is
     * the 100 TB-relevant slope, measured here alongside it.
     */
-  /** Resolve a shortlist name to its builder. The only name NOT in
-    * SparkEntry.queries is the calibrated-threshold custom entry
-    * `dedup_embedding_t09`; anything else unknown is a wiring bug and
-    * must throw, not silently fall back to measuring the wrong query
-    * (output-growth adjudication against a mismatched builder would
-    * quietly mis-grade a future shortlist entry).
-    */
-  private def resolve(name: String): (SparkSession, String) => DataFrame =
-    SparkEntry.queries.get(name) match {
-      case Some(fn) => fn
-      case None if name == "dedup_embedding_t09" =>
-        (s: SparkSession, d: String) => dedupEmbeddingT09(s, d)
-      case None => throw new IllegalArgumentException(
-        s"ScaleBench: unknown shortlist query '$name' - not in " +
-          "SparkEntry.queries and not the known custom entry")
-    }
+  private def shortlist: Map[String, Harness.Query] =
+    Harness.select(QueryNames) + ("dedup_embedding_t09" -> dedupEmbeddingT09 _)
 
   private def dedupEmbeddingT09(s: SparkSession, d: String): DataFrame =
     graft.dedup.EmbeddingLsh.nearPairs(
@@ -108,21 +99,22 @@ object ScaleBench {
       threshold = 0.9, r = 8, b = 16)
 
   def main(args: Array[String]): Unit = {
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val baseDir = Harness.sfDir
     val full = args.headOption.contains("full")
     val hybrid = args.headOption.contains("hybrid")
     val scaleArgs = if (full || hybrid) args.drop(1) else args
     val copies = scaleArgs.headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.engine.Graft.session(
-      master = s"local[$cpus]", shufflePartitions = cpus.toInt,
-      appName = "graft-scalebench", extraConf = Map("spark.ui.enabled" -> "false"))
+    // SPARK_GRAFT_ONLY restricts either mode to named queries (time
+    // stragglers added after a sweep without paying the whole registry
+    // again)
+    val queries = Harness.select(Harness.only,
+      if (full) SparkEntry.queries else shortlist)
+    val names = queries.keys.toSeq.sorted
+    val spark = Harness.session("graft-scalebench")
     if (hybrid) { hybridScale(spark, baseDir, copies); spark.stop(); return }
 
     // Builder-side reruns: SPARK_GRAFT_SCALE_REUSE points at a previous
-    // run's root (skips synthesis); SPARK_GRAFT_SCALE_ONLY=csv restricts
-    // full mode to named queries (time stragglers added after a sweep
-    // without paying the whole registry again).
+    // run's root (skips synthesis).
     val reuse = sys.env.get("SPARK_GRAFT_SCALE_REUSE")
     val root = reuse.getOrElse(s"/tmp/graft_scale_p${ProcessHandle.current().pid()}")
     val dir1 = s"$root/x1"
@@ -137,23 +129,13 @@ object ScaleBench {
       }
     }
 
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(',').toSet)
-    val names =
-      (if (full) SparkEntry.queries.keys.toSeq.sorted else QueryNames)
-        .filter(n => only.forall(_.contains(n)))
-
     def timeAll(dir: String, reps: Int): Map[String, Double] = names.map { name =>
-      val fn = resolve(name)
       val times = (1 to reps).flatMap { _ =>
         // Cold per rep: memoized artifacts would otherwise make reps 2..N
         // measure a memo lookup instead of the work whose scaling we're
         // here to measure.
         graft.engine.Artifacts.invalidateAll()
-        val t0 = System.nanoTime()
-        try { fn(spark, dir).write.format("noop").mode("overwrite").save()
-              Some((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable =>
-          System.err.println(s"[scale] $name FAILED at $dir: ${e.getMessage}"); None }
+        Harness.tryTime(spark, dir, queries(name), s"[scale] $name at $dir")
       }
       // min for <=2 reps: with per-rep cold caches the fastest rep is
       // still full work, and it excludes one-time MATERIALIZATION steps
@@ -193,7 +175,7 @@ object ScaleBench {
     }
     if (overLinear.nonEmpty) {
       val adj = overLinear.map { case (n, sl) =>
-        val fn = resolve(n)
+        val fn = queries(n)
         val rows1 = fn(spark, dir1).count()
         val rowsC = fn(spark, dirC).count()
         val og = rowsC.toDouble / math.max(rows1, 1L)
@@ -222,7 +204,7 @@ object ScaleBench {
       // answer is). Report rows at both scales and the per-output-row
       // time ratio alongside the flag.
       val adjudicated = suspect.map { case (n, sl) =>
-        val fn = SparkEntry.queries(n)
+        val fn = queries(n)
         val rows1 = fn(spark, dir1).count()
         val rowsC = fn(spark, dirC).count()
         val outGrowth = rowsC.toDouble / math.max(rows1, 1L)
@@ -243,7 +225,7 @@ object ScaleBench {
       val watchlist = Seq("q_dedup_embedding_prod", "q_dedup_edit",
         "q_range_join").filter(n => names.contains(n) && !t1(n).isNaN)
       val watched = watchlist.map { n =>
-        val fn = SparkEntry.queries(n)
+        val fn = queries(n)
         val rows1 = fn(spark, dir1).count()
         val rowsC = fn(spark, dirC).count()
         val outGrowth = rowsC.toDouble / math.max(rows1, 1L)
@@ -376,7 +358,7 @@ object ScaleBench {
     * ground truth must not grow quadratically); the relational tables
     * replicate with shifted keys.
     */
-  def synthesizeAll(
+  private def synthesizeAll(
       spark: SparkSession, baseDir: String, outDir: String, copies: Int): Unit = {
     synthesize(spark, baseDir, outDir, copies)
     Seq("region", "nation", "customer", "supplier", "part",

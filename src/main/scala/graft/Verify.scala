@@ -4,24 +4,19 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (Array(sfDir, outDir), only) = (args.take(2), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Same engine-recommended session the bench measures (Graft.session
-    // sets the nanos flag events.parquet needs and the graft extensions).
-    // SPARK_GRAFT_EXTRA_CONF overrides any session default — the
-    // invariance-harness hook (re-run the registry with AQE off, a
-    // different broadcast threshold, …) without touching the contract
-    val spark = graft.engine.Graft.session(
-      master = s"local[$cpus]", shufflePartitions = cpus.toInt,
-      appName = "graft-verify",
-      extraConf = Map("spark.ui.enabled" -> "false") ++ graft.engine.Graft.envExtraConf())
-    new java.io.File(outDir).mkdirs()
+    val Array(sfDir, outDir) = args.take(2)
     // Optional trailing args restrict the dump to named queries — a
     // builder-side shortcut for spot-checking one oracle; the driver
     // passes exactly two args and dumps everything.
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    val selected = Harness.select(args.drop(2).toSeq)
+    // Same engine session the bench measures (Graft.session sets the
+    // nanos flag events.parquet needs and the graft extensions);
+    // SPARK_GRAFT_EXTRA_CONF re-runs the registry under another regime
+    // (AQE off, a different broadcast threshold, …) without touching the
+    // contract.
+    val spark = Harness.session("graft-verify")
+    new java.io.File(outDir).mkdirs()
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -98,7 +98,7 @@ object ConnectedComponents {
   def componentsStar(edges: DataFrame): DataFrame =
     componentsStarWithRounds(edges)._1
 
-  def componentsStarWithRounds(edges: DataFrame): (DataFrame, Int) = {
+  private[graft] def componentsStarWithRounds(edges: DataFrame): (DataFrame, Int) = {
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()
       .localCheckpoint(eager = false)

@@ -160,17 +160,6 @@ object Percentiles {
       .select(grpCols.map(col) ++ specs.map(s => col(s._1)): _*)
   }
 
-  /** All percentiles over ONE column, returned long-form:
-    * (grpCols…, pos, q) with pos = index into `ps` — the multi-quantile
-    * PERCENTILE shape.
-    */
-  def exactMulti(df: DataFrame, grpCols: Seq[String], valCol: String, ps: Seq[Double]): DataFrame = {
-    val named = ps.zipWithIndex.map { case (p, i) => (s"__q_$i", valCol, p) }
-    val wide = exact(df, grpCols, named)
-    wide.select(grpCols.map(col) :+
-      posexplode(array(named.map(n => col(n._1)): _*)).as(Seq("pos", "q")): _*)
-  }
-
   /** WEIGHTED discrete percentiles: the smallest data value whose
     * cumulative WEIGHT reaches p·W (each row counts `weightCol` times —
     * the quantity-weighted median of a price, the token-weighted median

@@ -65,7 +65,7 @@ object TermIndex {
   }
 
   /** Total term count across the index (the n in the n/(k'+1) bound). */
-  def totalTerms(spark: SparkSession, path: String): Long = {
+  private[graft] def totalTerms(spark: SparkSession, path: String): Long = {
     spark.catalog.refreshByPath(path)
     spark.read.parquet(path).agg(sum("n_terms")).head().getLong(0)
   }

@@ -118,10 +118,11 @@ object Realtime {
       |{"name":"event_type","type":"string"},
       |{"name":"value","type":"double"}]}""".stripMargin
 
-  /** Test/producer-side encoder for the wire contract (raw binary Avro,
-    * no container framing — the per-record shape a Kafka topic carries).
+  /** Spec-side encoder for the wire contract (raw binary Avro, no
+    * container framing — the per-record shape a Kafka topic carries);
+    * producers serialize against `eventAvroSchema` themselves.
     */
-  def encodeEventAvro(e: Event): Array[Byte] = {
+  private[graft] def encodeEventAvro(e: Event): Array[Byte] = {
     val schema = new org.apache.avro.Schema.Parser().parse(eventAvroSchema)
     val rec = new org.apache.avro.generic.GenericData.Record(schema)
     rec.put("event_id", e.event_id)

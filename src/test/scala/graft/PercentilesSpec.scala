@@ -45,15 +45,6 @@ class PercentilesSpec extends SparkSpec {
     assert(out(1).getDouble(1) === 1.0 && out(1).getDouble(2) === 1.0)
   }
 
-  test("exactMulti emits one (pos, q) row per requested percentile") {
-    import spark.implicits._
-    val df = (1 to 101).map(i => ("g", i.toDouble)).toDF("g", "v")
-    val out = Percentiles.exactMulti(df, Seq("g"), "v", Seq(0.0, 0.25, 1.0))
-      .orderBy("pos").collect()
-    assert(out.map(_.getInt(1)).toSeq === Seq(0, 1, 2))
-    assert(out.map(_.getDouble(2)).toSeq === Seq(1.0, 26.0, 101.0))
-  }
-
   test("discrete picks actual data values at the ceil-rank, incl. p=0 and p=1") {
     import spark.implicits._
     // 4 values with duplicates: cumulative shares 0.25/0.75/1.0

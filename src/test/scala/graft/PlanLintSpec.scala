@@ -623,4 +623,23 @@ class PlanLintSpec extends SparkSpec {
       s"concurrentMapOk names fields that no longer exist — remove them: " +
         stale.toSeq.sorted.mkString(", "))
   }
+
+  test("only graft.Harness builds a main's session and reads its bootstrap env") {
+    // Harness is the one place the mains get their session, data dir, core
+    // count and conf overrides; a second copy drifts (the mains once had
+    // two CPU defaults, and only two of six read SPARK_GRAFT_EXTRA_CONF)
+    import scala.jdk.CollectionConverters._
+    val bootstrap = "Graft\\.session\\(|\"SPARK_GRAFT_(?:CPUS|SF_DIR|EXTRA_CONF)\"".r
+    val found = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "Harness.scala")
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if bootstrap.findFirstIn(line).nonEmpty => s"$f:${i + 1}"
+        }
+      }.toSeq.sorted
+    assert(found.isEmpty,
+      s"session or env bootstrap outside graft.Harness (use Harness.session, " +
+        s"Harness.sfDir, Harness.cpus): ${found.mkString(", ")}")
+  }
 }

@@ -10,25 +10,13 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match Graft.session: NTZ-written parquet timestamps read as plain
-      // TIMESTAMP under the UTC session timezone (see Graft.scala)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      // the engine's codegen cache size (static: this session generates
-      // the suite's first code, so the JVM-wide cache takes it)
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.engine.Graft.CodegenCacheEntries.toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The engine's own session (every setting that ships) at local[4],
+    * with a throwaway warehouse dir and no UI.
+    */
+  lazy val session: SparkSession = graft.engine.Graft.session(
+    master = "local[4]", shufflePartitions = 4, appName = "graft-spec",
+    extraConf = Map(
+      "spark.ui.enabled" -> "false",
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft_wh").toString))
 }
