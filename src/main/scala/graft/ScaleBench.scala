@@ -137,11 +137,10 @@ object ScaleBench {
         graft.engine.Artifacts.invalidateAll()
         Harness.tryTime(spark, dir, queries(name), s"[scale] $name at $dir")
       }
-      // min for <=2 reps: with per-rep cold caches the fastest rep is
-      // still full work, and it excludes one-time MATERIALIZATION steps
-      // (q_startree_hll's cube build registers on rep 1 and serves from
-      // the cube after — the 1x median-of-3 already measures serving, so
-      // the Cx side must too or the build masquerades as a 12x slope).
+      // min for <=2 reps: every rep is cold, so the fastest is still full
+      // work. Cold includes the registry fixtures: invalidateAll releases
+      // their memo entries too, so q_startree_hll copies its fact and
+      // builds its cube on every rep, at 1x and Cx alike.
       name -> (if (times.isEmpty) Double.NaN
                else if (times.size <= 2) times.min
                else times.sorted.apply(times.size / 2))

@@ -69,14 +69,32 @@ object Artifacts {
     memo(kind, input, params: _*)(build.persist())(_.unpersist(blocking = true))
 
   /** A segment directory written by `write` into a fresh temp dir; released
-    * by deleting the directory.
+    * by `unregister(dir)` (dropping whatever catalog entry `write` made),
+    * then deleting the directory. Directories still live when the JVM
+    * exits are deleted then.
     */
-  def segment(kind: String, input: DataFrame)(write: String => Unit): String =
+  def segment(kind: String, input: DataFrame, unregister: String => Unit = _ => ())(
+      write: String => Unit): String =
     memo(kind, input) {
       val dir = java.nio.file.Files.createTempDirectory(s"graft_${kind}_q").toString
+      liveDirs.add(dir)
       write(dir)
       dir
-    }(dir => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir)))
+    } { dir =>
+      unregister(dir)
+      liveDirs.remove(dir)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+
+  /** Directories to delete at JVM exit: the live segments, plus scratch
+    * layouts a builder rewrites on every build (`deleteAtExit`). The hook
+    * touches only the filesystem: Spark may already be stopping.
+    */
+  private val liveDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  sys.addShutdownHook(liveDirs.forEach(d =>
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))))
+
+  private[graft] def deleteAtExit(dir: String): Unit = liveDirs.add(dir)
 
   private def drop(slot: Slot): Unit = {
     val old = slot.entry

@@ -160,32 +160,4 @@ object ConnectedComponents {
       .select(col("node"), coalesce(col("comp"), col("node")).as("comp")),
       rounds)
   }
-
-  /** Breadth-first hop distance from `seed` (a 1-row DataFrame with a
-    * `node` column), bounded at `maxHops` rounds: returns (node, hops)
-    * for exactly the nodes whose true distance is <= maxHops, with the
-    * exact distance. Each round relaxes the frontier through one
-    * equi-join + min-aggregation (unit edge weights make min-relaxation
-    * BFS); after k rounds every node at true distance <= k carries it.
-    */
-  def bfsHops(edges: DataFrame, seed: DataFrame, maxHops: Int): DataFrame = {
-    require(maxHops >= 1, "maxHops must be >= 1")
-    val ue = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(eager = false)
-    var dist = seed.select(col("node"), lit(0).as("hops"))
-    (1 to maxHops).foreach { _ =>
-      val relaxed = ue.join(dist, col("src") === col("node"))
-        .groupBy(col("dst").as("n2"))
-        .agg((min("hops") + 1).as("nh"))
-      dist = dist.as("D")
-        .join(relaxed, col("D.node") === col("n2"), "full_outer")
-        .select(coalesce(col("D.node"), col("n2")).as("node"),
-          least(coalesce(col("D.hops"), col("nh")),
-            coalesce(col("nh"), col("D.hops"))).as("hops"))
-        .localCheckpoint(eager = false)
-    }
-    dist
-  }
 }

@@ -4,9 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Single-source WEIGHTED shortest paths by bounded Bellman–Ford
-  * relaxation — bfsHops' weighted sibling (unit edges make the two
-  * coincide; integer weights keep the distances float-free and the
-  * min-relaxation deterministic under any partitioning). After R rounds
+  * relaxation — over unit edges it is breadth-first hop distance
+  * (q_bfs_hops); integer weights keep the distances float-free and the
+  * min-relaxation deterministic under any partitioning. After R rounds
   * the distances are exact for every node whose shortest path uses ≤ R
   * edges — the q_bfs_hops bounded-frontier convention, so the DuckDB
   * oracle unrolls the same rounds as CTE levels.

@@ -110,7 +110,15 @@ object DenormCatalog {
     }
   }
 
-  def clear(): Unit = { views.clear(); relations.clear() }
+  /** Drop every view registered over `factPath`: its joins run again. */
+  def unregister(factPath: String): Unit = {
+    val f = normalize(factPath)
+    views.asScala.foreach { case (k, v) =>
+      if (v.factPaths(f) && views.remove(k, v)) relations.remove(v.viewPath)
+    }
+  }
+
+  private[graft] def size: Int = views.size
 
   /** Analyzed view relation, resolved once per registration (no parquet
     * footer work inside the optimizer); fresh exprIds per use.

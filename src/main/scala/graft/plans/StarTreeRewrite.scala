@@ -56,7 +56,13 @@ object StarTreeCatalog {
         distinctMetrics.toSet, quantileMetrics.toSet))
   }
 
-  def clear(): Unit = { cubes.clear(); relations.clear() }
+  /** Drop the cube registered for `factPath`: its group-bys scan the fact
+    * again.
+    */
+  def unregister(factPath: String): Unit =
+    Option(cubes.remove(normalize(factPath))).foreach(c => relations.remove(c.cubePath))
+
+  private[graft] def size: Int = cubes.size
 
   /** Analyzed cube relation, resolved ONCE per registration (parquet
     * footer/schema work must not run inside the optimizer on every

@@ -1556,8 +1556,9 @@ object CorpusQueries {
         val seed = edges
           .select(least(col("src"), col("dst")).as("n"))
           .agg(min("n").as("node"))
-        graft.graph.ConnectedComponents.bfsHops(edges, seed, maxHops = 6)
-          .select(col("node").as("section"), col("hops"))
+        // unit weights make the shortest-path relaxation breadth-first
+        graft.graph.ShortestPaths.sssp(edges.withColumn("w", lit(1L)), seed, maxRounds = 6)
+          .select(col("node").as("section"), col("dist").cast("int").as("hops"))
           .orderBy("section")
       },
       Some("""WITH RECURSIVE
@@ -2028,9 +2029,10 @@ object CorpusQueries {
 
     // AVRO batch ingestion (Introduction.md:46 — the reference's batch
     // formats include Avro) through a written-then-read container-file
-    // fixture: the documents table is exported ONCE per sf-dir to two
-    // .avro container files (driver-side writeFile — a fixture/export
-    // path, test-scale by design), then read back DISTRIBUTED by
+    // fixture: the documents table is exported ONCE (an Artifacts segment
+    // memoized on the table) to two .avro container files (driver-side
+    // writeFile — a fixture/export path, test-scale by design), then read
+    // back DISTRIBUTED by
     // AvroIngest.read (schema from the first file's header, one decode
     // task per file — production Avro arrives from outside at that
     // shape) and aggregated; hash-verifying the rollup against the
@@ -2041,61 +2043,18 @@ object CorpusQueries {
       "q_avro_ingest",
       (s, d) => {
         import graft.sources.AvroIngest
-        // fixture cache keyed on SOURCE CONTENT (mtime+size of the
-        // parquet), not just the path: a regenerated-in-place documents
-        // table must invalidate the avro export, or the query would read
-        // stale avro while the oracle reads fresh parquet. Written to a
-        // unique temp dir and renamed in, so concurrent suites race to an
-        // atomic winner instead of interleaving partial writes.
-        val src = new java.io.File(d, "documents.parquet")
-        val tag = d.replaceAll("[^a-zA-Z0-9]", "_") +
-          s"_${src.lastModified()}_${src.length()}"
-        val dir = new java.io.File(s"/tmp/graft_avro_$tag")
-        // prune superseded cache generations for THIS fixture path (same
-        // dir prefix, different mtime/size key) so regenerated fixtures
-        // don't accumulate unbounded /tmp state across rounds
-        val prefix = "graft_avro_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-        Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith(prefix) && f.getName != dir.getName &&
-            !f.getName.contains("_tmp_"))
-          .foreach { stale =>
-            Option(stale.listFiles()).getOrElse(Array.empty).foreach(_.delete())
-            stale.delete()
-          }
-        if (!new java.io.File(dir, "part0.avro").exists()) {
+        val docs = Tables.documents(s, d)
+          .select("doc_id", "text", "lang", "source", "n_chars")
+        val dir = graft.engine.Artifacts.segment("avro", docs) { dir =>
           val schema = org.apache.avro.SchemaBuilder.record("doc").fields()
             .optionalLong("doc_id").optionalString("text")
             .optionalString("lang").optionalString("source")
             .optionalLong("n_chars").endRecord()
-          val rows = Tables.documents(s, d)
-            .select("doc_id", "text", "lang", "source", "n_chars")
-            .collect().toSeq
-          val (even, odd) = rows.partition(r => r.getLong(0) % 2 == 0)
-          val tmp = new java.io.File(
-            s"/tmp/graft_avro_${tag}_tmp_${java.util.UUID.randomUUID()}")
-          tmp.mkdirs()
-          AvroIngest.writeFile(even, schema, new java.io.File(tmp, "part0.avro"))
-          AvroIngest.writeFile(odd, schema, new java.io.File(tmp, "part1.avro"))
-          if (!tmp.renameTo(dir)) {
-            // "lost the race" is only TRUE if a complete destination
-            // actually exists — verify before discarding the fresh tmp
-            // files; any other rename failure (permissions, partial
-            // state) must surface here, not as an obscure read error on
-            // a nonexistent cache dir two lines later.
-            if (new java.io.File(dir, "part0.avro").exists() &&
-                new java.io.File(dir, "part1.avro").exists()) {
-              new java.io.File(tmp, "part0.avro").delete()
-              new java.io.File(tmp, "part1.avro").delete()
-              tmp.delete()
-            } else {
-              throw new java.io.IOException(
-                s"q_avro_ingest: rename $tmp -> $dir failed and the " +
-                  "destination is absent or incomplete — not a benign " +
-                  "concurrent-writer race; investigate the tmp dir state")
-            }
-          }
+          val (even, odd) = docs.collect().toSeq.partition(_.getLong(0) % 2 == 0)
+          AvroIngest.writeFile(even, schema, new java.io.File(dir, "part0.avro"))
+          AvroIngest.writeFile(odd, schema, new java.io.File(dir, "part1.avro"))
         }
-        AvroIngest.read(s, dir.toString)
+        AvroIngest.read(s, dir)
           .groupBy("source", "lang")
           .agg(count(lit(1)).as("n_docs"),
             sum("n_chars").as("total_chars"),

@@ -220,8 +220,8 @@ object DateTimeQueries {
     // ONE day directory out of the whole corpus — Pinot's timestamp
     // index + time-partitioned segment behavior end to end. Rule-off
     // parity (same rows via per-row truncation over the full scan) is
-    // pinned by TimestampIndexSpec; the A/B serving win is measured by
-    // RewriteBench.
+    // pinned by TimestampIndexSpec; the A/B serving win is recorded in
+    // REWRITE_WINS_r*.json.
     QueryDef(
       "q_timestamp_filter",
       (s, d) =>

@@ -781,27 +781,19 @@ object DedupQueries {
     // construction) plus an exact trigram-Jaccard verify, so the result
     // equals the all-(batch×corpus)-pairs Jaccard filter and is
     // DuckDB-hash-verifiable. Fixture split: doc_id % 5 == 0 is the
-    // incoming batch, the rest is the standing corpus. The index build is
-    // a one-time content-keyed artifact (done-marker cached, keyed by sf
-    // dir + pid like the star-tree fixtures) — steady-state builds fire
-    // zero jobs. DedupSpec covers the production 8-band posture of
-    // candidatePairsAgainst; this row hash-verifies the semantics.
+    // incoming batch, the rest is the standing corpus. The band index is
+    // an Artifacts segment memoized on the corpus it indexes — steady-state
+    // builds fire zero jobs for it. DedupSpec covers the production 8-band
+    // posture of candidatePairsAgainst; this row hash-verifies the semantics.
     QueryDef(
       "q_dedup_incremental",
       (s, d) => {
-        val base = "/tmp/graft_bandidx_" +
-          Integer.toHexString(d.hashCode & 0x7fffffff) +
-          "_p" + ProcessHandle.current().pid()
-        val idxPath = s"$base/bands"
         val docs = Tables.documents(s, d)
         val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
         val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-        val done = new java.io.File(s"$base/_graft_bandidx_done")
-        if (!done.exists()) {
-          MinHashLsh.materializeBands(corpus, "doc_id", "text", idxPath,
-            numBands = MinHashLsh.NumHashes)
-          done.createNewFile()
-        }
+        val idxPath = graft.engine.Artifacts.segment("bandidx", corpus)(dir =>
+          MinHashLsh.materializeBands(corpus, "doc_id", "text", s"$dir/bands",
+            numBands = MinHashLsh.NumHashes)) + "/bands"
         val idx = graft.sources.SegmentCatalog.readStableSchema(s, idxPath)
         // verify sides shingle only their own split (new_id ∈ batch,
         // corpus_id ∈ corpus by construction) — one corpus-worth of

@@ -562,39 +562,37 @@ object JoinQueries {
     // DENORMALIZED-VIEW join elimination end-to-end (Pinot's ingest-time
     // lookup join: dims resolved INTO fact segments so queries never pay
     // the join — plans/DenormRewrite.scala). The builder materializes the
-    // orders⋈customer view ONCE (content-keyed /tmp copies + catalog
-    // registration, the q_startree_hll lifecycle) and then declares the
-    // RAW join — DenormRewriteRule serves it from the view, so the plan
-    // the driver hashes has NO Join node, and the oracle (DuckDB's real
-    // join) proves the elimination answer-exact. RewriteBench measures
-    // the serving win A/B under spark.graft.denorm.enabled.
+    // orders⋈customer view ONCE (an Artifacts segment holding the fact,
+    // dim and view copies, memoized on both inputs and registered with
+    // DenormCatalog) and then declares the RAW join — DenormRewriteRule
+    // serves it from the view, so the hashed plan has NO Join node, and
+    // the oracle (DuckDB's real join) proves the elimination answer-exact.
+    // REWRITE_WINS_r*.json record the serving win A/B under
+    // spark.graft.denorm.enabled.
     QueryDef(
       "q_denorm_join",
       (s, d) => {
         import graft.plans.DenormCatalog
         import graft.sources.{DenormView, SegmentCatalog}
-        val base = "/tmp/graft_denorm_" +
-          Integer.toHexString(d.hashCode & 0x7fffffff) +
-          "_p" + ProcessHandle.current().pid()
-        val factPath = s"$base/fact"
-        val dimPath = s"$base/dim"
-        val viewPath = s"$base/view"
-        if (DenormCatalog.find(Set(factPath), Set(dimPath), "cust_key").isEmpty) {
-          Tables.orders(s, d)
-            .select(col("o_orderkey"), col("o_custkey").as("cust_key"),
-              col("o_totalprice"), col("o_orderpriority"))
-            .write.mode("overwrite").parquet(factPath)
-          Tables.customer(s, d)
-            .select(col("c_custkey").as("cust_key"), col("c_mktsegment"),
-              col("c_acctbal"))
-            .write.mode("overwrite").parquet(dimPath)
+        val orders = Tables.orders(s, d)
+          .select(col("o_orderkey"), col("o_custkey").as("cust_key"),
+            col("o_totalprice"), col("o_orderpriority"))
+        val customer = Tables.customer(s, d)
+          .select(col("c_custkey").as("cust_key"), col("c_mktsegment"),
+            col("c_acctbal"))
+        // the memo key reads both inputs; it is analyzed, never run
+        val base = graft.engine.Artifacts.segment("denorm",
+          orders.join(customer, "cust_key"),
+          dir => DenormCatalog.unregister(s"$dir/fact")) { dir =>
+          orders.write.parquet(s"$dir/fact")
+          customer.write.parquet(s"$dir/dim")
           DenormView.materialize(
-            SegmentCatalog.readStableSchema(s, factPath),
-            SegmentCatalog.readStableSchema(s, dimPath), "cust_key", viewPath)
-          DenormCatalog.register(factPath, dimPath, "cust_key", viewPath)
+            SegmentCatalog.readStableSchema(s, s"$dir/fact"),
+            SegmentCatalog.readStableSchema(s, s"$dir/dim"), "cust_key", s"$dir/view")
+          DenormCatalog.register(s"$dir/fact", s"$dir/dim", "cust_key", s"$dir/view")
         }
-        SegmentCatalog.readStableSchema(s, factPath)
-          .join(SegmentCatalog.readStableSchema(s, dimPath), "cust_key")
+        SegmentCatalog.readStableSchema(s, s"$base/fact")
+          .join(SegmentCatalog.readStableSchema(s, s"$base/dim"), "cust_key")
           .filter(col("o_orderpriority") =!= "3-MEDIUM")
           .groupBy("c_mktsegment")
           .agg(

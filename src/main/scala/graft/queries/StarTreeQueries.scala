@@ -25,35 +25,27 @@ object StarTreeQueries {
       "q_rollup_agg",
       (s, d) => {
         import graft.sources.SegmentWriter
-        // mtime in the tag = content key: a regenerated fixture gets a
-        // fresh lifecycle dir instead of a stale done-marker hit
-        val tag = d.replaceAll("[^a-zA-Z0-9]", "_") +
-          "_" + new java.io.File(s"$d/events.parquet").lastModified()
-        val src = s"/tmp/graft_rollup_src_$tag"
-        val dest = s"/tmp/graft_rollup_dest_$tag"
         val partCol = SegmentWriter.derivedName("ts", "week")
+        val ev = Tables.events(s, d)
+          .select(col("event_type"), col("ts"),
+            round(col("value") * 100).cast("long").as("vc"))
         // The write→rollup LIFECYCLE is fixture construction (the thing
         // under test is that the rolled layout answers the day query
-        // exactly); it runs once per sf dir and is done-marker cached —
-        // rebuilding a segment lifecycle on every query BUILD would be
-        // 17 Spark jobs of pure re-setup (the BuildLazinessSpec class).
-        val doneMarker = new java.io.File(s"$dest/_graft_lifecycle_done")
-        if (!doneMarker.exists()) {
-          val ev = Tables.events(s, d)
-            .select(col("event_type"), col("ts"),
-              round(col("value") * 100).cast("long").as("vc"))
-          SegmentWriter.write(ev, src, SegmentWriter.Config(
+        // exactly), memoized on the events it copies — rebuilding a
+        // segment lifecycle on every query BUILD would be 17 Spark jobs
+        // of pure re-setup (the BuildLazinessSpec class).
+        val dest = graft.engine.Artifacts.segment("rollup", ev) { dir =>
+          SegmentWriter.write(ev, s"$dir/src", SegmentWriter.Config(
             partitionCols = Seq(partCol),
             derivedTimeCols = Seq(("ts", "week"))))
-          val weeks = s.read.parquet(src)
+          val weeks = s.read.parquet(s"$dir/src")
             .selectExpr(s"CAST(`$partCol` AS STRING)").distinct()
             .collect().map(_.getString(0)).sorted
           SegmentWriter.mergeRollup(
-            s, src, dest, partCol, cutoff = weeks.last,
+            s, s"$dir/src", s"$dir/dest", partCol, cutoff = weeks.last,
             timeCol = "ts", granularity = "day",
             dims = Seq("event_type"), sumMetrics = Seq("vc"))
-          doneMarker.createNewFile()
-        }
+        } + "/dest"
         graft.sources.SegmentCatalog.readStableSchema(s, dest)
           .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
           .agg((sum("vc") / 100.0).as("sum_v"), sum("rollup_count").as("n"))
@@ -101,29 +93,15 @@ object StarTreeQueries {
     // approx_count_distinct group-by onto a union of cell sketches — the
     // fact table is never rescanned. Approximate by design (no SQL
     // oracle); StarTreeSpec bounds the estimate within 5% of exact and
-    // asserts the plan scans the cube. The fact is a /tmp copy so the
+    // asserts the plan scans the cube. The fact is a segment copy so the
     // registration never captures other registry queries' lineitem scans.
     QueryDef(
       "q_startree_hll",
       (s, d) => {
-        // Keyed by sfDir AND pid: two JVMs running the registry
-        // concurrently (bench + correctness) must not race on one
-        // fact/cube directory mid-overwrite.
-        val base = "/tmp/graft_startree_hll_" +
-          Integer.toHexString(d.hashCode & 0x7fffffff) +
-          "_p" + ProcessHandle.current().pid()
-        val factPath = s"$base/fact"
-        if (graft.plans.StarTreeCatalog.find(Set(factPath)).isEmpty) {
-          Tables.lineitem(s, d)
-            .select("l_returnflag", "l_linestatus", "l_partkey", "l_quantity")
-            .write.mode("overwrite").parquet(factPath)
-          StarTree.materializeAndRegister(
-            graft.sources.SegmentCatalog.readStableSchema(s, factPath), factPath,
-            dims = Seq("l_returnflag", "l_linestatus"),
-            sumMetrics = Seq("l_quantity"), cubePath = s"$base/cube",
-            distinctMetrics = Seq("l_partkey"))
-        }
-        graft.sources.SegmentCatalog.readStableSchema(s, factPath)
+        val fact = starTreeFact("startree_hll", Tables.lineitem(s, d)
+          .select("l_returnflag", "l_linestatus", "l_partkey", "l_quantity"),
+          distinctMetrics = Seq("l_partkey"))
+        graft.sources.SegmentCatalog.readStableSchema(s, fact)
           .groupBy("l_returnflag")
           .agg(
             approx_count_distinct(col("l_partkey")).as("nd_parts"),
@@ -144,21 +122,10 @@ object StarTreeQueries {
     QueryDef(
       "q_startree_kll",
       (s, d) => {
-        val base = "/tmp/graft_startree_kll_" +
-          Integer.toHexString(d.hashCode & 0x7fffffff) +
-          "_p" + ProcessHandle.current().pid()
-        val factPath = s"$base/fact"
-        if (graft.plans.StarTreeCatalog.find(Set(factPath)).isEmpty) {
-          Tables.lineitem(s, d)
-            .select("l_returnflag", "l_linestatus", "l_extendedprice", "l_quantity")
-            .write.mode("overwrite").parquet(factPath)
-          StarTree.materializeAndRegister(
-            graft.sources.SegmentCatalog.readStableSchema(s, factPath), factPath,
-            dims = Seq("l_returnflag", "l_linestatus"),
-            sumMetrics = Seq("l_quantity"), cubePath = s"$base/cube",
-            quantileMetrics = Seq("l_extendedprice"))
-        }
-        graft.sources.SegmentCatalog.readStableSchema(s, factPath)
+        val fact = starTreeFact("startree_kll", Tables.lineitem(s, d)
+          .select("l_returnflag", "l_linestatus", "l_extendedprice", "l_quantity"),
+          quantileMetrics = Seq("l_extendedprice"))
+        graft.sources.SegmentCatalog.readStableSchema(s, fact)
           .groupBy("l_returnflag")
           .agg(
             round(expr("percentile_approx(l_extendedprice, 0.5D, 5000)"), 2)
@@ -216,23 +183,12 @@ object StarTreeQueries {
     QueryDef(
       "q_startree_kll_exact",
       (s, d) => {
-        val base = "/tmp/graft_startree_kllx_" +
-          Integer.toHexString(d.hashCode & 0x7fffffff) +
-          "_p" + ProcessHandle.current().pid()
-        val factPath = s"$base/fact"
-        if (graft.plans.StarTreeCatalog.find(Set(factPath)).isEmpty) {
-          Tables.lineitem(s, d)
-            .filter(col("l_shipdate") >= lit("1995-03-01") &&
-              col("l_shipdate") < lit("1995-04-01"))
-            .select("l_returnflag", "l_linestatus", "l_extendedprice", "l_quantity")
-            .write.mode("overwrite").parquet(factPath)
-          StarTree.materializeAndRegister(
-            graft.sources.SegmentCatalog.readStableSchema(s, factPath), factPath,
-            dims = Seq("l_returnflag", "l_linestatus"),
-            sumMetrics = Seq("l_quantity"), cubePath = s"$base/cube",
-            quantileMetrics = Seq("l_extendedprice"))
-        }
-        graft.sources.SegmentCatalog.readStableSchema(s, factPath)
+        val fact = starTreeFact("startree_kllx", Tables.lineitem(s, d)
+          .filter(col("l_shipdate") >= lit("1995-03-01") &&
+            col("l_shipdate") < lit("1995-04-01"))
+          .select("l_returnflag", "l_linestatus", "l_extendedprice", "l_quantity"),
+          quantileMetrics = Seq("l_extendedprice"))
+        graft.sources.SegmentCatalog.readStableSchema(s, fact)
           .groupBy("l_returnflag")
           .agg(
             expr("percentile_approx(l_extendedprice, 0.5D, 5000)")
@@ -324,4 +280,21 @@ object StarTreeQueries {
                      round(quantile_cont(cents, 0.95) / 100.0, 4) + 0 AS p95
               FROM c GROUP BY 1 ORDER BY l_returnflag"""))
   )
+
+  /** `fact` copied into a segment and registered with its
+    * (returnflag, linestatus) cube, so the rewrite serves group-bys over
+    * the returned fact path; the memo entry lives as long as `fact`'s
+    * files are unchanged, and its release unregisters the cube.
+    */
+  private def starTreeFact(kind: String, fact: org.apache.spark.sql.DataFrame,
+      distinctMetrics: Seq[String] = Nil, quantileMetrics: Seq[String] = Nil): String =
+    graft.engine.Artifacts.segment(kind, fact,
+      dir => graft.plans.StarTreeCatalog.unregister(s"$dir/fact")) { dir =>
+      fact.write.parquet(s"$dir/fact")
+      StarTree.materializeAndRegister(
+        graft.sources.SegmentCatalog.readStableSchema(fact.sparkSession, s"$dir/fact"),
+        s"$dir/fact", dims = Seq("l_returnflag", "l_linestatus"),
+        sumMetrics = Seq("l_quantity"), cubePath = s"$dir/cube",
+        distinctMetrics = distinctMetrics, quantileMetrics = quantileMetrics)
+    } + "/fact"
 }

@@ -170,6 +170,9 @@ object UpsertQueries {
         val root = "/tmp/graft_hybrid_" +
           Integer.toHexString(d.hashCode & 0x7fffffff) +
           "_p" + ProcessHandle.current().pid()
+        // rewritten on every build (the promotion moves its granules), so
+        // a scratch layout rather than a memo; deleted when the JVM exits
+        graft.engine.Artifacts.deleteAtExit(root)
         val fs = new org.apache.hadoop.fs.Path(root)
           .getFileSystem(s.sparkContext.hadoopConfiguration)
         fs.delete(new org.apache.hadoop.fs.Path(root), true)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.Artifacts
+import graft.plans.{DenormCatalog, StarTreeCatalog}
 import graft.queries.Registry
 
 /** Memoized artifacts follow their input: a table rewritten in place
@@ -17,10 +18,12 @@ import graft.queries.Registry
   * changes the answer.
   *
   * Per query: run, rewrite the input with changed rows, run again. The
-  * second answer must equal the answer rebuilt after `invalidateAll()`
-  * and differ from the first. `invalidateAll()` must also unpersist
-  * every frame the memos persisted and delete every segment directory
-  * they wrote.
+  * second answer must equal the answer over a fresh copy of the
+  * rewritten fixtures (a new path shares no cache entry with the old
+  * one, whoever keeps the cache) and differ from the first.
+  * `invalidateAll()` must also unpersist
+  * every frame the memos persisted, delete every segment directory they
+  * wrote and drop every cube or view they registered.
   */
 class ArtifactsSpec extends SparkSpec {
 
@@ -48,11 +51,18 @@ class ArtifactsSpec extends SparkSpec {
     ("q_idset_filter", "orders",
       df => df.withColumn("o_orderpriority", lit("1-URGENT"))),
     ("q_ann_ivf", "embeddings", duplicated("vec_id")),
-    ("q_ann_pq", "embeddings", duplicated("vec_id")))
+    ("q_ann_pq", "embeddings", duplicated("vec_id")),
+    ("q_rollup_agg", "events", doubled("value")),
+    ("q_startree_hll", "lineitem", doubled("l_quantity")),
+    ("q_startree_kll", "lineitem", doubled("l_quantity")),
+    ("q_startree_kll_exact", "lineitem", doubled("l_quantity")),
+    ("q_dedup_incremental", "documents", duplicated("doc_id")),
+    ("q_denorm_join", "orders", doubled("o_totalprice")),
+    ("q_avro_ingest", "documents", duplicated("doc_id")))
 
-  private def fixtureCopy(): String = {
+  private def fixtureCopy(from: String): String = {
     val dir = Files.createTempDirectory("graft_artifacts_spec")
-    new File(sfDir).listFiles().foreach(f => Files.copy(f.toPath, dir.resolve(f.getName)))
+    new File(from).listFiles().foreach(f => Files.copy(f.toPath, dir.resolve(f.getName)))
     dir.toString
   }
 
@@ -82,22 +92,27 @@ class ArtifactsSpec extends SparkSpec {
 
   private def segmentDirs(): Set[String] =
     new File(System.getProperty("java.io.tmpdir")).listFiles()
-      .map(_.getName).filter(_.matches("graft_\\w+idx_q\\d*")).toSet
+      .map(_.getName).filter(_.matches("graft_\\w+_q\\d*")).toSet
+
+  /** Star-tree cubes and denormalized views registered for the rewrites. */
+  private def registrations(): (Int, Int) = (StarTreeCatalog.size, DenormCatalog.size)
 
   cases.foreach { case (name, table, change) =>
     test(s"$name serves the rewritten $table, and invalidateAll releases it") {
       val q = Registry.all.find(_.name == name).get
-      val dir = fixtureCopy()
-      def answer() = q.run(spark, dir).collect().map(_.toString).toSeq
+      val dir = fixtureCopy(sfDir)
+      def answer(d: String) = q.run(spark, d).collect().map(_.toString).toSeq
       Artifacts.invalidateAll()
       val persisted = settledPersistentRdds()
       val segments = segmentDirs()
+      val registered = registrations()
 
-      val first = answer()
+      val first = answer(dir)
       rewrite(dir, table, change)
-      val afterRewrite = answer()
+      val afterRewrite = answer(dir)
       Artifacts.invalidateAll()
-      val rebuilt = answer()
+      val copy = fixtureCopy(dir)
+      val rebuilt = answer(copy)
       assert(afterRewrite === rebuilt, s"$name served a stale artifact after $table changed")
       assert(rebuilt !== first, s"the $table rewrite did not change $name's answer")
 
@@ -106,7 +121,9 @@ class ArtifactsSpec extends SparkSpec {
         s"$name: invalidateAll left persisted frames behind")
       assert(segmentDirs() === segments,
         s"$name: invalidateAll left segment directories behind")
-      org.apache.commons.io.FileUtils.deleteDirectory(new File(dir))
+      assert(registrations() === registered,
+        s"$name: invalidateAll left star-tree or denorm registrations behind")
+      Seq(dir, copy).foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(new File(d)))
     }
   }
 }

@@ -75,7 +75,8 @@ class BuildLazinessSpec extends SparkSpec {
       "AQE-materialize when the builder compiles them"),
     "q_dedup_incremental" -> ("same r15 shape as q_dedup_minhash_exact " +
       "for the batch side + the intersection barrier; the one-time band " +
-      "index build stays content-keyed (done-marker) as before"),
+      "index is an Artifacts segment memoized on the corpus, so it adds " +
+      "no steady-state job"),
     "q_hits_hosts" -> ("power iteration: ONE emptiness-guard action per " +
       "build (edges.isEmpty) — the L1 normalizers themselves stay in-plan " +
       "as broadcast scalar aggregates, zero per-iteration driver jobs"),
@@ -88,12 +89,15 @@ class BuildLazinessSpec extends SparkSpec {
     "q_cc_star" -> ("small-star/large-star fixpoint: per-round exact " +
       "edge-set-equality scalar (one probe-join aggregate) decides " +
       "convergence"),
-    "q_bfs_hops" -> ("frontier expansion to fixpoint: per-round frontier- " +
-      "size scalar decides termination"),
-    "q_kcore" -> ("iterative peel: per-round removed-count scalar decides " +
-      "whether another peel runs"),
-    "q_sssp_hosts" -> ("Bellman-Ford rounds: per-round improved-count " +
-      "scalar decides convergence"),
+    "q_bfs_hops" -> ("six fixed relaxation rounds (ShortestPaths.sssp " +
+      "over unit weights), no per-round scalar: the build jobs are each " +
+      "round's lazy localCheckpoint, whose AQE stages materialize when " +
+      "the next round's plan compiles"),
+    "q_kcore" -> ("four fixed peel rounds, no per-round scalar: each " +
+      "round's eager localCheckpoint (which keeps lineage flat) is the " +
+      "build job"),
+    "q_sssp_hosts" -> ("four fixed Bellman-Ford rounds, no per-round " +
+      "scalar: the same lazy-checkpoint materialization as q_bfs_hops"),
     "q_multimodal_embed" -> ("r15 optimization: the decode→JL-embed pass " +
       "is computed ONCE into a lazy localCheckpoint serving both kNN " +
       "sides (query slice + corpus) instead of re-running the model per " +

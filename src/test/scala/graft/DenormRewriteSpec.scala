@@ -37,7 +37,7 @@ class DenormRewriteSpec extends SparkSpec {
     df.collect().map(_.toString).sorted.toSeq
 
   test("registered fact-dim join is served from the view: no Join in the plan, results identical to rule-off") {
-    val (_, _, viewPath, fact, dim) = freshTables()
+    val (factPath, _, _, fact, dim) = freshTables()
     try {
       def q() = fact.filter(col("amount") > 20)
         .join(dim.filter(col("premium")), "tier_key")
@@ -54,11 +54,11 @@ class DenormRewriteSpec extends SparkSpec {
         try { spark.conf.set("spark.graft.denorm.enabled", "false"); collectSorted(q()) }
         finally spark.conf.set("spark.graft.denorm.enabled", "true")
       assert(collectSorted(on) === expected, "rule-on must equal the real join")
-    } finally DenormCatalog.clear()
+    } finally DenormCatalog.unregister(factPath)
   }
 
   test("projection of mixed fact and dim columns survives the rewrite with exact rows") {
-    val (_, _, _, fact, dim) = freshTables()
+    val (factPath, _, _, fact, dim) = freshTables()
     try {
       def q() = fact.join(dim, "tier_key")
         .select(col("order_id"), col("tier_name"), col("amount"), col("premium"))
@@ -68,12 +68,12 @@ class DenormRewriteSpec extends SparkSpec {
         try { spark.conf.set("spark.graft.denorm.enabled", "false"); collectSorted(q()) }
         finally spark.conf.set("spark.graft.denorm.enabled", "true")
       assert(on === off)
-    } finally DenormCatalog.clear()
+    } finally DenormCatalog.unregister(factPath)
   }
 
   test("the rule must not overfire: unregistered dim, outer join, or a different key keep the real join") {
     import spark.implicits._
-    val (_, _, _, fact, dim) = freshTables()
+    val (factPath, _, _, fact, dim) = freshTables()
     try {
       // 1) unregistered dim (same schema, different files)
       val otherDim = spark.createDataFrame(
@@ -88,7 +88,7 @@ class DenormRewriteSpec extends SparkSpec {
       val p3 = fact.join(dim, fact("order_id") === dim("tier_key"))
         .queryExecution.optimizedPlan.toString
       assert(p3.contains("Join"), "a non-registered key must keep the join")
-    } finally DenormCatalog.clear()
+    } finally DenormCatalog.unregister(factPath)
   }
 
   test("incremental fact refresh keeps the rewrite current after re-registration") {
@@ -106,7 +106,7 @@ class DenormRewriteSpec extends SparkSpec {
         .select("order_id", "tier_name")
       assert(!q.queryExecution.optimizedPlan.toString.contains("Join"))
       assert(collectSorted(q) === Seq("[9001,tier-3]"))
-    } finally DenormCatalog.clear()
+    } finally DenormCatalog.unregister(factPath)
   }
 
   test("files appended WITHOUT re-registration make the rule decline — the real join serves the fresh rows") {
@@ -126,7 +126,7 @@ class DenormRewriteSpec extends SparkSpec {
         "stale registration must keep the real join")
       assert(collectSorted(q) === Seq("[9002,tier-2]"),
         "the appended row must be visible")
-    } finally DenormCatalog.clear()
+    } finally DenormCatalog.unregister(factPath)
   }
 
   test("two dims registered for the same fact table coexist — both joins rewrite") {
@@ -154,7 +154,7 @@ class DenormRewriteSpec extends SparkSpec {
         try { spark.conf.set("spark.graft.denorm.enabled", "false"); collectSorted(q1) }
         finally spark.conf.set("spark.graft.denorm.enabled", "true")
       assert(collectSorted(q1) === off1)
-    } finally DenormCatalog.clear()
+    } finally DenormCatalog.unregister(factPath)
   }
 
   test("two registrations on the SAME fact+dim paths with different keys: lookup selects by key, both rewrite") {
@@ -201,7 +201,7 @@ class DenormRewriteSpec extends SparkSpec {
         finally spark.conf.set("spark.graft.denorm.enabled", "true")
       assert(collectSorted(q1) === off1)
       assert(q2.count() == 100L)
-    } finally DenormCatalog.clear()
+    } finally DenormCatalog.unregister(factPath)
   }
 
   test("a hidden directory under the fact path (stale _temporary) does not disable the rewrite") {
@@ -231,6 +231,6 @@ class DenormRewriteSpec extends SparkSpec {
       assert(!q.queryExecution.optimizedPlan.toString.contains("Join"),
         "hidden-dir leftovers must not poison the freshness signature")
       assert(q.count() == 50L)
-    } finally DenormCatalog.clear()
+    } finally DenormCatalog.unregister(factPath)
   }
 }

@@ -174,13 +174,21 @@ class GraphSpec extends SparkSpec {
     assert(base == reparted)
   }
 
+  /** Hop distance the way q_bfs_hops computes it: shortest paths over
+    * unit weights, `dist` cast back to an int.
+    */
+  private def bfsHops(
+      edges: org.apache.spark.sql.DataFrame, seed: org.apache.spark.sql.DataFrame, maxHops: Int) =
+    graft.graph.ShortestPaths.sssp(edges.withColumn("w", lit(1L)), seed, maxHops)
+      .select(col("node"), col("dist").cast("int").as("hops"))
+
   test("bfs hops: exact distances up to the bound, beyond-bound nodes excluded") {
     // path a-b-c-d-e-f with maxHops 3 from seed a: d(f)=5 must NOT appear
     val edges = plainEdges(Seq(("a", "b"), ("b", "c"), ("c", "d"),
       ("d", "e"), ("e", "f")))
     import spark.implicits._
     val seed = Seq("a").toDF("node")
-    val hops = graft.graph.ConnectedComponents.bfsHops(edges, seed, maxHops = 3)
+    val hops = bfsHops(edges, seed, maxHops = 3)
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(hops == Map("a" -> 0, "b" -> 1, "c" -> 2, "d" -> 3), hops.toString)
   }
@@ -192,7 +200,7 @@ class GraphSpec extends SparkSpec {
       ("e", "f"), ("f", "a"))
     import spark.implicits._
     val seed = Seq("a").toDF("node")
-    val hops = graft.graph.ConnectedComponents.bfsHops(plainEdges(cyc), seed, 6)
+    val hops = bfsHops(plainEdges(cyc), seed, 6)
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(hops == Map("a" -> 0, "b" -> 1, "c" -> 2, "d" -> 3,
       "e" -> 2, "f" -> 1), hops.toString)

@@ -205,7 +205,7 @@ class PinotSqlSpec extends SparkSpec {
       val boolErr = intercept[IllegalArgumentException](
         PinotSql.sql(spark, s"$q OPTION(useStarTree=7)"))
       assert(boolErr.getMessage.contains("true/false"))
-    } finally StarTreeCatalog.clear()
+    } finally StarTreeCatalog.unregister(factPath)
   }
 
   test("TOP query matches the engine's own DataFrame ranking") {

@@ -624,6 +624,41 @@ class PlanLintSpec extends SparkSpec {
         stale.toSeq.sorted.mkString(", "))
   }
 
+  /** Registry builders allowed a hand-rolled build-once guard. */
+  private val buildOnceOk: Map[String, String] = Map(
+    "q_hybrid_catalog" -> ("its layout is rewritten on every build by " +
+      "design (the promotion under test moves its granules), so there is " +
+      "nothing to memoize; the pid path only keeps two JVMs apart"))
+
+  test("registry fixtures build once only through engine.Artifacts") {
+    // a done-marker, a catalog-find guard, a pid-keyed path or a fixed
+    // /tmp path is a private build-once cache: it outlives an in-place
+    // rewrite of its input, survives invalidateAll and leaks its
+    // directory when the JVM exits
+    import scala.jdk.CollectionConverters._
+    val guard = ("createNewFile|(?:StarTreeCatalog|DenormCatalog)\\.find\\b|" +
+      "ProcessHandle|\"/tmp/").r
+    val queryDef = """QueryDef\(\s*"(q_\w+)"""".r
+    val found = java.nio.file.Files.list(java.nio.file.Paths.get("src/main/scala/graft/queries"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        guard.findAllMatchIn(src).map { m =>
+          val q = queryDef.findAllMatchIn(src).takeWhile(_.start < m.start)
+            .toSeq.lastOption.fold("?")(_.group(1))
+          val line = src.substring(0, m.start).count(_ == '\n') + 1
+          q -> s"${f.getFileName}:$line ($q)"
+        }
+      }.toSeq
+    val unlisted = found.filterNot(h => buildOnceOk.contains(h._1)).map(_._2).sorted
+    val stale = buildOnceOk.keySet -- found.map(_._1)
+    assert(unlisted.isEmpty,
+      s"build-once guards outside engine.Artifacts (memoize the fixture with " +
+        s"Artifacts.segment, or justify in buildOnceOk): ${unlisted.mkString(", ")}")
+    assert(stale.isEmpty,
+      s"buildOnceOk names builders with no guard — remove them: ${stale.mkString(", ")}")
+  }
+
   test("only graft.Harness builds a main's session and reads its bootstrap env") {
     // Harness is the one place the mains get their session, data dir, core
     // count and conf overrides; a second copy drifts (the mains once had

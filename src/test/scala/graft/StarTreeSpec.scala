@@ -71,9 +71,9 @@ class StarTreeSpec extends SparkSpec {
       assert(plan.contains("cube"), s"plan still scans the fact table:\n$plan")
       assert(!plan.contains("lineitem.parquet"), plan)
       assert(rewritten.collect().map(_.toSeq).toSeq === direct)
-    } finally StarTreeCatalog.clear()
+    } finally StarTreeCatalog.unregister(factPath)
 
-    // after clear(), queries scan the fact table again
+    // once unregistered, queries scan the fact table again
     assert(query().queryExecution.executedPlan.toString.contains("lineitem.parquet"))
   }
 
@@ -104,7 +104,7 @@ class StarTreeSpec extends SparkSpec {
       val plan = rewritten.queryExecution.executedPlan.toString
       assert(plan.contains("cube"), s"plan still scans the fact table:\n$plan")
       assert(rewritten.collect().map(_.toSeq).toSeq === direct)
-    } finally StarTreeCatalog.clear()
+    } finally StarTreeCatalog.unregister(factPath)
   }
 
   test("incremental refresh merges a delta cube without rescanning history") {
@@ -147,7 +147,7 @@ class StarTreeSpec extends SparkSpec {
         li.groupBy("l_returnflag")
           .agg(round(sum("l_quantity"), 2).as("s"), count(lit(1)).as("c"))
           .orderBy("l_returnflag").collect().map(_.toSeq).toSeq)
-    } finally StarTreeCatalog.clear()
+    } finally StarTreeCatalog.unregister(factPath)
   }
 
   test("approx_count_distinct rewrites onto the cube's HLL sketches") {
@@ -189,7 +189,7 @@ class StarTreeSpec extends SparkSpec {
         .agg(countDistinct(col("l_partkey")).as("nd"))
       assert(exactQ.queryExecution.executedPlan.toString.contains(s"$tmp/fact"),
         "exact count-distinct was wrongly rewritten onto the approximate cube")
-    } finally StarTreeCatalog.clear()
+    } finally StarTreeCatalog.unregister(factPath)
   }
 
   test("percentile_approx rewrites onto the cube's KLL sketches (PERCENTILEKLL)") {
@@ -243,7 +243,7 @@ class StarTreeSpec extends SparkSpec {
         .agg(expr("percentile_approx(l_extendedprice, 0.5D, 50000)").as("p50"))
       assert(tight.queryExecution.executedPlan.toString.contains(s"$tmp/fact"),
         "a tighter-precision percentile_approx was wrongly served from the cube")
-    } finally StarTreeCatalog.clear()
+    } finally StarTreeCatalog.unregister(factPath)
   }
 
   test("a multi-file cube still serves the transparent rewrite") {
@@ -270,7 +270,7 @@ class StarTreeSpec extends SparkSpec {
       val rewritten = query()
       assert(rewritten.queryExecution.executedPlan.toString.contains("cube"))
       assert(rewritten.collect().map(_.toSeq).toSeq === direct)
-    } finally StarTreeCatalog.clear()
+    } finally StarTreeCatalog.unregister(factPath)
   }
 
   test("FILTER'd / DISTINCT aggregates disqualify the rewrite and stay correct") {
@@ -303,7 +303,7 @@ class StarTreeSpec extends SparkSpec {
           s"FILTER/DISTINCT aggregate was wrongly served from the cube:\n$plan")
         assert(q().collect().map(_.toSeq).toSeq === direct)
       }
-    } finally StarTreeCatalog.clear()
+    } finally StarTreeCatalog.unregister(factPath)
   }
 
   test("approx_count_distinct with tighter-than-cube precision keeps the fact scan") {
@@ -328,7 +328,7 @@ class StarTreeSpec extends SparkSpec {
         .agg(approx_count_distinct(col("l_partkey"), 0.005).as("nd"))
       assert(tight.queryExecution.executedPlan.toString.contains(s"$tmp/fact"),
         "tight-precision approx_count_distinct was wrongly served from the coarser cube sketch")
-    } finally StarTreeCatalog.clear()
+    } finally StarTreeCatalog.unregister(factPath)
   }
 
   test("cube relation is analyzed once per registration, not per query") {
@@ -350,7 +350,7 @@ class StarTreeSpec extends SparkSpec {
         .flatMap(_.output.map(_.exprId)).toSeq
       assert(ids.distinct.size === ids.size,
         s"duplicate exprIds across rewritten branches: $ids")
-    } finally StarTreeCatalog.clear()
+    } finally StarTreeCatalog.unregister(factPath)
   }
 
   test("hist-cube percentiles equal the raw-scan dictionary percentiles") {
