@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** The engine's one memo for derived artifacts — persisted frames, index
@@ -10,10 +11,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * object is what keeps it matched to its data.
   *
   * An entry is keyed by (session, kind, params, the input plan's
-  * semantic hash) and stamped with a fingerprint of the input's files:
-  * (path, length, mtime) of every file under each file-source leaf, read
-  * from the listing the input's FileIndex already holds (no I/O, no
-  * Spark job). A lookup whose fingerprint differs from the stamp — the
+  * semantic hash) and stamped with a fingerprint of the input's files
+  * (`stamp`). A lookup whose fingerprint differs from the stamp — the
   * input was compacted, retained, rolled up or replaced in place —
   * releases the old entry and rebuilds, so writers never need to know
   * which artifacts exist.
@@ -45,24 +44,33 @@ object Artifacts {
   def memo[T](kind: String, input: DataFrame, params: Any*)(build: => T)(
       release: T => Unit): T = {
     val plan = input.queryExecution.analyzed
-    val stamp = plan.collect {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-        fs.location.listFiles(Nil, Nil).flatMap(_.files)
-          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-    }.flatten.toSet
+    val current = stamp(plan)
     val slot = slots.computeIfAbsent(
       (input.sparkSession, kind, params.toList, plan.semanticHash()), _ => new Slot)
     slot.synchronized {
       slot.entry match {
-        case Some((`stamp`, v, _)) => v.asInstanceOf[T]
+        case Some((`current`, v, _)) => v.asInstanceOf[T]
         case _ =>
           drop(slot)
           val v = build
-          slot.entry = Some((stamp, v, () => release(v)))
+          slot.entry = Some((current, v, () => release(v)))
           v
       }
     }
   }
+
+  /** The fingerprint of `plan`'s input files: (path, length, mtime) of
+    * every file under each file-source leaf, read from the listing the
+    * leaf's FileIndex already holds (no I/O, no Spark job). The memo
+    * stamps its entries with it, and the cube and view registrations
+    * (graft.plans.Layouts) with the stamp of their fact and dim scans.
+    */
+  def stamp(plan: LogicalPlan): Set[(String, Long, Long)] =
+    plan.collect {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        fs.location.listFiles(Nil, Nil).flatMap(_.files)
+          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    }.flatten.toSet
 
   /** A persisted frame; released by a blocking unpersist. */
   def persisted(kind: String, input: DataFrame, params: Any*)(build: => DataFrame): DataFrame =

@@ -106,15 +106,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // transparent star-tree pre-aggregation (fires only on fact tables
     // registered in graft.plans.StarTreeCatalog)
     ext.injectOptimizerRule(session => new graft.plans.StarTreeRewriteRule(session))
-    // transparent timestamp-index rewrite (fires only on scans carrying
-    // SegmentWriter-derived granularity columns)
-    ext.injectOptimizerRule(session => new graft.plans.TimestampIndexRewriteRule(session))
-    // transparent json-index rewrite (fires only on scans carrying
-    // SegmentWriter-derived extracted-path columns)
-    ext.injectOptimizerRule(session => new graft.plans.JsonIndexRewriteRule(session))
-    // transparent text-index rewrite (fires only on scans carrying
-    // SegmentWriter-derived token-array columns)
-    ext.injectOptimizerRule(session => new graft.plans.TermIndexRewriteRule(session))
+    // transparent timestamp-, json- and text-index rewrites (fire only on
+    // scans carrying SegmentWriter-derived columns)
+    ext.injectOptimizerRule(session => new graft.plans.DerivedColumnRewriteRule(session))
     // transparent denormalized-view join elimination (fires only on
     // fact⋈dim joins registered in graft.plans.DenormCatalog)
     ext.injectOptimizerRule(session => new graft.plans.DenormRewriteRule(session))

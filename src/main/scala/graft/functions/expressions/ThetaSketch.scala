@@ -95,13 +95,26 @@ object ThetaState {
   def withMinTheta(a: ThetaState, b: ThetaState): Long = math.min(a.theta, b.theta)
 }
 
+private[expressions] trait ThetaAggBase extends TypedImperativeAggregate[ThetaState] {
+  def k: Int
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+  override def createAggregationBuffer(): ThetaState = new ThetaState(k)
+  override def merge(buffer: ThetaState, other: ThetaState): ThetaState = {
+    buffer.mergeFrom(other); buffer
+  }
+  override def eval(buffer: ThetaState): Any = buffer.serialized
+  override def serialize(buffer: ThetaState): Array[Byte] = buffer.serialized
+  override def deserialize(bytes: Array[Byte]): ThetaState = ThetaState.deserialize(bytes)
+}
+
 /** `theta_sketch_agg(col, k)` → binary sketch blob. */
 case class ThetaSketchAgg(
     child: Expression,
     k: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ThetaState] with UnaryLike[Expression] {
+  extends ThetaAggBase with UnaryLike[Expression] {
 
   require(k >= 16, s"theta_sketch_agg requires k >= 16, got $k")
 
@@ -111,25 +124,11 @@ case class ThetaSketchAgg(
       s"theta_sketch_agg requires string/int/bigint, got ${other.catalogString}")
   }
 
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): ThetaState = new ThetaState(k)
-
   override def update(buffer: ThetaState, input: InternalRow): ThetaState = {
     val v = child.eval(input)
     if (v != null) buffer.addHash(ThetaState.hash63(v))
     buffer
   }
-
-  override def merge(buffer: ThetaState, other: ThetaState): ThetaState = {
-    buffer.mergeFrom(other)
-    buffer
-  }
-
-  override def eval(buffer: ThetaState): Any = buffer.serialized
-  override def serialize(buffer: ThetaState): Array[Byte] = buffer.serialized
-  override def deserialize(bytes: Array[Byte]): ThetaState = ThetaState.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): ThetaSketchAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -153,7 +152,7 @@ case class ThetaUnionAgg(
     k: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ThetaState] with UnaryLike[Expression] {
+  extends ThetaAggBase with UnaryLike[Expression] {
 
   require(k >= 16, s"theta_union_agg requires k >= 16, got $k")
 
@@ -163,25 +162,11 @@ case class ThetaUnionAgg(
       s"theta_union_agg requires binary sketches, got ${other.catalogString}")
   }
 
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): ThetaState = new ThetaState(k)
-
   override def update(buffer: ThetaState, input: InternalRow): ThetaState = {
     val v = child.eval(input)
     if (v != null) buffer.mergeFrom(ThetaState.deserialize(v.asInstanceOf[Array[Byte]]))
     buffer
   }
-
-  override def merge(buffer: ThetaState, other: ThetaState): ThetaState = {
-    buffer.mergeFrom(other)
-    buffer
-  }
-
-  override def eval(buffer: ThetaState): Any = buffer.serialized
-  override def serialize(buffer: ThetaState): Array[Byte] = buffer.serialized
-  override def deserialize(bytes: Array[Byte]): ThetaState = ThetaState.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): ThetaUnionAgg =
     copy(mutableAggBufferOffset = newOffset)

@@ -94,6 +94,19 @@ object TupleState {
   }
 }
 
+private[expressions] trait TupleAggBase extends TypedImperativeAggregate[TupleState] {
+  def k: Int
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+  override def createAggregationBuffer(): TupleState = new TupleState(k)
+  override def merge(buffer: TupleState, other: TupleState): TupleState = {
+    buffer.mergeFrom(other); buffer
+  }
+  override def eval(buffer: TupleState): Any = buffer.serialized
+  override def serialize(buffer: TupleState): Array[Byte] = buffer.serialized
+  override def deserialize(bytes: Array[Byte]): TupleState = TupleState.deserialize(bytes)
+}
+
 /** `tuple_sketch_agg(key, metric, k)` → binary sketch blob. The metric is
   * a LONG by contract (the repo's integer-grid rule: quantize money to
   * cents per row BEFORE aggregating, so partial sums recombine exactly
@@ -105,7 +118,7 @@ case class TupleSketchAgg(
     k: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TupleState] with BinaryLike[Expression] {
+  extends TupleAggBase with BinaryLike[Expression] {
 
   require(k >= 16, s"tuple_sketch_agg requires k >= 16, got $k")
 
@@ -116,11 +129,6 @@ case class TupleSketchAgg(
         s"got (${kt.catalogString}, ${mt.catalogString})")
   }
 
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): TupleState = new TupleState(k)
-
   override def update(buffer: TupleState, input: InternalRow): TupleState = {
     val key = left.eval(input)
     val m = right.eval(input)
@@ -128,15 +136,6 @@ case class TupleSketchAgg(
       buffer.add(ThetaState.hash63(key), m.asInstanceOf[Long])
     buffer
   }
-
-  override def merge(buffer: TupleState, other: TupleState): TupleState = {
-    buffer.mergeFrom(other)
-    buffer
-  }
-
-  override def eval(buffer: TupleState): Any = buffer.serialized
-  override def serialize(buffer: TupleState): Array[Byte] = buffer.serialized
-  override def deserialize(bytes: Array[Byte]): TupleState = TupleState.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TupleSketchAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -158,7 +157,7 @@ case class TupleUnionAgg(
     k: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TupleState] with UnaryLike[Expression] {
+  extends TupleAggBase with UnaryLike[Expression] {
 
   require(k >= 16, s"tuple_union_agg requires k >= 16, got $k")
 
@@ -168,25 +167,11 @@ case class TupleUnionAgg(
       s"tuple_union_agg requires binary sketches, got ${other.catalogString}")
   }
 
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): TupleState = new TupleState(k)
-
   override def update(buffer: TupleState, input: InternalRow): TupleState = {
     val v = child.eval(input)
     if (v != null) buffer.mergeFrom(TupleState.deserialize(v.asInstanceOf[Array[Byte]]))
     buffer
   }
-
-  override def merge(buffer: TupleState, other: TupleState): TupleState = {
-    buffer.mergeFrom(other)
-    buffer
-  }
-
-  override def eval(buffer: TupleState): Any = buffer.serialized
-  override def serialize(buffer: TupleState): Array[Byte] = buffer.serialized
-  override def deserialize(bytes: Array[Byte]): TupleState = TupleState.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TupleUnionAgg =
     copy(mutableAggBufferOffset = newOffset)

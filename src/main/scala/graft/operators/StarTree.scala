@@ -100,7 +100,8 @@ object StarTree {
     * DELTA is aggregated — the fact history is never rescanned; the merge
     * itself runs over two cube-sized inputs (`foldInto`). The catalog
     * entry is then re-registered so the transparent rewrite serves the
-    * refreshed cube.
+    * refreshed cube; it records the fact's files as of this call, so
+    * append `delta` to `factPath` first.
     */
   def refreshIncremental(
       spark: org.apache.spark.sql.SparkSession, factPath: String, delta: DataFrame,

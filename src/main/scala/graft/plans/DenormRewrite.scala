@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Transparent DENORMALIZED-VIEW join elimination — the join sibling of
   * StarTreeRewriteRule (reference: /root/reference/basics/Architecture.md
@@ -26,10 +25,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * which is precisely why Pinot denormalizes at ingest.
   *
   * Semantics contract (spec-pinned, DenormRewriteSpec): the registration
-  * captures the EXACT fact+dim file listings the view was built from.
-  * The rule fires only when both scans' root paths match a registration
-  * AND their current listings equal the captured ones — a different dim
-  * table, an unregistered fact, a non-equi/non-inner join, or files
+  * captures the file stamps of the fact and dim the view was built from
+  * (Layouts). The rule fires only when both scans' root paths match a
+  * registration AND their current stamps equal the captured ones — a
+  * different dim table, an unregistered fact, a non-equi/non-inner join, or files
   * appended/removed since registration all fall back to the real join
   * (drift is detected at rewrite time, never served stale). Several dims
   * of the same fact table register independently (keyed by the full
@@ -41,92 +40,36 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 object DenormCatalog {
 
   final case class ViewDef(
-      factPaths: Set[String],
-      dimPaths: Set[String],
-      key: String,
-      viewPath: String,
-      /** Exact data-file listings of fact and dim AT REGISTRATION — the
-        * freshness contract: the rule serves the view only while the
-        * scans' current listings match, so files appended to the fact
-        * path without refreshIncremental + re-register degrade to the
-        * real join instead of silently missing rows.
+      /** the fact and dim paths and their file stamps when the view was
+        * built: the rule serves the view only while both scans still carry
+        * them, so files appended to the fact without refreshIncremental +
+        * re-register degrade to the real join instead of missing rows.
         */
-      factSig: Set[String],
-      dimSig: Set[String])
+      fact: Layouts.Input,
+      dim: Layouts.Input,
+      key: String,
+      viewPath: String)
 
   private val views = new java.util.concurrent.ConcurrentHashMap[String, ViewDef]()
-  private val relations =
-    new java.util.concurrent.ConcurrentHashMap[String, LogicalPlan]()
 
   def register(factPath: String, dimPath: String, key: String, viewPath: String): Unit = {
-    relations.remove(viewPath) // view may have been rebuilt
-    val f = normalize(factPath); val d = normalize(dimPath)
+    Layouts.forget(viewPath) // view may have been rebuilt
+    val fact = Layouts.input(factPath); val dim = Layouts.input(dimPath)
     // keyed by the full (fact, dim, key) triple so several dims of the
     // same fact table coexist — a fact-only key silently evicted every
     // registration but the last
-    views.put(s"$f|$d|$key",
-      ViewDef(Set(f), Set(d), key, viewPath, listSig(factPath), listSig(dimPath)))
-  }
-
-  /** Data-file signature of a path (recursive listing, hidden files
-    * excluded — the same set a FileIndex exposes as inputFiles). A
-    * driver-side metadata operation, same cost class as any scan's own
-    * listing; captured once per registration.
-    *
-    * EVERY path component below the root is checked for the hidden
-    * prefixes, not just the leaf name: InMemoryFileIndex prunes whole
-    * hidden DIRECTORIES (a `_temporary` left by a crashed write, a
-    * `.staging` dir), so a leaf-only filter would bake their files into
-    * the signature and the freshness equality against
-    * `FileIndex.inputFiles` could never pass again — silently disabling
-    * the rewrite forever.
-    */
-  private def listSig(path: String): Set[String] = {
-    val conf = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val root = fs.makeQualified(p)
-    def hiddenUnderRoot(f: org.apache.hadoop.fs.Path): Boolean = {
-      var cur = f
-      while (cur != null && cur != root) {
-        val n = cur.getName
-        if (n.startsWith("_") || n.startsWith(".")) return true
-        cur = cur.getParent
-      }
-      false
-    }
-    if (!fs.exists(p)) Set.empty
-    else {
-      val it = fs.listFiles(p, true)
-      val b = Set.newBuilder[String]
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (!hiddenUnderRoot(f)) b += normalize(f.toString)
-      }
-      b.result()
-    }
+    views.put(s"${fact.path}|${dim.path}|$key", ViewDef(fact, dim, key, viewPath))
   }
 
   /** Drop every view registered over `factPath`: its joins run again. */
   def unregister(factPath: String): Unit = {
-    val f = normalize(factPath)
+    val f = graft.sources.SegmentCatalog.normalize(factPath)
     views.asScala.foreach { case (k, v) =>
-      if (v.factPaths(f) && views.remove(k, v)) relations.remove(v.viewPath)
+      if (v.fact.path == f && views.remove(k, v)) Layouts.forget(v.viewPath)
     }
   }
 
   private[graft] def size: Int = views.size
-
-  /** Analyzed view relation, resolved once per registration (no parquet
-    * footer work inside the optimizer); fresh exprIds per use.
-    */
-  def viewRelation(spark: SparkSession, viewPath: String): LogicalPlan =
-    relations.computeIfAbsent(viewPath,
-      p => graft.sources.SegmentCatalog.readStableSchema(spark, p)
-        .queryExecution.analyzed)
 
   /** Path match is necessary but not sufficient: two registrations can
     * share the same fact+dim paths with DIFFERENT join keys (a dim joined
@@ -135,15 +78,9 @@ object DenormCatalog {
     * wrong-key ViewDef and the rewrite would silently decline.
     */
   def find(factPaths: Set[String], dimPaths: Set[String], key: String)
-      : Option[ViewDef] = {
-    val f = factPaths.map(normalize); val d = dimPaths.map(normalize)
+      : Option[ViewDef] =
     views.values.asScala.find(v =>
-      f.nonEmpty && d.nonEmpty && v.key == key &&
-        f.subsetOf(v.factPaths) && d.subsetOf(v.dimPaths))
-  }
-
-  private[plans] def normalize(p: String): String =
-    p.replaceFirst("^file:/*", "/").stripSuffix("/")
+      v.key == key && v.fact.isAt(factPaths) && v.dim.isAt(dimPaths))
 }
 
 class DenormRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
@@ -161,25 +98,6 @@ class DenormRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case j: Join => tryRewrite(j).getOrElse(j)
     }
 
-  /** Scan beneath attribute-only Projects and Filters; returns the scan's
-    * root paths, the accumulated filter condition, and the scan's CURRENT
-    * data-file listing (already materialized in the relation's FileIndex —
-    * reading it costs no I/O) for the freshness check.
-    */
-  private def scanSide(p: LogicalPlan)
-      : Option[(Set[String], Option[Expression], Set[String])] = p match {
-    case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-      Some((fs.location.rootPaths.map(_.toString).toSet, None,
-        fs.location.inputFiles.map(DenormCatalog.normalize).toSet))
-    case Project(projList, child) if projList.forall(_.isInstanceOf[AttributeReference]) =>
-      scanSide(child)
-    case Filter(cond, child) =>
-      scanSide(child).map { case (paths, f, files) =>
-        (paths, f.map(And(_, cond)).orElse(Some(cond)), files)
-      }
-    case _ => None
-  }
-
   private def tryRewrite(j: Join): Option[LogicalPlan] = {
     if (j.joinType != Inner) return None
     // single equi-join key, same column name both sides (the DenormView
@@ -191,28 +109,20 @@ class DenormRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // the materialize contract needs ONE key name shared by both sides;
     // checking it up front lets the catalog lookup select by key too
     if (leftKey.name != rightKey.name) return None
-    val (lPaths, lFilter, lFiles) = scanSide(j.left).getOrElse(return None)
-    val (rPaths, rFilter, rFiles) = scanSide(j.right).getOrElse(return None)
+    val l = Layouts.Scan.unapply(j.left).getOrElse(return None)
+    val r = Layouts.Scan.unapply(j.right).getOrElse(return None)
     // fact on either side of the join
-    val (view, factFilter, dimFilter, factFiles, dimFiles) =
-      DenormCatalog.find(lPaths, rPaths, leftKey.name) match {
-        case Some(v) => (v, lFilter, rFilter, lFiles, rFiles)
-        case None => DenormCatalog.find(rPaths, lPaths, leftKey.name) match {
-          case Some(v) => (v, rFilter, lFilter, rFiles, lFiles)
-          case None => return None
-        }
-      }
+    val (view, fact, dim) = DenormCatalog.find(l.paths, r.paths, leftKey.name)
+      .map((_, l, r))
+      .orElse(DenormCatalog.find(r.paths, l.paths, leftKey.name).map((_, r, l)))
+      .getOrElse(return None)
     // FRESHNESS: the view was materialized from exactly the registered
     // files. Files appended/removed since (without refreshIncremental +
     // re-register) would silently serve missing/stale rows — decline and
     // fall back to the real join instead.
-    if (factFiles != view.factSig || dimFiles != view.dimSig) return None
+    if (!fact.reads(view.fact) || !dim.reads(view.dim)) return None
 
-    val viewRel = DenormCatalog.viewRelation(spark, view.viewPath) match {
-      case m: org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation =>
-        m.newInstance().asInstanceOf[LogicalPlan]
-      case other => other
-    }
+    val viewRel = Layouts.instance(spark, view.viewPath)
     val byName = viewRel.output.map(a => a.name -> a).toMap
 
     // every column the join produces must exist in the view by name. The
@@ -241,7 +151,7 @@ class DenormRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       if (ok) Some(r) else None
     }
 
-    val conds = Seq(factFilter, dimFilter).flatten
+    val conds = Seq(fact.filter, dim.filter).flatten
       .map(f => remapped(f).getOrElse(return None))
     val filtered = conds.reduceOption(And) match {
       case Some(c) => Filter(c, viewRel)

@@ -7,16 +7,17 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.DoubleType
 
 /** Transparent star-tree pre-aggregation (reference: /root/reference/
   * basics/indexing/README.md:16 — Pinot's star-tree index answers eligible
   * aggregations from pre-aggregated records WITHOUT the query changing).
   *
-  * `StarTreeCatalog.register` binds a fact table's file paths to a
-  * materialized cube (built by graft.operators.StarTree.buildCube, written
-  * as parquet). The optimizer rule then rewrites
+  * `StarTreeCatalog.register` binds a fact table's path, and the files it
+  * holds at that moment, to a materialized cube (built by
+  * graft.operators.StarTree.buildCube, written as parquet). While a
+  * query's fact scan still lists exactly those files (Layouts), the
+  * optimizer rule rewrites
   *
   *   Aggregate(dims ⊆ cube.dims, SUM/COUNT/AVG over cube.metrics,
   *             [Filter on dims] Scan(fact))
@@ -32,7 +33,8 @@ import org.apache.spark.sql.types.DoubleType
 object StarTreeCatalog {
 
   final case class CubeDef(
-      factPaths: Set[String],
+      /** the fact path and its file stamp when the cube was built */
+      fact: Layouts.Input,
       dims: Set[String],
       metrics: Set[String],
       cubePath: String,
@@ -44,42 +46,30 @@ object StarTreeCatalog {
       quantileMetrics: Set[String] = Set.empty)
 
   private val cubes = new java.util.concurrent.ConcurrentHashMap[String, CubeDef]()
-  private val relations =
-    new java.util.concurrent.ConcurrentHashMap[String, LogicalPlan]()
 
+  /** Serve `cubePath` for group-bys over `factPath` while the fact's files
+    * stay as they are now: call it after the cube is (re)built from them.
+    */
   def register(factPath: String, dims: Seq[String], metrics: Seq[String], cubePath: String,
       distinctMetrics: Seq[String] = Nil,
       quantileMetrics: Seq[String] = Nil): Unit = {
-    relations.remove(cubePath) // cube may have been rebuilt
-    cubes.put(normalize(factPath),
-      CubeDef(Set(normalize(factPath)), dims.toSet, metrics.toSet, cubePath,
-        distinctMetrics.toSet, quantileMetrics.toSet))
+    Layouts.forget(cubePath) // cube may have been rebuilt
+    val fact = Layouts.input(factPath)
+    cubes.put(fact.path, CubeDef(fact, dims.toSet, metrics.toSet, cubePath,
+      distinctMetrics.toSet, quantileMetrics.toSet))
   }
 
   /** Drop the cube registered for `factPath`: its group-bys scan the fact
     * again.
     */
   def unregister(factPath: String): Unit =
-    Option(cubes.remove(normalize(factPath))).foreach(c => relations.remove(c.cubePath))
+    Option(cubes.remove(graft.sources.SegmentCatalog.normalize(factPath)))
+      .foreach(c => Layouts.forget(c.cubePath))
 
   private[graft] def size: Int = cubes.size
 
-  /** Analyzed cube relation, resolved ONCE per registration (parquet
-    * footer/schema work must not run inside the optimizer on every
-    * matching Aggregate). Callers take a fresh-exprId instance so two
-    * rewrites in one plan never share attribute ids.
-    */
-  def cubeRelation(spark: SparkSession, cubePath: String): LogicalPlan =
-    relations.computeIfAbsent(cubePath,
-      p => graft.sources.SegmentCatalog.readStableSchema(spark, p).queryExecution.analyzed)
-
-  def find(paths: Set[String]): Option[CubeDef] = {
-    val norm = paths.map(normalize)
-    cubes.values.asScala.find(c => norm.nonEmpty && norm.subsetOf(c.factPaths))
-  }
-
-  private def normalize(p: String): String =
-    p.stripPrefix("file:").stripSuffix("/")
+  def find(paths: Set[String]): Option[CubeDef] =
+    cubes.values.asScala.find(_.fact.isAt(paths))
 }
 
 class StarTreeRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
@@ -98,25 +88,14 @@ class StarTreeRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         tryRewrite(groups, aggExprs, child).getOrElse(agg)
     }
 
-  /** fact scan + optional dim-only filter beneath the aggregate. */
-  private def factScan(p: LogicalPlan): Option[(Set[String], Option[Expression])] = p match {
-    case l @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-      Some((fs.location.rootPaths.map(_.toString).toSet, None))
-    case Project(projList, child) if projList.forall(_.isInstanceOf[AttributeReference]) =>
-      factScan(child)
-    case Filter(cond, child) =>
-      factScan(child).map { case (paths, f) =>
-        (paths, f.map(And(_, cond)).orElse(Some(cond)))
-      }
-    case _ => None
-  }
-
   private def tryRewrite(
       groups: Seq[Expression],
       aggExprs: Seq[NamedExpression],
       child: LogicalPlan): Option[LogicalPlan] = {
-    val (paths, filterOpt) = factScan(child).getOrElse(return None)
-    val cube = StarTreeCatalog.find(paths).getOrElse(return None)
+    val scan = Layouts.Scan.unapply(child).getOrElse(return None)
+    val filterOpt = scan.filter
+    val cube = StarTreeCatalog.find(scan.paths).filter(c => scan.reads(c.fact))
+      .getOrElse(return None)
 
     // grouping must be plain dim attributes
     val groupAttrs = groups.map {
@@ -128,11 +107,7 @@ class StarTreeRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       if (!f.references.forall(a => cube.dims.contains(a.name))) return None
     }
 
-    val cubeRel = StarTreeCatalog.cubeRelation(spark, cube.cubePath) match {
-      case m: org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation =>
-        m.newInstance().asInstanceOf[LogicalPlan]
-      case other => other
-    }
+    val cubeRel = Layouts.instance(spark, cube.cubePath)
     val cubeAttrByName = cubeRel.output.map(a => a.name -> a).toMap
     if (!cube.dims.forall(cubeAttrByName.contains) ||
       !cube.metrics.forall(m => cubeAttrByName.contains(s"s_$m")) ||

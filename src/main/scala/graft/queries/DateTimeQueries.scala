@@ -194,7 +194,7 @@ object DateTimeQueries {
     // datetrunc('DAY', ts) onto the pre-generated $ts$DAY column): the
     // query writes events once per session through SegmentWriter with a
     // derived ts_day column, then runs the SAME date_trunc group-by a
-    // user would write — plans.TimestampIndexRewrite transparently swaps
+    // user would write — plans.DerivedColumnRewrite transparently swaps
     // the per-row truncation for the stored column (TimestampIndexSpec
     // asserts the plan shape and filter pushdown; here the DuckDB oracle
     // hash-pins that the rewritten path returns exactly the raw-events

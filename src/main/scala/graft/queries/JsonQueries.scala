@@ -151,7 +151,7 @@ object JsonQueries {
     // events write once per session through SegmentWriter with
     // derivedJsonCols = ("props", "$.k"); the query then runs the SAME
     // get_json_object filter+group a user writes on the raw table, and
-    // plans.JsonIndexRewrite transparently swaps every extraction for
+    // plans.DerivedColumnRewrite transparently swaps every extraction for
     // the stored props__k column (JsonIndexSpec asserts the parse is
     // gone from the plan and the filter reaches the parquet scan; the
     // DuckDB oracle hash-pins that the rewritten path returns exactly

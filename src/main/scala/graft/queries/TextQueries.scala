@@ -160,7 +160,7 @@ object TextQueries {
                 AND NOT contains(' ' || lower(text) || ' ', ' slow query ')
               ORDER BY doc_id""")),
 
-    // TRANSPARENT text-index rewrite (plans.TermIndexRewrite): the query
+    // TRANSPARENT text-index rewrite (plans.DerivedColumnRewrite): the query
     // is written against the RAW text column — the optimizer serves the
     // textMatch predicates from the SegmentWriter-stored token array
     // (tokenize-once-at-ingest, native-text-index.md), so no per-row

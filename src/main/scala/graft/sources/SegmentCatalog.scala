@@ -59,11 +59,13 @@ object SegmentCatalog {
       .collect().map(_.getString(0)).toSeq
   }
 
-  /** Scheme-independent path form, so manifest entries
+  /** The engine's one scheme-independent path form, so manifest entries
     * (`input_file_name()`, e.g. "file:///a/b.parquet") compare equal to
-    * live `FileSystem` listings (e.g. "file:/a/b.parquet").
+    * live `FileSystem` listings (e.g. "file:/a/b.parquet"), and a cube or
+    * view registered as "file:///a", "file:/a" or "/a/" names the same
+    * scan (graft.plans.Layouts).
     */
-  private def normalize(p: String): String =
+  private[graft] def normalize(p: String): String =
     new org.apache.hadoop.fs.Path(p).toUri.getPath
 
   /** Live data-file listing of the segment directory (file-count-sized,

@@ -40,7 +40,7 @@ object SegmentWriter {
         * indexed posting lists so JSON predicates never parse documents
         * at query time): (jsonCol, '$.path') pairs become stored STRING
         * columns with parquet min/max stats, and
-        * plans.JsonIndexRewriteRule transparently redirects matching
+        * plans.DerivedColumnRewriteRule transparently redirects matching
         * `get_json_object` calls onto them.
         */
       derivedJsonCols: Seq[(String, String)] = Seq.empty,
@@ -49,7 +49,7 @@ object SegmentWriter {
         * TEXT_CONTAINS never re-tokenizes documents at query time): each
         * listed text column gains a stored `<col>__terms` array of its
         * distinct lowercase whitespace-run tokens. The
-        * TermIndexRewriteRule then serves textContains predicates from
+        * DerivedColumnRewriteRule then serves textContains predicates from
         * the stored array — the per-row split+lower disappears from the
         * query plan.
         */

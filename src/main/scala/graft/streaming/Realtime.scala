@@ -404,7 +404,10 @@ object Realtime {
     * basics/indexing/README.md:16 star-tree). After every batch the cube
     * is re-registered, so the transparent rewrite (StarTreeRewriteRule)
     * serves the refreshed cube and dashboard aggregates stay cube-fast
-    * while the stream runs. Archived replay guard (`foldCubeBatch`).
+    * while the stream runs. The fact archive is written before the fold,
+    * so its files no longer match the registration until the re-register:
+    * a reader in that window scans the fact instead of reading a stale
+    * cube. Archived replay guard (`foldCubeBatch`).
     */
   def cubeRefreshSink(
       stream: DataFrame, factPath: String, cubePath: String,

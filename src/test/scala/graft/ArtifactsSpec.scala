@@ -60,8 +60,8 @@ class ArtifactsSpec extends SparkSpec {
     ("q_denorm_join", "orders", doubled("o_totalprice")),
     ("q_avro_ingest", "documents", duplicated("doc_id")))
 
-  private def fixtureCopy(from: String): String = {
-    val dir = Files.createTempDirectory("graft_artifacts_spec")
+  private def fixtureCopy(from: String, to: String): String = {
+    val dir = Files.createDirectories(Paths.get(to))
     new File(from).listFiles().foreach(f => Files.copy(f.toPath, dir.resolve(f.getName)))
     dir.toString
   }
@@ -100,30 +100,32 @@ class ArtifactsSpec extends SparkSpec {
   cases.foreach { case (name, table, change) =>
     test(s"$name serves the rewritten $table, and invalidateAll releases it") {
       val q = Registry.all.find(_.name == name).get
-      val dir = fixtureCopy(sfDir)
-      def answer(d: String) = q.run(spark, d).collect().map(_.toString).toSeq
-      Artifacts.invalidateAll()
-      val persisted = settledPersistentRdds()
-      val segments = segmentDirs()
-      val registered = registrations()
+      val root = tempDir("graft_artifacts_spec")
+      try {
+        val dir = fixtureCopy(sfDir, s"$root/fixtures")
+        def answer(d: String) = q.run(spark, d).collect().map(_.toString).toSeq
+        Artifacts.invalidateAll()
+        val persisted = settledPersistentRdds()
+        val segments = segmentDirs()
+        val registered = registrations()
 
-      val first = answer(dir)
-      rewrite(dir, table, change)
-      val afterRewrite = answer(dir)
-      Artifacts.invalidateAll()
-      val copy = fixtureCopy(dir)
-      val rebuilt = answer(copy)
-      assert(afterRewrite === rebuilt, s"$name served a stale artifact after $table changed")
-      assert(rebuilt !== first, s"the $table rewrite did not change $name's answer")
+        val first = answer(dir)
+        rewrite(dir, table, change)
+        val afterRewrite = answer(dir)
+        Artifacts.invalidateAll()
+        val copy = fixtureCopy(dir, s"$root/copy")
+        val rebuilt = answer(copy)
+        assert(afterRewrite === rebuilt, s"$name served a stale artifact after $table changed")
+        assert(rebuilt !== first, s"the $table rewrite did not change $name's answer")
 
-      Artifacts.invalidateAll()
-      assert(settledPersistentRdds() === persisted,
-        s"$name: invalidateAll left persisted frames behind")
-      assert(segmentDirs() === segments,
-        s"$name: invalidateAll left segment directories behind")
-      assert(registrations() === registered,
-        s"$name: invalidateAll left star-tree or denorm registrations behind")
-      Seq(dir, copy).foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(new File(d)))
+        Artifacts.invalidateAll()
+        assert(settledPersistentRdds() === persisted,
+          s"$name: invalidateAll left persisted frames behind")
+        assert(segmentDirs() === segments,
+          s"$name: invalidateAll left segment directories behind")
+        assert(registrations() === registered,
+          s"$name: invalidateAll left star-tree or denorm registrations behind")
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(new File(root))
     }
   }
 }

@@ -15,7 +15,7 @@ class CorpusSpec extends SparkSpec {
   test("LmScore: materialized vocabulary scores identically to the inline LM") {
     import graft.pipeline.LmScore
     val docs = graft.engine.Tables.documents(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("lmvocab").toString
+    val dir = tempDir("lmvocab")
     LmScore.materializeVocab(docs, "doc_id", "text", dir)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -30,7 +30,7 @@ class CorpusSpec extends SparkSpec {
   test("LmScore: out-of-vocabulary tokens take the maximum rarity penalty") {
     import graft.pipeline.LmScore
     val corpus = graft.engine.Tables.documents(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("lmvocab2").toString
+    val dir = tempDir("lmvocab2")
     LmScore.materializeVocab(corpus, "doc_id", "text", dir)
     // one batch doc made of common corpus tokens, one of pure OOV noise
     val common = corpus
@@ -48,7 +48,7 @@ class CorpusSpec extends SparkSpec {
   test("LmScore: null-text docs surface as unscoreable instead of vanishing") {
     import graft.pipeline.LmScore
     val corpus = graft.engine.Tables.documents(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("lmvocab3").toString
+    val dir = tempDir("lmvocab3")
     LmScore.materializeVocab(corpus, "doc_id", "text", dir)
     val batch = Seq((1L, Some("the a and")), (2L, None))
       .toDF("doc_id", "text")
@@ -244,7 +244,7 @@ class CorpusSpec extends SparkSpec {
   test("Tfidf: materialized DF index scores identically to the inline path") {
     import graft.pipeline.Tfidf
     val docs = graft.engine.Tables.documents(spark, sfDir).limit(200)
-    val idx = java.nio.file.Files.createTempDirectory("tfidf_idx").toString
+    val idx = tempDir("tfidf_idx")
     Tfidf.materializeDf(docs, "doc_id", "text", idx)
     val inline = Tfidf.topTerms(docs, "doc_id", "text",
         Tfidf.docFrequencies(docs, "doc_id", "text"),
@@ -280,7 +280,7 @@ class CorpusSpec extends SparkSpec {
   test("TermIndex: stored sketch sums are sound lower bounds within the MG guarantee") {
     import graft.pipeline.TermIndex
     val docs = graft.engine.Tables.documents(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("termindex").toString
+    val dir = tempDir("termindex")
     val kWidth = 64
     TermIndex.materialize(docs, "text", col("source"), dir, k = kWidth)
 
@@ -313,7 +313,7 @@ class CorpusSpec extends SparkSpec {
   test("TermIndex: a re-materialized index serves fresh counts on the next call") {
     import graft.pipeline.TermIndex
     val docs = graft.engine.Tables.documents(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("termindex_swap").toString
+    val dir = tempDir("termindex_swap")
     TermIndex.materialize(docs.filter(col("doc_id") % 2 === 0), "text",
       col("source"), dir)
     val half = TermIndex.topTermsIndexed(spark, dir, k = 5)

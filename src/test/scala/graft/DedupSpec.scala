@@ -241,7 +241,7 @@ class DedupSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
     val newBatch = docs.filter(col("doc_id") % 5 === 0)
-    val idx = Files.createTempDirectory("band_index").toString
+    val idx = tempDir("band_index")
     MinHashLsh.materializeBands(corpus, "doc_id", "text", idx)
     val indexed = spark.read.parquet(idx)
     val incr = MinHashLsh

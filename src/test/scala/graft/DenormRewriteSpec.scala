@@ -16,7 +16,7 @@ class DenormRewriteSpec extends SparkSpec {
 
   private def freshTables(): (String, String, String, DataFrame, DataFrame) = {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("denorm_rw").toString
+    val base = tempDir("denorm_rw")
     val factPath = s"$base/fact"
     val dimPath = s"$base/dim"
     val viewPath = s"$base/view"
@@ -133,7 +133,7 @@ class DenormRewriteSpec extends SparkSpec {
     import spark.implicits._
     val (factPath, dimPath, _, fact, dim) = freshTables()
     try {
-      val base = java.nio.file.Files.createTempDirectory("denorm_rw2").toString
+      val base = tempDir("denorm_rw2")
       val dim2Path = s"$base/dim2"
       val view2Path = s"$base/view2"
       (0L until 7L).map(k => (k, (k * 5).toDouble))
@@ -159,7 +159,7 @@ class DenormRewriteSpec extends SparkSpec {
 
   test("two registrations on the SAME fact+dim paths with different keys: lookup selects by key, both rewrite") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("denorm_rw3").toString
+    val base = tempDir("denorm_rw3")
     val factPath = s"$base/fact"; val dimPath = s"$base/dim"
     (1 to 100).map(i => (i.toLong, i % 7L, i % 5L, (i * 2).toDouble))
       .toDF("order_id", "tier_key", "alt_key", "amount")
@@ -206,7 +206,7 @@ class DenormRewriteSpec extends SparkSpec {
 
   test("a hidden directory under the fact path (stale _temporary) does not disable the rewrite") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("denorm_rw4").toString
+    val base = tempDir("denorm_rw4")
     val factPath = s"$base/fact"; val dimPath = s"$base/dim"
     (1 to 50).map(i => (i.toLong, i % 7L, i.toDouble))
       .toDF("order_id", "tier_key", "amount")

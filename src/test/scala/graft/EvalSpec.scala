@@ -15,7 +15,7 @@ import graft.queries.Registry
 class EvalSpec extends SparkSpec {
 
   private def eventsDir(rows: Seq[(Long, String, Double)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_eval_spec").toString
+    val dir = tempDir("graft_eval_spec")
     import spark.implicits._
     rows.zipWithIndex.map { case ((id, et, v), i) =>
       (id, Timestamp.valueOf(f"2024-01-${i % 28 + 1}%02d 12:00:00"), 1L, et, v)
@@ -80,7 +80,7 @@ class EvalSpec extends SparkSpec {
       ev(3, 1, 2, "view"), ev(4, 5, 2, "purchase"),
       ev(5, 2, 3, "view"), ev(6, 4, 3, "click"),
       ev(7, 1, 4, "view"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_km_spec").toString
+    val dir = tempDir("graft_km_spec")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", org.apache.spark.sql.functions.lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -105,7 +105,7 @@ class EvalSpec extends SparkSpec {
         (1 to vw).map(i => (u * 1000 + 100 + i, u, "view", 1.0)) :+
         ((u * 1000 + 999, u, "purchase", y))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_ols_spec").toString
+    val dir = tempDir("graft_ols_spec")
     rows.zipWithIndex.map { case ((id, uid, et, v), i) =>
       (id, Timestamp.valueOf(f"2024-04-${i % 28 + 1}%02d 10:00:00"), uid, et, v)
     }.toDF("event_id", "ts", "user_id", "event_type", "value")
@@ -133,7 +133,7 @@ class EvalSpec extends SparkSpec {
         (uid * 10 + 2, Timestamp.valueOf("2024-01-20 10:00:00"), uid,
           "purchase", 2 * pre))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_cuped_spec").toString
+    val dir = tempDir("graft_cuped_spec")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", org.apache.spark.sql.functions.lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -149,7 +149,7 @@ class EvalSpec extends SparkSpec {
   test("q_gini: perfect equality is 0; a hand-computed two-user split is exact") {
     import spark.implicits._
     def giniDir(users: Seq[(Long, Double)]): String = {
-      val d = java.nio.file.Files.createTempDirectory("graft_gini_spec").toString
+      val d = tempDir("graft_gini_spec")
       users.zipWithIndex.map { case ((uid, v), i) =>
         (i.toLong + 1, Timestamp.valueOf(f"2024-05-${i + 1}%02d 10:00:00"),
           uid, "purchase", v)

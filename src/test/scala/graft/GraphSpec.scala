@@ -282,7 +282,7 @@ class GraphSpec extends SparkSpec {
     // id range).
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bigid").toString
+    val dir = tempDir("graft_bigid")
     // half the ids sit in the overflow band (the old form throws while
     // EVALUATING them, matched or not); half are small so edge targets
     // (always in [0, nDocs)) exist and the graph is non-trivial

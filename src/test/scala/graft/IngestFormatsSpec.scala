@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.avro.SchemaBuilder
 import org.apache.spark.sql.Row
@@ -28,7 +27,7 @@ class IngestFormatsSpec extends SparkSpec {
     .optionalLong("n_chars").endRecord()
 
   test("avro round-trip: schema map + multi-file distributed decode are lossless") {
-    val dir = Files.createTempDirectory("avro_rt").toFile
+    val dir = new java.io.File(tempDir("avro_rt"))
     val docs = Tables.documents(spark, sfDir)
       .select("doc_id", "text", "lang", "source", "n_chars")
     val rows = docs.collect().toSeq
@@ -57,7 +56,7 @@ class IngestFormatsSpec extends SparkSpec {
         .addToSchema(org.apache.avro.Schema.create(org.apache.avro.Schema.Type.LONG)))
       .noDefault()
       .endRecord()
-    val dir = Files.createTempDirectory("avro_lt").toFile
+    val dir = new java.io.File(tempDir("avro_lt"))
     // 2024-02-29 (leap day) = epoch day 19782; 12:34:56.789012 UTC
     AvroIngest.writeFile(
       Seq(Row(19782, 19782L * 86400000000L + 45296789012L)),
@@ -71,7 +70,7 @@ class IngestFormatsSpec extends SparkSpec {
   }
 
   test("avro tolerant read dead-letters corrupt files, keeps healthy rows") {
-    val dir = Files.createTempDirectory("avro_dl").toFile
+    val dir = new java.io.File(tempDir("avro_dl"))
     val docs = Tables.documents(spark, sfDir)
       .select("doc_id", "text", "lang", "source", "n_chars")
       .limit(20).collect().toSeq
@@ -90,7 +89,7 @@ class IngestFormatsSpec extends SparkSpec {
 
   test("forward-index evidence: sorted segment pages are dictionary/RLE encoded") {
     import scala.collection.JavaConverters._
-    val out = Files.createTempDirectory("fwd_idx").toString
+    val out = tempDir("fwd_idx")
     val li = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_partkey", "l_returnflag", "l_quantity")
     SegmentWriter.write(li, out, SegmentWriter.Config(
@@ -118,7 +117,7 @@ class IngestFormatsSpec extends SparkSpec {
     // dictionary DISABLED is measurably larger on disk
     def dirBytes(d: String): Long = new java.io.File(d).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-    val noDict = Files.createTempDirectory("fwd_nodict").toString
+    val noDict = tempDir("fwd_nodict")
     li.sortWithinPartitions("l_returnflag", "l_partkey")
       .coalesce(1).write.mode("overwrite")
       .option("parquet.enable.dictionary", "false")
@@ -135,7 +134,7 @@ class IngestFormatsSpec extends SparkSpec {
     // offset present) and DOES ITS JOB (no false negatives on present
     // keys, absent probes overwhelmingly rejected) — not assumed from
     // writer options.
-    val out = Files.createTempDirectory("bloom_idx").toString
+    val out = tempDir("bloom_idx")
     val li = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_partkey", "l_returnflag")
     SegmentWriter.write(li, out, SegmentWriter.Config(
@@ -177,7 +176,7 @@ class IngestFormatsSpec extends SparkSpec {
   }
 
   test("csv tolerant read dead-letters malformed lines, keeps healthy rows") {
-    val dir = Files.createTempDirectory("csv_dl")
+    val dir = java.nio.file.Paths.get(tempDir("csv_dl"))
     java.nio.file.Files.write(dir.resolve("part.csv"),
       ("id,name,score\n" +
         "1,alice,2.5\n" +

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Tables
 import graft.sources.SegmentWriter
 
-/** The transparent json-index rewrite (plans.JsonIndexRewrite):
+/** The transparent json-index rewrite (plans.DerivedColumnRewrite):
   * get_json_object over a scan carrying SegmentWriter-derived extracted
   * columns must read the stored column instead of parsing per row, and
   * extracted-value filters must push down to the parquet scan.
@@ -12,7 +12,7 @@ import graft.sources.SegmentWriter
 class JsonIndexSpec extends SparkSpec {
 
   private lazy val segDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonidx").toString
+    val dir = tempDir("graft_jsonidx")
     SegmentWriter.write(
       Tables.events(spark, sfDir).select("event_id", "props", "value"),
       dir,

@@ -20,9 +20,9 @@ class LifecycleSpec extends SparkSpec {
   test("stream lands micro-batch files, compaction merges them, query parity holds") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val consuming = Files.createTempDirectory("consuming").toString
-    val completed = Files.createTempDirectory("completed").toString
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val consuming = tempDir("consuming")
+    val completed = tempDir("completed")
+    val ckpt = tempDir("ckpt")
     val input = MemoryStream[Event]
     val q = input.toDS().writeStream
       .format("parquet").option("path", consuming)
@@ -71,7 +71,7 @@ class LifecycleSpec extends SparkSpec {
     val src = spark.read.parquet("/root/testdata/sf0.1/events.parquet")
       .select(col("event_type"), col("user_id"),
         round(col("value") * 100).cast("long").as("vc"))
-    val base = Files.createTempDirectory("lc10x").toString
+    val base = tempDir("lc10x")
     val incoming = s"$base/in"
     src.repartition(10).write.parquet(incoming) // 10 files -> 10 micro-batches
     val factPath = s"$base/fact"; val cubePath = s"$base/cube"
@@ -115,7 +115,7 @@ class LifecycleSpec extends SparkSpec {
   }
 
   test("tolerant json ingestion splits good rows from corrupt lines") {
-    val dir = Files.createTempDirectory("jsonl")
+    val dir = java.nio.file.Paths.get(tempDir("jsonl"))
     Files.writeString(dir.resolve("part1.json"),
       """{"event_id": 1, "user_id": 10, "value": 1.5}
         |{"event_id": 2, "user_id": 20, "value": 2.5}
@@ -135,7 +135,7 @@ class LifecycleSpec extends SparkSpec {
   test("orc ingestion round-trips the events table and pushes filters to the scan") {
     val src = graft.engine.Tables.events(spark, sfDir)
       .select("event_id", "user_id", "event_type", "value")
-    val dir = Files.createTempDirectory("orc_seg").toString
+    val dir = tempDir("orc_seg")
     src.write.mode("overwrite").orc(dir)
     val back = Ingest.orc(spark, dir)
     assert(back.count() === src.count())
@@ -151,7 +151,7 @@ class LifecycleSpec extends SparkSpec {
 
   test("hybrid promotion: catalog boundary, no loss/double-serve across the swap, idempotent replay") {
     import graft.sources.HybridTable
-    val root = Files.createTempDirectory("hybrid").toString
+    val root = tempDir("hybrid")
     val ev = graft.engine.Tables.events(spark, sfDir)
       .select("event_id", "ts", "user_id", "event_type", "value")
     val cut = to_timestamp(lit("2024-01-10"))
@@ -207,8 +207,8 @@ class LifecycleSpec extends SparkSpec {
     import graft.sources.HybridTable
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val root = Files.createTempDirectory("hybrid_stream").toString
-    val ckpt = Files.createTempDirectory("hybrid_ckpt").toString
+    val root = tempDir("hybrid_stream")
+    val ckpt = tempDir("hybrid_ckpt")
     val input = MemoryStream[Event]
     // the realtime side IS a streaming parquet sink (Pinot's consuming
     // segments); promotions run in the stream's idle windows. The sink

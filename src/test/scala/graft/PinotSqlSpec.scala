@@ -184,8 +184,7 @@ class PinotSqlSpec extends SparkSpec {
     import graft.plans.StarTreeCatalog
     Graft.registerTables(spark, sfDir)
     val factPath = s"$sfDir/lineitem.parquet"
-    val cubeDir =
-      java.nio.file.Files.createTempDirectory("pql_startree").toString + "/cube"
+    val cubeDir = tempDir("pql_startree") + "/cube"
     StarTree.materializeAndRegister(
       spark.read.parquet(factPath), factPath,
       dims = Seq("l_returnflag", "l_linestatus"),

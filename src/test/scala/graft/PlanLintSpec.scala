@@ -587,13 +587,13 @@ class PlanLintSpec extends SparkSpec {
       "path-keyed for fixed-schema paths (tables and artifact layouts); " +
       "it holds no data, and keeps query builds at zero jobs"),
     "StarTreeCatalog.cubes" -> ("cube registry: writers register what " +
-      "they built; the rewrite checks each cube against the fact files"),
-    "StarTreeCatalog.relations" -> ("the registry's analyzed cube " +
-      "relations, dropped on every re-register"),
+      "they built with the fact's file stamp, and the rewrite serves a cube " +
+      "only while the fact scan's own stamp equals it"),
     "DenormCatalog.views" -> ("view registry: writers register what " +
-      "they built; the rewrite checks each view's file signatures"),
-    "DenormCatalog.relations" -> ("the registry's analyzed view " +
-      "relations, dropped on every re-register"),
+      "they built with the fact's and dim's file stamps, and the rewrite " +
+      "serves a view only while both scans' own stamps equal them"),
+    "Layouts.relations" -> ("the analyzed relations of the registered " +
+      "cubes and views, dropped on every re-register and unregister"),
     "FsLease.inProcess" -> ("the set of leases this JVM holds: " +
       "coordination state, not a memo"))
 
@@ -622,6 +622,24 @@ class PlanLintSpec extends SparkSpec {
     assert(stale.isEmpty,
       s"concurrentMapOk names fields that no longer exist — remove them: " +
         stale.toSeq.sorted.mkString(", "))
+  }
+
+  test("rewrite rules and catalogs never list the filesystem themselves") {
+    // freshness comes only from the scan's own FileIndex, through the
+    // stamp Artifacts computes (plans.Layouts): a private listing drifts
+    // from what the scan reads (hidden directories, partition discovery)
+    import scala.jdk.CollectionConverters._
+    val listing = "getFileSystem|listFiles|listStatus".r
+    val found = java.nio.file.Files.list(java.nio.file.Paths.get("src/main/scala/graft/plans"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if listing.findFirstIn(line).nonEmpty => s"${f.getFileName}:${i + 1}"
+        }
+      }.toSeq.sorted
+    assert(found.isEmpty,
+      s"filesystem listings in plans/ (compare Artifacts.stamp of the scan " +
+        s"with the registered Layouts.Input instead): ${found.mkString(", ")}")
   }
 
   /** Registry builders allowed a hand-rolled build-once guard. */

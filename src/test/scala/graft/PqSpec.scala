@@ -77,7 +77,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("materialized PQ index serves identical results to the inline path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
+    val dir = tempDir("graft_pq")
     Pq.materialize(emb, dir)
     val queries = emb.filter(col("vec_id") < 10)
     val indexed = Pq.knnPqIndexed(spark, dir, queries, emb, k = 3)
@@ -88,7 +88,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("appendToIndex: batch codes ≡ one-shot encode under the same codebooks; index serves appended rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_inc").toString
+    val dir = tempDir("graft_pq_inc")
     val half1 = emb.filter(col("vec_id") % 2 === 0)
     val half2 = emb.filter(col("vec_id") % 2 === 1)
     Pq.materialize(half1, dir)

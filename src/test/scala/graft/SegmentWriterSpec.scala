@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
@@ -9,7 +8,7 @@ import graft.sources.{DenormView, SegmentWriter}
 class SegmentWriterSpec extends SparkSpec {
 
   test("sorted, partitioned segments round-trip and prune on read") {
-    val out = Files.createTempDirectory("segments").toString
+    val out = tempDir("segments")
     val li = Tables.lineitem(spark, sfDir)
       .withColumn("ship_year", year(col("l_shipdate")))
     SegmentWriter.write(li, out, SegmentWriter.Config(
@@ -34,8 +33,8 @@ class SegmentWriterSpec extends SparkSpec {
   }
 
   test("z-ordered layout keeps per-file min/max tight on BOTH columns") {
-    val zOut = Files.createTempDirectory("zorder").toString
-    val sortOut = Files.createTempDirectory("plainsort").toString
+    val zOut = tempDir("zorder")
+    val sortOut = tempDir("plainsort")
     val li = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_partkey", "l_quantity")
     // z-order on (orderkey, partkey) vs plain sort on orderkey only
@@ -73,7 +72,7 @@ class SegmentWriterSpec extends SparkSpec {
 
   test("segment manifest prunes files on BOTH z-ordered columns, never results") {
     import graft.sources.SegmentCatalog
-    val out = Files.createTempDirectory("manifest").toString
+    val out = tempDir("manifest")
     val li = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_partkey", "l_quantity")
     SegmentWriter.writeZOrdered(li, out, "l_orderkey", "l_partkey", numSegments = 8)
@@ -111,7 +110,7 @@ class SegmentWriterSpec extends SparkSpec {
 
   test("manifest prunedRead over a Hive-partitioned dir keeps partition columns and rows") {
     import graft.sources.SegmentCatalog
-    val out = Files.createTempDirectory("manifest_part").toString
+    val out = tempDir("manifest_part")
     val ord = Tables.orders(spark, sfDir)
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
     ord.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
@@ -211,7 +210,7 @@ class SegmentWriterSpec extends SparkSpec {
   }
 
   test("derived timestamp-index columns materialize and answer DATETRUNC filters") {
-    val out = Files.createTempDirectory("segments_ts").toString
+    val out = tempDir("segments_ts")
     val li = Tables.lineitem(spark, sfDir)
     SegmentWriter.write(li, out, SegmentWriter.Config(
       derivedTimeCols = Seq("l_shipdate" -> "month")))
@@ -228,8 +227,8 @@ class SegmentWriterSpec extends SparkSpec {
   }
 
   test("compaction merges micro-batch-sized files into few sorted segments") {
-    val src = Files.createTempDirectory("segments_small").toString
-    val dest = Files.createTempDirectory("segments_compacted").toString
+    val src = tempDir("segments_small")
+    val dest = tempDir("segments_compacted")
     // simulate a streaming sink: many tiny files (one per "micro-batch")
     Tables.orders(spark, sfDir).repartition(40)
       .write.mode("overwrite").parquet(src)
@@ -247,7 +246,7 @@ class SegmentWriterSpec extends SparkSpec {
   }
 
   test("retention drops only the expired time partitions, without a rewrite") {
-    val out = Files.createTempDirectory("segments_retention").toString
+    val out = tempDir("segments_retention")
     val li = Tables.lineitem(spark, sfDir)
     SegmentWriter.write(li, out, SegmentWriter.Config(
       partitionCols = Seq(SegmentWriter.derivedName("l_shipdate", "year")),
@@ -270,8 +269,8 @@ class SegmentWriterSpec extends SparkSpec {
   }
 
   test("merge-rollup coarsens old partitions and preserves sum/count/avg exactly") {
-    val src = Files.createTempDirectory("segments_rollup_src").toString
-    val dest = Files.createTempDirectory("segments_rollup_dest").toString
+    val src = tempDir("segments_rollup_src")
+    val dest = tempDir("segments_rollup_dest")
     val ev = Tables.events(spark, sfDir)
       .select(col("event_type"), col("ts"), col("value"))
     SegmentWriter.write(ev, src, SegmentWriter.Config(
@@ -318,7 +317,7 @@ class SegmentWriterSpec extends SparkSpec {
   }
 
   test("scanStats reports files touched after partition pruning (numSegmentsQueried analog)") {
-    val out = Files.createTempDirectory("segments_stats").toString
+    val out = tempDir("segments_stats")
     val li = Tables.lineitem(spark, sfDir).withColumn("ship_year", year(col("l_shipdate")))
     SegmentWriter.write(li, out, SegmentWriter.Config(partitionCols = Seq("ship_year")))
     val back = spark.read.parquet(out)
@@ -337,7 +336,7 @@ class SegmentWriterSpec extends SparkSpec {
     val cust = Tables.customer(spark, sfDir)
     val base = cust.filter(col("c_custkey") % 5 =!= 0)
     val batch = cust.filter(col("c_custkey") % 5 === 0)
-    val path = Files.createTempDirectory("denorm").toString + "/view"
+    val path = tempDir("denorm") + "/view"
     DenormView.materialize(base, dim, "c_nationkey", path)
     val filesAfterBuild = new java.io.File(path)
       .listFiles().count(_.getName.endsWith(".parquet"))

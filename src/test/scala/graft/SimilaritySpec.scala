@@ -56,7 +56,7 @@ class SimilaritySpec extends SparkSpec {
   test("materialized ivf index answers identically to the in-session build") {
     val e = Tables.embeddings(spark, sfDir)
     val qs = e.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_idx").toString
+    val dir = tempDir("ivf_idx")
     IvfAnn.materialize(e, dir, numCentroids = 8)
     val fromIndex = IvfAnn.knnIvfIndexed(spark, dir, qs, k = 3, nProbe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -74,7 +74,7 @@ class SimilaritySpec extends SparkSpec {
     val base = e.filter(col("vec_id") % 5 =!= 0)
     val batch = e.filter(col("vec_id") % 5 === 0 && col("vec_id") >= 5)
     val qs = e.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_incr").toString
+    val dir = tempDir("ivf_incr")
     IvfAnn.materialize(base, dir, numCentroids = 8)
     IvfAnn.appendToIndex(spark, dir, batch)
     val centroids = spark.read.parquet(s"$dir/centroids")
@@ -89,7 +89,7 @@ class SimilaritySpec extends SparkSpec {
     // probe-all parity: with nProbe = numCentroids the incremental index
     // must answer exactly like a single-pass assignment of the same rows
     // against the same centroids (cell placement cannot hide results)
-    val refDir = java.nio.file.Files.createTempDirectory("ivf_ref").toString
+    val refDir = tempDir("ivf_ref")
     IvfAnn.assignCells(base.unionByName(batch), centroids)
       .repartition(col("cell")).write.partitionBy("cell").parquet(s"$refDir/assigned")
     val fromIndex = IvfAnn.knnIvfIndexed(spark, dir, qs, k = 3, nProbe = 8)

@@ -48,7 +48,7 @@ class StarTreeSpec extends SparkSpec {
   test("registered cube transparently rewrites eligible aggregates") {
     import graft.plans.StarTreeCatalog
     val factPath = s"$sfDir/lineitem.parquet"
-    val cubeDir = java.nio.file.Files.createTempDirectory("startree").toString + "/cube"
+    val cubeDir = tempDir("startree") + "/cube"
     def query() = spark.read.parquet(factPath)
       .filter(col("l_linestatus") === "F")
       .groupBy("l_returnflag")
@@ -79,7 +79,7 @@ class StarTreeSpec extends SparkSpec {
 
   test("AVG/COUNT over a nullable metric rewrite to non-null partials, not cube_cnt") {
     import graft.plans.StarTreeCatalog
-    val tmp = java.nio.file.Files.createTempDirectory("startree_null").toString
+    val tmp = tempDir("startree_null")
     val factPath = s"$tmp/fact"
     // l_extendedprice is NULL on ~half the rows: AVG/COUNT must ignore them
     Tables.lineitem(spark, sfDir)
@@ -109,7 +109,7 @@ class StarTreeSpec extends SparkSpec {
 
   test("incremental refresh merges a delta cube without rescanning history") {
     import graft.plans.StarTreeCatalog
-    val tmp = java.nio.file.Files.createTempDirectory("startree_incr").toString
+    val tmp = tempDir("startree_incr")
     val factPath = s"$tmp/fact"
     val li = Tables.lineitem(spark, sfDir)
     val old = li.filter(col("l_orderkey") % 2 === 0)
@@ -152,7 +152,7 @@ class StarTreeSpec extends SparkSpec {
 
   test("approx_count_distinct rewrites onto the cube's HLL sketches") {
     import graft.plans.StarTreeCatalog
-    val tmp = java.nio.file.Files.createTempDirectory("startree_hll").toString
+    val tmp = tempDir("startree_hll")
     val factPath = s"$tmp/fact"
     Tables.lineitem(spark, sfDir)
       .select("l_returnflag", "l_linestatus", "l_partkey", "l_quantity")
@@ -194,7 +194,7 @@ class StarTreeSpec extends SparkSpec {
 
   test("percentile_approx rewrites onto the cube's KLL sketches (PERCENTILEKLL)") {
     import graft.plans.StarTreeCatalog
-    val tmp = java.nio.file.Files.createTempDirectory("startree_kll").toString
+    val tmp = tempDir("startree_kll")
     val factPath = s"$tmp/fact"
     Tables.lineitem(spark, sfDir)
       .select("l_returnflag", "l_linestatus", "l_extendedprice", "l_quantity")
@@ -249,7 +249,7 @@ class StarTreeSpec extends SparkSpec {
   test("a multi-file cube still serves the transparent rewrite") {
     import graft.plans.StarTreeCatalog
     val factPath = s"$sfDir/lineitem.parquet"
-    val tmp = java.nio.file.Files.createTempDirectory("startree_multi").toString
+    val tmp = tempDir("startree_multi")
     val cubeDir = s"$tmp/cube"
     def query() = spark.read.parquet(factPath)
       .groupBy("l_returnflag")
@@ -276,7 +276,7 @@ class StarTreeSpec extends SparkSpec {
   test("FILTER'd / DISTINCT aggregates disqualify the rewrite and stay correct") {
     import graft.plans.StarTreeCatalog
     val factPath = s"$sfDir/lineitem.parquet"
-    val cubeDir = java.nio.file.Files.createTempDirectory("startree_filter").toString + "/cube"
+    val cubeDir = tempDir("startree_filter") + "/cube"
     // sum(x) FILTER (WHERE dim) — the predicate references only dims, so a
     // buggy rewrite would remap it onto the cube and drop/misapply it
     def filtered() = spark.read.parquet(factPath)
@@ -308,7 +308,7 @@ class StarTreeSpec extends SparkSpec {
 
   test("approx_count_distinct with tighter-than-cube precision keeps the fact scan") {
     import graft.plans.StarTreeCatalog
-    val tmp = java.nio.file.Files.createTempDirectory("startree_rsd").toString
+    val tmp = tempDir("startree_rsd")
     val factPath = s"$tmp/fact"
     Tables.lineitem(spark, sfDir)
       .select("l_returnflag", "l_linestatus", "l_partkey")
@@ -334,13 +334,13 @@ class StarTreeSpec extends SparkSpec {
   test("cube relation is analyzed once per registration, not per query") {
     import graft.plans.StarTreeCatalog
     val factPath = s"$sfDir/lineitem.parquet"
-    val cubeDir = java.nio.file.Files.createTempDirectory("startree_cache").toString + "/cube"
+    val cubeDir = tempDir("startree_cache") + "/cube"
     StarTree.materializeAndRegister(
       spark.read.parquet(factPath), factPath,
       dims = Seq("l_returnflag"), sumMetrics = Seq("l_quantity"), cubePath = cubeDir)
     try {
-      val r1 = StarTreeCatalog.cubeRelation(spark, cubeDir)
-      val r2 = StarTreeCatalog.cubeRelation(spark, cubeDir)
+      val r1 = graft.plans.Layouts.relation(spark, cubeDir)
+      val r2 = graft.plans.Layouts.relation(spark, cubeDir)
       assert(r1 eq r2, "cube relation re-analyzed on second lookup")
       // and the rule hands out fresh exprIds per rewrite (no shared ids)
       def agg() = spark.read.parquet(factPath)
@@ -351,6 +351,75 @@ class StarTreeSpec extends SparkSpec {
       assert(ids.distinct.size === ids.size,
         s"duplicate exprIds across rewritten branches: $ids")
     } finally StarTreeCatalog.unregister(factPath)
+  }
+
+  /** A day-partitioned fact with its cube registered under
+    * `registeredAs(factPath)`: (base dir, fact path).
+    */
+  private def registeredFact(registeredAs: String => String): (String, String) = {
+    import spark.implicits._
+    val base = tempDir("startree_fresh")
+    val factPath = s"$base/fact"
+    (1 to 60).map(i => (f"2024-01-${i % 3 + 1}%02d", s"d${i % 4}", i.toDouble))
+      .toDF("day", "dim", "m").write.partitionBy("day").parquet(factPath)
+    StarTree.materializeAndRegister(spark.read.parquet(factPath), registeredAs(factPath),
+      dims = Seq("dim"), sumMetrics = Seq("m"), cubePath = s"$base/cube")
+    (base, factPath)
+  }
+
+  private def dashboard(factPath: String) = spark.read.parquet(factPath)
+    .groupBy("dim").agg(sum("m").as("s"), count(lit(1)).as("c")).orderBy("dim")
+
+  private def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+
+  private def unrewritten(factPath: String) =
+    try { spark.conf.set("spark.graft.starTree.enabled", "false"); rows(dashboard(factPath)) }
+    finally spark.conf.unset("spark.graft.starTree.enabled")
+
+  /** A fact whose files changed since its cube was registered must be
+    * scanned: the cube answers for the rows it was built from only.
+    */
+  private def assertScansFact(base: String, factPath: String): Unit = {
+    val q = dashboard(factPath)
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.contains(s"$base/fact") && !plan.contains(s"$base/cube"),
+      s"a stale cube served the changed fact:\n$plan")
+    assert(rows(q) === unrewritten(factPath))
+  }
+
+  test("freshness: a retention drop on a registered fact scans the fact, not the stale cube") {
+    import graft.plans.StarTreeCatalog
+    val (base, factPath) = registeredFact(identity)
+    try {
+      assert(dashboard(factPath).queryExecution.executedPlan.toString.contains(s"$base/cube"))
+      val dropped = graft.sources.SegmentWriter
+        .applyRetention(spark, factPath, "day", cutoff = "2024-01-03").partitionsDropped
+      assert(dropped === 2L)
+      assertScansFact(base, factPath)
+    } finally StarTreeCatalog.unregister(factPath)
+  }
+
+  test("freshness: a file appended to a registered fact scans the fact, not the stale cube") {
+    import graft.plans.StarTreeCatalog
+    import spark.implicits._
+    val (base, factPath) = registeredFact(identity)
+    try {
+      assert(dashboard(factPath).queryExecution.executedPlan.toString.contains(s"$base/cube"))
+      Seq(("2024-01-02", "d1", 1000.0)).toDF("day", "dim", "m")
+        .write.mode("append").partitionBy("day").parquet(factPath)
+      assertScansFact(base, factPath)
+    } finally StarTreeCatalog.unregister(factPath)
+  }
+
+  test("freshness: a cube registered under a file:/// URI serves scans of the plain path") {
+    import graft.plans.StarTreeCatalog
+    val (base, factPath) = registeredFact(p => s"file://$p")
+    try {
+      val q = dashboard(factPath)
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains(s"$base/cube"), s"plan still scans the fact table:\n$plan")
+      assert(rows(q) === unrewritten(factPath))
+    } finally StarTreeCatalog.unregister(s"file://$factPath")
   }
 
   test("hist-cube percentiles equal the raw-scan dictionary percentiles") {

@@ -32,7 +32,7 @@ class StreamingSpec extends SparkSpec {
 
   test("file-source streaming ingestion matches the batch aggregation") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("stream_in")
+    val dir = java.nio.file.Paths.get(tempDir("stream_in"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/orders.parquet"),
       dir.resolve("part-0.parquet"))
@@ -60,7 +60,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.similarity.IvfAnn
     val e = graft.engine.Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("annserve").toString
+    val dir = tempDir("annserve")
     IvfAnn.materialize(e, dir, numCentroids = 8)
     val qVecs = e.filter(col("vec_id") < 4).select("vec_id", "embedding")
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
@@ -101,7 +101,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.similarity.IvfAnn
     val e = graft.engine.Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("annswap").toString
+    val dir = tempDir("annswap")
     // v1 index: only even vec_ids; v2 index: only odd vec_ids — any
     // answer row reveals which index generation served it
     val v1 = e.filter(col("vec_id") % 2 === 0)
@@ -141,7 +141,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.similarity.Pq
     val e = graft.engine.Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("annservepq").toString
+    val dir = tempDir("annservepq")
     // generation 1: even ids only; the odd half arrives later via
     // appendToIndex — candidate parity reveals which generation served
     Pq.materialize(e.filter(col("vec_id") % 2 === 0), dir)
@@ -457,7 +457,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("cube_stream").toString
+    val base = tempDir("cube_stream")
     val factPath = s"$base/fact"; val cubePath = s"$base/cube"
     val input = MemoryStream[Event]
     val q = Realtime.cubeRefreshSink(
@@ -501,7 +501,7 @@ class StreamingSpec extends SparkSpec {
   test("cube refresh is idempotent under foreachBatch at-least-once replay") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("cube_replay").toString
+    val base = tempDir("cube_replay")
     val factPath = s"$base/fact"; val cubePath = s"$base/cube"
     def b(rows: (Long, String, Double)*) =
       rows.toDF("user_id", "event_type", "value")
@@ -527,7 +527,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.functions.SketchFns._
-    val cubePath = java.nio.file.Files.createTempDirectory("theta_cube").toString + "/cube"
+    val cubePath = tempDir("theta_cube") + "/cube"
     def b(rows: (Long, String)*) = rows.toDF("user_id", "event_type")
     def process(batch: org.apache.spark.sql.DataFrame) =
       Realtime.processThetaBatch(batch, cubePath,
@@ -569,7 +569,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.functions.SketchFns._
-    val base = java.nio.file.Files.createTempDirectory("kll_cube").toString
+    val base = tempDir("kll_cube")
     val factPath = s"$base/fact"
     val cubePath = s"$base/cube"
     def b(rows: (String, Double)*) = rows.toDF("event_type", "value")
@@ -608,7 +608,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.functions.SketchFns._
-    val base = java.nio.file.Files.createTempDirectory("tuple_cube").toString
+    val base = tempDir("tuple_cube")
     val factPath = s"$base/fact"
     val cubePath = s"$base/cube"
     def b(rows: (String, Long, Long)*) = rows.toDF("event_type", "user_id", "cents")
@@ -651,7 +651,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.functions.SketchFns._
     import graft.operators.StarTree
-    val base = java.nio.file.Files.createTempDirectory("cube_sinks").toString
+    val base = tempDir("cube_sinks")
     val dims = Seq("event_type")
     // (event_type, user_id, cents): "view" only in batch 1 and "buy" only
     // in batch 2, so the folds both carry over cells and merge shared ones
@@ -714,7 +714,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming SCD2 maintenance matches the batch build at every prefix; replay is idempotent") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("scd2_stream").toString
+    val base = tempDir("scd2_stream")
     val factPath = s"$base/fact"
     val dimPath = s"$base/dim"
     // one user's run is SPLIT mid-batch (u1: A,A | A,B) — the rebuild
@@ -759,7 +759,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("denorm_stream").toString
+    val base = tempDir("denorm_stream")
     val viewPath = s"$base/view"
     // slowly-changing dimension: swapped between micro-batches
     @volatile var dimRows = Seq((0L, "tier-bronze"), (1L, "tier-silver"))
@@ -827,7 +827,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.operators.{Percentiles, StarTree}
-    val root = java.nio.file.Files.createTempDirectory("graft_histcube_s").toString
+    val root = tempDir("graft_histcube_s")
     val (factPath, cubePath) = (s"$root/fact", s"$root/cube")
     val rows = graft.engine.Tables.events(spark, sfDir)
       .select(col("event_type"),
@@ -981,7 +981,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming ingest dedup: self-growing band index drops cross-batch and within-batch near-dups; replay is idempotent") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("dedup_ingest").toString
+    val base = tempDir("dedup_ingest")
     val indexPath = s"$base/bandidx"
     val acceptedPath = s"$base/accepted"
     // exhaustive-recall banding (numBands = NumHashes) so exact duplicates
@@ -1021,7 +1021,7 @@ class StreamingSpec extends SparkSpec {
   test("dedupIngestSink wiring: a MemoryStream drives the self-growing index end-to-end") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("dedup_sink").toString
+    val base = tempDir("dedup_sink")
     val input = MemoryStream[(Long, String)]
     // compactEvery = 2: the maintenance cadence runs INSIDE the sink —
     // batch 2 folds batches 0-1 into the sentinel partition right after
@@ -1057,8 +1057,8 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.{FsLease, HybridTable}
     def ev(id: Long, t: String) =
       Event(id, Timestamp.valueOf(t), id % 3, "click", id.toDouble)
-    val root = java.nio.file.Files.createTempDirectory("hybrid_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("hybrid_sink_ckpt").toString
+    val root = tempDir("hybrid_sink")
+    val ckpt = tempDir("hybrid_sink_ckpt")
     val input = MemoryStream[Event]
     val q = Realtime.hybridIngestSink(
       input.toDS().toDF(), root, "ts", ckpt, promoteEvery = 2)
@@ -1104,7 +1104,7 @@ class StreamingSpec extends SparkSpec {
   test("band-index compaction: 24 micro-batches -> compact -> probe parity, replay idempotence, bounded file count") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("dedup_compact").toString
+    val base = tempDir("dedup_compact")
     val indexPath = s"$base/bandidx"
     val acceptedPath = s"$base/accepted"
     val nb = graft.dedup.MinHashLsh.NumHashes
@@ -1172,7 +1172,7 @@ class StreamingSpec extends SparkSpec {
 
   test("compaction lease: concurrent compactors are serialized — held lease rejects, stale lease breaks, interleaved runs converge") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("dedup_lease").toString
+    val base = tempDir("dedup_lease")
     val indexPath = s"$base/bandidx"; val acceptedPath = s"$base/accepted"
     val nb = graft.dedup.MinHashLsh.NumHashes
     def text(i: Int): String = (0 until 8).map(w => s"w${i}x$w").mkString(" ")
@@ -1248,7 +1248,7 @@ class StreamingSpec extends SparkSpec {
     // the r13 spec compacts once; this soaks the CADENCE — repeated folds
     // while the index keeps growing, plus a forced replay right after a
     // fold — and pins accepted-set parity against an untouched control
-    val base = java.nio.file.Files.createTempDirectory("dedup_soak").toString
+    val base = tempDir("dedup_soak")
     val soakIdx = s"$base/s_idx"; val soakAcc = s"$base/s_acc"
     val ctlIdx = s"$base/c_idx"; val ctlAcc = s"$base/c_acc"
     val nb = graft.dedup.MinHashLsh.NumHashes
@@ -1316,7 +1316,7 @@ class StreamingSpec extends SparkSpec {
     }
     def runAuc(parts: Int): (Seq[(Long, Long, Double)], String) = {
       val input = MemoryStream[graft.streaming.ScorePoint]
-      val ckpt = java.nio.file.Files.createTempDirectory(s"auc_soak_$parts").toString
+      val ckpt = tempDir(s"auc_soak_$parts")
       val name = s"auc_soak_$parts"
       val q = Realtime.aucMonitor(input.toDS())
         .writeStream.format("memory").queryName(name)
@@ -1349,7 +1349,7 @@ class StreamingSpec extends SparkSpec {
       dayTs(i), if (i == 40) 900.0 else 100.0 + (i % 5)))
     def runAnomaly(parts: Int): (Seq[String], String) = {
       val input = MemoryStream[graft.streaming.SeriesPoint]
-      val ckpt = java.nio.file.Files.createTempDirectory(s"anom_soak_$parts").toString
+      val ckpt = tempDir(s"anom_soak_$parts")
       val name = s"anom_soak_$parts"
       val q = Realtime.anomalySeries(input.toDS())
         .writeStream.format("memory").queryName(name)
@@ -1378,7 +1378,7 @@ class StreamingSpec extends SparkSpec {
       dayTs(i), if (i > 30) 160.0 else 100.0))
     def runCusum(parts: Int): (Seq[String], String) = {
       val input = MemoryStream[graft.streaming.SeriesPoint]
-      val ckpt = java.nio.file.Files.createTempDirectory(s"cusum_soak_$parts").toString
+      val ckpt = tempDir(s"cusum_soak_$parts")
       val name = s"cusum_soak_$parts"
       val q = Realtime.cusumMonitor(input.toDS())
         .writeStream.format("memory").queryName(name)
@@ -1433,7 +1433,7 @@ class StreamingSpec extends SparkSpec {
 
     // interrupted run: STOP after batch 7, restart a NEW query instance
     // from the same checkpointLocation, finish the soak
-    val baseA = java.nio.file.Files.createTempDirectory("restart_a").toString
+    val baseA = tempDir("restart_a")
     val inA = MemoryStream[(Long, String)]
     val q1 = sink(inA, baseA)
     try {
@@ -1445,7 +1445,7 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
 
     // uninterrupted twin
-    val baseB = java.nio.file.Files.createTempDirectory("restart_b").toString
+    val baseB = tempDir("restart_b")
     val inB = MemoryStream[(Long, String)]
     val q3 = sink(inB, baseB)
     try {

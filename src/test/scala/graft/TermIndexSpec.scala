@@ -5,7 +5,7 @@ import graft.engine.Tables
 import graft.functions.TextSearch
 import graft.sources.SegmentWriter
 
-/** The transparent text-index rewrite (plans.TermIndexRewrite):
+/** The transparent text-index rewrite (plans.DerivedColumnRewrite):
   * TEXT_CONTAINS over a scan carrying a SegmentWriter-derived token
   * array must read the stored terms instead of re-tokenizing per row —
   * and the rewrite must not fire for columns without a stored array,
@@ -15,7 +15,7 @@ import graft.sources.SegmentWriter
 class TermIndexSpec extends SparkSpec {
 
   private lazy val segDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_termidx").toString
+    val dir = tempDir("graft_termidx")
     SegmentWriter.write(
       Tables.documents(spark, sfDir).select("doc_id", "text", "lang"),
       dir,

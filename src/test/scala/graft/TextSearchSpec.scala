@@ -66,7 +66,7 @@ class TextSearchSpec extends SparkSpec {
   }
 
   test("index-served boolean trees equal the raw textMatch scan") {
-    val dir = java.nio.file.Files.createTempDirectory("txtbool").toString
+    val dir = tempDir("txtbool")
     graft.sources.TextIndex.materializeWithPositions(docs(), "id", "text", dir)
     val universe = docs().select(col("id").as("doc_id"))
     def idxIds(q: String): Set[Long] =
@@ -181,7 +181,7 @@ class TextSearchSpec extends SparkSpec {
   test("inverted text index answers AND/OR searches identically to the raw scan") {
     import graft.sources.TextIndex
     val corpus = graft.engine.Tables.documents(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_textidx").toString
+    val dir = tempDir("graft_textidx")
     TextIndex.materialize(corpus, "doc_id", "text", dir)
     val terms = Seq("table", "scan")
     def raw(all: Boolean) = {
@@ -201,7 +201,7 @@ class TextSearchSpec extends SparkSpec {
   test("positional index phrase search matches the raw textMatch phrase scan") {
     import graft.sources.TextIndex
     val corpus = graft.engine.Tables.documents(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_textidx_pos").toString
+    val dir = tempDir("graft_textidx_pos")
     TextIndex.materializeWithPositions(corpus, "doc_id", "text", dir)
     val indexed = TextIndex.searchPhraseIndexed(spark, dir, Seq("table", "hash"))
       .collect().map(_.getLong(0)).toSet
@@ -210,7 +210,7 @@ class TextSearchSpec extends SparkSpec {
     assert(indexed === raw)
     assert(indexed.nonEmpty, "phrase fixture matched nothing")
     // a phrase hit is necessarily a hit for the AND of its terms
-    val dirAnd = java.nio.file.Files.createTempDirectory("graft_textidx_and").toString
+    val dirAnd = tempDir("graft_textidx_and")
     TextIndex.materialize(corpus, "doc_id", "text", dirAnd)
     val andSet = TextIndex.searchIndexed(spark, dirAnd, Seq("table", "hash"))
       .collect().map(_.getLong(0)).toSet
@@ -219,7 +219,7 @@ class TextSearchSpec extends SparkSpec {
 
   test("posting-list probes push the term filter down to the parquet scan") {
     import graft.sources.TextIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft_textidx_pd").toString
+    val dir = tempDir("graft_textidx_pd")
     TextIndex.materialize(graft.engine.Tables.documents(spark, sfDir),
       "doc_id", "text", dir)
     val df = TextIndex.searchIndexed(spark, dir, Seq("table", "scan"))

@@ -22,7 +22,7 @@ class TimeseriesSpec extends SparkSpec {
     * its directory; schema mirrors the fixture events table.
     */
   private def eventsDir(rows: Seq[(Long, Timestamp, Long, String, Double)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ts_spec").toString
+    val dir = tempDir("graft_ts_spec")
     import spark.implicits._
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", org.apache.spark.sql.functions.lit("{}"))

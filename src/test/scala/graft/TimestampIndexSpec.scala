@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Tables
 import graft.sources.SegmentWriter
 
-/** The transparent timestamp-index rewrite (plans.TimestampIndexRewrite):
+/** The transparent timestamp-index rewrite (plans.DerivedColumnRewrite):
   * date_trunc over a scan carrying SegmentWriter-derived granularity
   * columns must read the derived column instead of truncating per row,
   * and truncated-value filters must push down to the parquet scan.
@@ -12,7 +12,7 @@ import graft.sources.SegmentWriter
 class TimestampIndexSpec extends SparkSpec {
 
   private lazy val segDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tsidx").toString
+    val dir = tempDir("graft_tsidx")
     SegmentWriter.write(
       Tables.events(spark, sfDir).select("event_id", "user_id", "ts", "value"),
       dir,
