@@ -10,7 +10,9 @@ import graft.functions.expressions._
   * `.config("spark.sql.extensions", "graft.engine.GraftExtensions")` or
   * `.withExtensions(new GraftExtensions)` — after that
   * `SELECT vector_dot(a, b)`, `minhash_bands(...)`, `top_k_by(...)` etc.
-  * work from plain SQL.
+  * work from plain SQL. No name here may shadow a Spark built-in
+  * (SqlInterfaceSpec checks): theta and KLL sketches are Spark's own
+  * `theta_*` and `kll_*_double` functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -62,15 +64,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     register("frequent_items", classOf[FrequentItemsAgg])(es =>
       FrequentItemsAgg(es.head, intArg(es(1), "frequent_items")))
     register("vector_avg", classOf[VectorAvgAgg])(es => VectorAvgAgg(es.head))
-    register("theta_sketch_agg", classOf[ThetaSketchAgg])(es =>
-      ThetaSketchAgg(es.head, intArg(es(1), "theta_sketch_agg")))
-    register("theta_union_agg", classOf[ThetaUnionAgg])(es =>
-      ThetaUnionAgg(es.head, intArg(es(1), "theta_union_agg")))
-    register("theta_estimate", classOf[ThetaEstimate])(es => ThetaEstimate(es.head))
-    register("theta_union", classOf[ThetaUnion])(es => ThetaUnion(es.head, es(1)))
-    register("theta_intersect", classOf[ThetaIntersect])(es =>
-      ThetaIntersect(es.head, es(1)))
-    register("theta_a_not_b", classOf[ThetaANotB])(es => ThetaANotB(es.head, es(1)))
     register("tuple_sketch_agg", classOf[TupleSketchAgg])(es =>
       TupleSketchAgg(es.head, es(1), intArg(es(2), "tuple_sketch_agg")))
     register("tuple_union_agg", classOf[TupleUnionAgg])(es =>
@@ -81,13 +74,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     register("tuple_intersect", classOf[TupleIntersect])(es =>
       TupleIntersect(es.head, es(1)))
     register("tuple_a_not_b", classOf[TupleANotB])(es => TupleANotB(es.head, es(1)))
-    register("kll_sketch_agg", classOf[KllSketchAgg])(es =>
-      KllSketchAgg(es.head, intArg(es(1), "kll_sketch_agg")))
-    register("kll_union_agg", classOf[KllUnionAgg])(es =>
-      KllUnionAgg(es.head, intArg(es(1), "kll_union_agg")))
-    register("kll_union", classOf[KllUnion])(es => KllUnion(es.head, es(1)))
-    register("kll_quantile", classOf[KllQuantile])(es => KllQuantile(es.head, es(1)))
-    register("kll_rank", classOf[KllRank])(es => KllRank(es.head, es(1)))
     // composed-builtin function (no custom expression class): the SQL name
     // expands to the same codegen'd regexp/string tree the Column API builds
     register("canonicalize_url", graft.functions.UrlFns.getClass)(es =>

@@ -4,75 +4,20 @@ import org.apache.spark.sql.Column
 
 import graft.functions.expressions._
 
-/** Column API over the theta-sketch family (KMV distinct-count sketches
-  * with full set algebra — Pinot's DISTINCTCOUNTTHETASKETCH analog).
-  * Typical shape: `groupBy(cohort).agg(thetaSketch(user_id, 4096))`, then
-  * combine the handful of per-cohort blobs with union/intersect/aNotB and
-  * read cardinalities off with `thetaEstimate`.
+/** Column API over the TUPLE sketch family (Pinot's DataSketches Tuple
+  * aggregations): a KMV sketch whose retained keys carry a summed LONG
+  * metric, so set algebra answers "how many distinct keys AND how much
+  * metric" in one O(k) blob. Metric is a long by contract — quantize
+  * money to cents per row first (the integer-grid rule).
+  *
+  * Theta and KLL sketches come from Spark itself
+  * (`org.apache.spark.sql.functions.theta_*` and `kll_*_double`, the
+  * DataSketches library Pinot's DISTINCTCOUNTTHETASKETCH and
+  * PERCENTILEKLL use); Spark has no tuple sketch, hence this object.
   */
 object SketchFns {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
-  def thetaSketch(value: Column, k: Int = 4096): Column =
-    ColumnBridge.column(
-      ThetaSketchAgg(ColumnBridge.expression(value), k).toAggregateExpression())
-
-  /** Merge PRE-BUILT sketch blobs (the cube-rollup aggregate): KMV union
-    * keeps the k smallest hashes, which is grouping-invariant — a union
-    * of cell sketches is BYTE-identical to the sketch built directly
-    * over the united rows (spec-pinned).
-    */
-  def thetaUnionAgg(sketch: Column, k: Int = 4096): Column =
-    ColumnBridge.column(
-      ThetaUnionAgg(ColumnBridge.expression(sketch), k).toAggregateExpression())
-
-  def thetaEstimate(sketch: Column): Column =
-    ColumnBridge.column(ThetaEstimate(ColumnBridge.expression(sketch)))
-
-  def thetaUnion(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      ThetaUnion(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  def thetaIntersect(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      ThetaIntersect(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  def thetaANotB(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      ThetaANotB(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** KLL-style mergeable quantile sketch (Pinot's PERCENTILEKLL analog).
-    * `groupBy(g).agg(kllSketch(value, k))` → blob; blobs union with
-    * `kllUnionAgg` (quantile CUBES); read order statistics off with
-    * `kllQuantile` / ranks with `kllRank`. Exact while n ≤ k (nothing
-    * compacts) — the regime the hash-verified twins pin.
-    */
-  def kllSketch(value: Column, k: Int = 256): Column =
-    ColumnBridge.column(
-      KllSketchAgg(ColumnBridge.expression(value), k).toAggregateExpression())
-
-  def kllUnionAgg(sketch: Column, k: Int = 256): Column =
-    ColumnBridge.column(
-      KllUnionAgg(ColumnBridge.expression(sketch), k).toAggregateExpression())
-
-  def kllUnion(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      KllUnion(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  def kllQuantile(sketch: Column, q: Column): Column =
-    ColumnBridge.column(
-      KllQuantile(ColumnBridge.expression(sketch), ColumnBridge.expression(q)))
-
-  def kllRank(sketch: Column, x: Column): Column =
-    ColumnBridge.column(
-      KllRank(ColumnBridge.expression(sketch), ColumnBridge.expression(x)))
-
-  /** TUPLE sketch family (Pinot's DataSketches Tuple aggregations): a
-    * theta sketch whose retained keys carry a summed LONG metric, so set
-    * algebra answers "how many distinct keys AND how much metric" in one
-    * O(k) blob. Metric is a long by contract — quantize money to cents
-    * per row first (the integer-grid rule).
-    */
   def tupleSketch(key: Column, metric: Column, k: Int = 4096): Column =
     ColumnBridge.column(
       TupleSketchAgg(

@@ -2,13 +2,14 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** TUPLE sketch: a KMV theta sketch whose retained entries each CARRY a
+/** TUPLE sketch: a KMV sketch whose retained entries each CARRY a
   * summary — here a summed long metric per distinct key. Where the theta
   * family answers "how many distinct users in A ∩ B", the tuple family
   * answers "how many, AND how much did they spend": the retained sample
@@ -19,10 +20,12 @@ import org.apache.spark.sql.types._
   * public algorithm: the theta/tuple sketch framework (Beyer et al.
   * SIGMOD'07; Apache DataSketches Tuple sketches).
   *
-  * Same exactness contract as ThetaState: while fewer than k distinct
-  * keys have been seen nothing trims (theta = MAX) and BOTH the distinct
-  * count and the summary sums are exact — the hash-verifiable regime the
-  * *_exact twin queries run in.
+  * Spark ships the theta family (`theta_sketch_agg` and friends) but no
+  * tuple sketch, so this one stays hand-written.
+  *
+  * Exactness: while fewer than k distinct keys have been seen nothing
+  * trims (theta = MAX) and BOTH the distinct count and the summary sums
+  * are exact — the hash-verifiable regime the *_exact twin queries run in.
   *
   * Scale shape: O(k) mergeable (hash, sum) pairs per group per map task;
   * only k (long, long) entries cross the shuffle regardless of input
@@ -83,6 +86,20 @@ final class TupleState(val k: Int) extends Serializable {
 }
 
 object TupleState {
+  /** 63-bit key hash (sign bit cleared so every hash is a valid candidate
+    * below theta). One definition, so sketches built on different
+    * columns or tables stay algebra-compatible.
+    */
+  private[graft] def hash63(v: Any): Long = {
+    val h = v match {
+      case s: UTF8String => XXH64.hashUTF8String(s, 0x7e7a5e7aL)
+      case l: Long => XXH64.hashLong(l, 0x7e7a5e7aL)
+      case i: Int => XXH64.hashLong(i.toLong, 0x7e7a5e7aL)
+      case other => XXH64.hashUTF8String(UTF8String.fromString(other.toString), 0x7e7a5e7aL)
+    }
+    h & Long.MaxValue
+  }
+
   def deserialize(bytes: Array[Byte]): TupleState = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
     val st = new TupleState(bb.getInt())
@@ -133,7 +150,7 @@ case class TupleSketchAgg(
     val key = left.eval(input)
     val m = right.eval(input)
     if (key != null && m != null)
-      buffer.add(ThetaState.hash63(key), m.asInstanceOf[Long])
+      buffer.add(TupleState.hash63(key), m.asInstanceOf[Long])
     buffer
   }
 
@@ -226,7 +243,7 @@ case class TupleSum(child: Expression)
 }
 
 /** Shared shape of the binary tuple set ops (grouped-output scalars, no
-  * hot path — CodegenFallback deliberate, same rationale as ThetaSetOp).
+  * hot path — CodegenFallback is deliberate).
   */
 sealed trait TupleSetOp extends BinaryExpression with CodegenFallback {
   override def checkInputDataTypes(): TypeCheckResult =

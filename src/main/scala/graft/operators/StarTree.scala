@@ -35,7 +35,6 @@ object StarTree {
       df: DataFrame, dims: Seq[String], sumMetrics: Seq[String],
       distinctMetrics: Seq[String] = Nil,
       quantileMetrics: Seq[String] = Nil): DataFrame = {
-    import graft.functions.SketchFns
     val aggs = sumMetrics.map(m => sum(col(m)).as(s"s_$m")) ++
       sumMetrics.map(m => count(col(m)).as(s"c_$m")) ++
       sumMetrics.map(m => min(col(m)).as(s"mn_$m")) ++
@@ -50,7 +49,7 @@ object StarTree {
       // up from the cube (exact percentiles never decompose; the
       // continuous-metric sibling of the exact buildHistCube).
       quantileMetrics.map(m =>
-        SketchFns.kllSketch(col(m).cast("double"), KllK).as(s"kll_$m")) :+
+        kll_sketch_agg_double(col(m).cast("double"), KllK).as(s"kll_$m")) :+
       count(lit(1)).as("cube_cnt")
     df.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
@@ -82,14 +81,13 @@ object StarTree {
       a: DataFrame, b: DataFrame, dims: Seq[String], sumMetrics: Seq[String],
       distinctMetrics: Seq[String] = Nil,
       quantileMetrics: Seq[String] = Nil): DataFrame = {
-    import graft.functions.SketchFns
     val aggs = sumMetrics.map(m => sum(col(s"s_$m")).as(s"s_$m")) ++
       sumMetrics.map(m => sum(col(s"c_$m")).as(s"c_$m")) ++
       sumMetrics.map(m => min(col(s"mn_$m")).as(s"mn_$m")) ++
       sumMetrics.map(m => max(col(s"mx_$m")).as(s"mx_$m")) ++
       distinctMetrics.map(m => hll_union_agg(col(s"hll_$m")).as(s"hll_$m")) ++
       quantileMetrics.map(m =>
-        SketchFns.kllUnionAgg(col(s"kll_$m"), KllK).as(s"kll_$m")) :+
+        kll_merge_agg_double(col(s"kll_$m"), KllK).as(s"kll_$m")) :+
       sum(col("cube_cnt")).as("cube_cnt")
     a.unionByName(b).groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }

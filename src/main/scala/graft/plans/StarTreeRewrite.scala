@@ -210,9 +210,9 @@ class StarTreeRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
                   if cube.quantileMetrics.contains(m.name) &&
                     cubeAttrByName.contains(s"kll_${m.name}") &&
                     acc.toString.toLong <= graft.operators.StarTree.KllK / 2 =>
-                val q = graft.functions.expressions.KllQuantile(
-                  graft.functions.expressions.KllUnionAgg(
-                    cubeAttr(s"kll_${m.name}"), graft.operators.StarTree.KllK)
+                val q = KllSketchGetQuantileDouble(
+                  KllMergeAggDouble(cubeAttr(s"kll_${m.name}"),
+                    Some(Literal(graft.operators.StarTree.KllK)))
                     .toAggregateExpression(),
                   Literal(p))
                 if (m.dataType == DoubleType) q else Cast(q, m.dataType)

@@ -952,7 +952,8 @@ object AdvancedQueries {
 
     // Theta-sketch set algebra — the capability HLL structurally lacks:
     // DIRECT intersection and difference sketches (Pinot's
-    // DISTINCTCOUNTTHETASKETCH; KMV family, Beyer et al. SIGMOD'07).
+    // DISTINCTCOUNTTHETASKETCH; KMV family, Beyer et al. SIGMOD'07, here
+    // Spark's DataSketches theta functions, sized by lgNomEntries = log2 k).
     // Per-year O(k) sketches of the ordering customers merge/intersect/
     // subtract as blobs — "customers in BOTH years" at 100 TB without
     // the exact q_sql_setops distinct shuffles, and unlike HLL
@@ -963,51 +964,49 @@ object AdvancedQueries {
     QueryDef(
       "q_theta_setops",
       (s, d) => {
-        import graft.functions.SketchFns._
         val o = Tables.orders(s, d)
           .filter(expr("year(o_orderdate) in (1996, 1997)"))
           .withColumn("yr", expr("year(o_orderdate)"))
         o.groupBy("yr")
-          .agg(thetaSketch(col("o_custkey"), 256).as("sk"))
+          .agg(theta_sketch_agg(col("o_custkey"), 8).as("sk"))
           .agg(
             first(when(col("yr") === 1996, col("sk")), ignoreNulls = true).as("sk96"),
             first(when(col("yr") === 1997, col("sk")), ignoreNulls = true).as("sk97"))
           .select(
-            thetaEstimate(col("sk96")).as("n_1996"),
-            thetaEstimate(col("sk97")).as("n_1997"),
-            thetaEstimate(thetaUnion(col("sk96"), col("sk97"))).as("n_either"),
-            thetaEstimate(thetaIntersect(col("sk96"), col("sk97"))).as("n_both"),
-            thetaEstimate(thetaANotB(col("sk96"), col("sk97"))).as("n_only_1996"))
+            theta_sketch_estimate(col("sk96")).as("n_1996"),
+            theta_sketch_estimate(col("sk97")).as("n_1997"),
+            theta_sketch_estimate(theta_union(col("sk96"), col("sk97"), 8)).as("n_either"),
+            theta_sketch_estimate(theta_intersection(col("sk96"), col("sk97"))).as("n_both"),
+            theta_sketch_estimate(theta_difference(col("sk96"), col("sk97"))).as("n_only_1996"))
       },
       None),
 
-    // The theta family's EXACT-REGIME twin: a KMV sketch with k above the
+    // The theta family's EXACT-REGIME twin: a theta sketch with k above the
     // true cardinality never trims (θ stays 1.0), so every estimate —
     // including the composed intersection/difference sketches — is the
     // EXACT set cardinality, and the whole sketch machinery becomes
     // hash-verifiable against plain DISTINCT set algebra. Same code path
     // as q_theta_setops (sketch agg → union/intersect/aNotB → estimate),
-    // k=65536 ≫ the ≤15k per-year customers at any tested sf. This is the
+    // k=2^16 ≫ the ≤15k per-year customers at any tested sf. This is the
     // operating mode a 100 TB deployment uses for dimension-sized keys;
     // trimming only starts past k distinct values.
     QueryDef(
       "q_theta_setops_exact",
       (s, d) => {
-        import graft.functions.SketchFns._
         val o = Tables.orders(s, d)
           .filter(expr("year(o_orderdate) in (1996, 1997)"))
           .withColumn("yr", expr("year(o_orderdate)"))
         o.groupBy("yr")
-          .agg(thetaSketch(col("o_custkey"), 65536).as("sk"))
+          .agg(theta_sketch_agg(col("o_custkey"), 16).as("sk"))
           .agg(
             first(when(col("yr") === 1996, col("sk")), ignoreNulls = true).as("sk96"),
             first(when(col("yr") === 1997, col("sk")), ignoreNulls = true).as("sk97"))
           .select(
-            thetaEstimate(col("sk96")).cast("long").as("n_1996"),
-            thetaEstimate(col("sk97")).cast("long").as("n_1997"),
-            thetaEstimate(thetaUnion(col("sk96"), col("sk97"))).cast("long").as("n_either"),
-            thetaEstimate(thetaIntersect(col("sk96"), col("sk97"))).cast("long").as("n_both"),
-            thetaEstimate(thetaANotB(col("sk96"), col("sk97"))).cast("long").as("n_only_1996"))
+            theta_sketch_estimate(col("sk96")).as("n_1996"),
+            theta_sketch_estimate(col("sk97")).as("n_1997"),
+            theta_sketch_estimate(theta_union(col("sk96"), col("sk97"), 16)).as("n_either"),
+            theta_sketch_estimate(theta_intersection(col("sk96"), col("sk97"))).as("n_both"),
+            theta_sketch_estimate(theta_difference(col("sk96"), col("sk97"))).as("n_only_1996"))
       },
       Some("""WITH a AS (SELECT DISTINCT o_custkey FROM orders
                          WHERE year(o_orderdate) = 1996),
@@ -1026,7 +1025,7 @@ object AdvancedQueries {
     // (Pinot's DISTINCTCOUNTTHETASKETCH star-tree metric): per-(type, day)
     // CELL sketches roll up to per-type distinct-user estimates by
     // UNIONING blobs (theta_union_agg), never rescanning raw rows — and
-    // because KMV union keeps the k smallest hashes, the rollup is
+    // because theta union keeps the k smallest hashes, the rollup is
     // grouping-invariant: the unioned sketch is byte-identical to one
     // built directly over the raw group (spec-pinned), so cube-served
     // estimates EQUAL raw-scan estimates, not merely approximate them.
@@ -1035,35 +1034,32 @@ object AdvancedQueries {
     QueryDef(
       "q_theta_cube",
       (s, d) => {
-        import graft.functions.SketchFns._
         val cells = Tables.events(s, d)
           .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-          .agg(thetaSketch(col("user_id"), 256).as("sk"))
+          .agg(theta_sketch_agg(col("user_id"), 8).as("sk"))
         cells.groupBy("event_type")
           .agg(
             count(lit(1)).as("n_cells"),
-            thetaEstimate(thetaUnionAgg(col("sk"), 256)).as("distinct_users"))
+            theta_sketch_estimate(theta_union_agg(col("sk"), 8)).as("distinct_users"))
           .orderBy("event_type")
       },
       None),
 
-    // q_theta_cube's exact-regime twin (k=65536 ≫ user cardinality): the
-    // grouping-invariant KMV union means cube-served per-type distinct
+    // q_theta_cube's exact-regime twin (k=2^16 ≫ user cardinality): the
+    // grouping-invariant theta union means cube-served per-type distinct
     // counts EQUAL the raw-scan distinct counts exactly when nothing
     // trims — hash-verified against COUNT(DISTINCT) here, pinning the
     // whole cells→union-agg→estimate rollup path, not just its bound.
     QueryDef(
       "q_theta_cube_exact",
       (s, d) => {
-        import graft.functions.SketchFns._
         val cells = Tables.events(s, d)
           .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-          .agg(thetaSketch(col("user_id"), 65536).as("sk"))
+          .agg(theta_sketch_agg(col("user_id"), 16).as("sk"))
         cells.groupBy("event_type")
           .agg(
             count(lit(1)).as("n_cells"),
-            thetaEstimate(thetaUnionAgg(col("sk"), 65536)).cast("long")
-              .as("distinct_users"))
+            theta_sketch_estimate(theta_union_agg(col("sk"), 16)).as("distinct_users"))
           .orderBy("event_type")
       },
       Some("""SELECT event_type,
@@ -1075,31 +1071,30 @@ object AdvancedQueries {
     // audience-overlap matrix a dashboard renders across all segment
     // pairs, answered from the same per-segment theta sketches
     // q_theta_setops maintains (J = |A∩B| / |A∪B|, both estimated from
-    // the merged KMV state — inexpressible with HLL alone, which cannot
+    // the merged theta state — inexpressible with HLL alone, which cannot
     // intersect). The pairwise join runs on the 5-row per-type sketch
     // dictionary, never raw rows; rows-only by design, ThetaSketchSpec
     // bounds every estimate against the exact Jaccard.
     QueryDef(
       "q_theta_jaccard",
       (s, d) => {
-        import graft.functions.SketchFns._
         val sk = Tables.events(s, d)
           .groupBy("event_type")
-          .agg(thetaSketch(col("user_id"), 256).as("sk"))
+          .agg(theta_sketch_agg(col("user_id"), 8).as("sk"))
         val a = sk.select(col("event_type").as("type_a"), col("sk").as("ska"))
         val b = sk.select(col("event_type").as("type_b"), col("sk").as("skb"))
         a.join(b, col("type_a") < col("type_b"))
           .select(col("type_a"), col("type_b"),
             round(
-              thetaEstimate(thetaIntersect(col("ska"), col("skb"))) /
-                thetaEstimate(thetaUnion(col("ska"), col("skb"))), 4)
+              theta_sketch_estimate(theta_intersection(col("ska"), col("skb"))) /
+                theta_sketch_estimate(theta_union(col("ska"), col("skb"), 8)), 4)
               .as("jaccard_est"))
           .orderBy("type_a", "type_b")
       },
       None),
 
-    // q_theta_jaccard's EXACT-REGIME twin (k=65536 ≫ user cardinality):
-    // untrimmed KMV sketches retain every distinct key, so est(A∩B) and
+    // q_theta_jaccard's EXACT-REGIME twin (k=2^16 ≫ user cardinality):
+    // untrimmed theta sketches retain every distinct key, so est(A∩B) and
     // est(A∪B) are the true cohort cardinalities and the sketch-served
     // Jaccard EQUALS the exact audience overlap — hash-verified against
     // the plain distinct-set computation. Both engines divide the same
@@ -1108,21 +1103,18 @@ object AdvancedQueries {
     QueryDef(
       "q_theta_jaccard_exact",
       (s, d) => {
-        import graft.functions.SketchFns._
         val sk = Tables.events(s, d)
           .groupBy("event_type")
-          .agg(thetaSketch(col("user_id"), 65536).as("sk"))
+          .agg(theta_sketch_agg(col("user_id"), 16).as("sk"))
         val a = sk.select(col("event_type").as("type_a"), col("sk").as("ska"))
         val b = sk.select(col("event_type").as("type_b"), col("sk").as("skb"))
         a.join(b, col("type_a") < col("type_b"))
           .select(col("type_a"), col("type_b"),
-            thetaEstimate(thetaIntersect(col("ska"), col("skb"))).cast("long")
-              .as("n_both"),
-            thetaEstimate(thetaUnion(col("ska"), col("skb"))).cast("long")
-              .as("n_either"),
+            theta_sketch_estimate(theta_intersection(col("ska"), col("skb"))).as("n_both"),
+            theta_sketch_estimate(theta_union(col("ska"), col("skb"), 16)).as("n_either"),
             round(
-              thetaEstimate(thetaIntersect(col("ska"), col("skb"))) /
-                thetaEstimate(thetaUnion(col("ska"), col("skb"))), 6)
+              theta_sketch_estimate(theta_intersection(col("ska"), col("skb"))) /
+                theta_sketch_estimate(theta_union(col("ska"), col("skb"), 16)), 6)
               .as("jaccard"))
           .orderBy("type_a", "type_b")
       },
@@ -2188,10 +2180,10 @@ object AdvancedQueries {
       None),
 
     // q_rolling_active_sketch's EXACT-REGIME twin, hash-verified: HLL has
-    // no exact regime, but the theta/KMV machinery does — at k = 65536 ≫
+    // no exact regime, but the theta sketch does — at k = 2^16 ≫
     // user cardinality nothing trims, the per-day sketch IS the distinct
     // user-id set, and the window's theta_union_agg is the exact set
-    // union (grouping-invariant KMV, the q_theta_cube_exact property). So
+    // union (grouping-invariant theta union, the q_theta_cube_exact property). So
     // the whole day-sketch → window-union → estimate rollup path pins
     // against the exact q_rolling_active oracle, while keeping the sketch
     // plan's 100 TB shape: user ids shuffle ONCE (daily rollup), the
@@ -2199,11 +2191,10 @@ object AdvancedQueries {
     QueryDef(
       "q_rolling_active_theta_exact",
       (s, d) => {
-        import graft.functions.SketchFns._
         val daily = Tables.events(s, d)
           .select(date_trunc("day", col("ts")).as("day"), col("user_id"))
           .groupBy("day")
-          .agg(thetaSketch(col("user_id"), 65536).as("sk"))
+          .agg(theta_sketch_agg(col("user_id"), 16).as("sk"))
         val bound = daily.agg(max("day").as("hi"))
         daily.select(col("day"), col("sk"),
             explode(expr("sequence(day, day + interval 6 days, interval 1 day)"))
@@ -2216,8 +2207,8 @@ object AdvancedQueries {
             // matching when() branch — max() is NULL, but the oracle's
             // count(DISTINCT CASE ...) yields 0 for the same rows
             coalesce(max(when(col("wday") === col("day"),
-              thetaEstimate(col("sk")))).cast("long"), lit(0L)).as("dau"),
-            thetaEstimate(thetaUnionAgg(col("sk"), 65536)).cast("long").as("wau"))
+              theta_sketch_estimate(col("sk")))), lit(0L)).as("dau"),
+            theta_sketch_estimate(theta_union_agg(col("sk"), 16)).as("wau"))
           .select(col("wday").as("day"), col("dau"), col("wau"))
           .orderBy("day")
       },

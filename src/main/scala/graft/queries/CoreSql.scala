@@ -239,26 +239,25 @@ object CoreSql {
           .orderBy("l_returnflag"),
       None),
 
-    // PERCENTILEKLL proper — the engine's OWN mergeable quantile sketch
-    // (functions/expressions/KllSketch.scala; Karnin-Lang-Liberty FOCS'16,
-    // the blob Pinot stores per segment and merges at query time): O(k)
-    // partial state per group per map task, so only ~k doubles ever cross
-    // the shuffle. k=256 ≪ group sizes here, so compaction genuinely
-    // fires — approximate by design (rows-only; KllSpec bounds the rank
-    // error and pins the exact-below-k regime).
+    // PERCENTILEKLL proper — Spark's KLL sketch (kll_sketch_agg_double,
+    // DataSketches' Karnin-Lang-Liberty FOCS'16 sketch, the blob Pinot
+    // stores per segment and merges at query time): O(k) partial state
+    // per group per map task, so only ~k doubles ever cross the shuffle.
+    // k=256 ≪ group sizes here, so compaction genuinely fires, and it
+    // compacts with an unseeded coin, as Pinot's KLL does: the answer
+    // varies run to run within the rank-error bound — rows-only; KllSpec
+    // bounds the rank error and pins the exact-below-k regime.
     QueryDef(
       "q_percentile_kll",
-      (s, d) => {
-        import graft.functions.SketchFns._
+      (s, d) =>
         Tables.events(s, d)
           .groupBy("event_type")
-          .agg(kllSketch(col("value"), 256).as("sk"))
+          .agg(kll_sketch_agg_double(col("value"), 256).as("sk"))
           .select(col("event_type"),
-            round(kllQuantile(col("sk"), lit(0.5)), 4).as("p50_est"),
-            round(kllQuantile(col("sk"), lit(0.9)), 4).as("p90_est"),
-            round(kllRank(col("sk"), lit(50.0)), 4).as("rank_50"))
-          .orderBy("event_type")
-      },
+            round(kll_sketch_get_quantile_double(col("sk"), lit(0.5)), 4).as("p50_est"),
+            round(kll_sketch_get_quantile_double(col("sk"), lit(0.9)), 4).as("p90_est"),
+            round(kll_sketch_get_rank_double(col("sk"), lit(50.0)), 4).as("rank_50"))
+          .orderBy("event_type"),
       None),
 
     // Pinot DISTINCTCOUNTBITMAP: EXACT distinct count through a MERGEABLE
@@ -289,23 +288,23 @@ object CoreSql {
 
     // q_percentile_kll's EXACT-REGIME twin (the theta-twin promotion
     // pattern): with k above every group's row count nothing ever
-    // compacts, the sketch IS the sorted multiset, and kll_quantile
-    // returns the true rank-ceil(q·n) order statistic — hash-verified
-    // against an explicit rank-selection oracle. Raw stored doubles are
-    // selected, never combined, so no rounding discipline is needed.
+    // compacts, the sketch IS the sorted multiset, and
+    // kll_sketch_get_quantile_double returns the true rank-ceil(q·n) order
+    // statistic — hash-verified against an explicit rank-selection
+    // oracle. k=65535 is Spark's ceiling; the largest group at sf0.1 has
+    // ~20k rows. Raw stored doubles are selected, never combined, so no
+    // rounding discipline is needed.
     QueryDef(
       "q_percentile_kll_exact",
-      (s, d) => {
-        import graft.functions.SketchFns._
+      (s, d) =>
         Tables.events(s, d)
           .groupBy("event_type")
-          .agg(kllSketch(col("value"), 65536).as("sk"))
+          .agg(kll_sketch_agg_double(col("value"), 65535).as("sk"))
           .select(col("event_type"),
-            kllQuantile(col("sk"), lit(0.25)).as("p25"),
-            kllQuantile(col("sk"), lit(0.5)).as("p50"),
-            kllQuantile(col("sk"), lit(0.9)).as("p90"))
-          .orderBy("event_type")
-      },
+            kll_sketch_get_quantile_double(col("sk"), lit(0.25)).as("p25"),
+            kll_sketch_get_quantile_double(col("sk"), lit(0.5)).as("p50"),
+            kll_sketch_get_quantile_double(col("sk"), lit(0.9)).as("p90"))
+          .orderBy("event_type"),
       Some("""WITH st AS (SELECT event_type, value,
                                  row_number() OVER (PARTITION BY event_type
                                                     ORDER BY value) AS rn,
@@ -322,24 +321,23 @@ object CoreSql {
 
     // Mergeable QUANTILE CUBE (Pinot's PERCENTILEKLL as a star-tree
     // metric): per-(type, day) CELL sketches roll up to per-type
-    // quantiles by unioning blobs (kll_union_agg) — raw rows are never
-    // rescanned at serve time. In the untrimmed regime the union is the
-    // exact multiset of the united cells, so the whole
-    // cells→union→quantile path is hash-verified (q_theta_cube_exact's
+    // quantiles by merging blobs (kll_merge_agg_double) — raw rows are
+    // never rescanned at serve time. In the uncompacted regime the merge
+    // is the exact multiset of the united cells, so the whole
+    // cells→merge→quantile path is hash-verified (q_theta_cube_exact's
     // argument, for order statistics).
     QueryDef(
       "q_kll_cube",
       (s, d) => {
-        import graft.functions.SketchFns._
         val cells = Tables.events(s, d)
           .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-          .agg(kllSketch(col("value"), 65536).as("sk"))
+          .agg(kll_sketch_agg_double(col("value"), 65535).as("sk"))
         cells.groupBy("event_type")
           .agg(count(lit(1)).as("n_cells"),
-            kllUnionAgg(col("sk"), 65536).as("usk"))
+            kll_merge_agg_double(col("sk"), 65535).as("usk"))
           .select(col("event_type"), col("n_cells"),
-            kllQuantile(col("usk"), lit(0.5)).as("p50"),
-            kllQuantile(col("usk"), lit(0.9)).as("p90"))
+            kll_sketch_get_quantile_double(col("usk"), lit(0.5)).as("p50"),
+            kll_sketch_get_quantile_double(col("usk"), lit(0.9)).as("p90"))
           .orderBy("event_type")
       },
       Some("""WITH st AS (SELECT event_type, value,

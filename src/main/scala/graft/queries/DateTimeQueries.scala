@@ -606,57 +606,26 @@ object DateTimeQueries {
     // significance): median of the pairwise slopes (x_j − x_i)/(t_j −
     // t_i) over the day dictionary. Each slope is ONE IEEE division of
     // exact longs (cents diff / day diff) — identical bit pattern in
-    // both engines — and the quantile SELECTION runs in the KLL sketch's
-    // exact regime (k ≥ pair count: nothing compacts, the sketch IS the
-    // sorted multiset, kll_quantile returns the true rank-ceil(q·m)
-    // order statistic — the q_percentile_kll_exact argument), so the
-    // whole thing is mergeable and distributed with NO global sort. k is
-    // derived from the day count and the precondition is require()d, so
-    // the regime can't silently expire as the series grows (the r9
-    // ADVICE hazard: ≥363 days used to overflow the fixed k).
+    // both engines — and the quartiles are percentile_disc, which returns
+    // the true rank-ceil(q·m) order statistic the oracle selects, at any
+    // pair count.
     QueryDef(
       "q_theil_sen",
       (s, d) => {
-        import graft.functions.SketchFns._
         val day = Tables.events(s, d)
           .groupBy(date_trunc("day", col("ts")).as("day"))
           .agg(sum(round(col("value") * 100).cast("long")).as("rev_c"))
-        // Machine-check the exact-regime precondition instead of letting
-        // it silently expire: the KLL sketch is the exact sorted multiset
-        // only while k ≥ n(n−1)/2 slope pairs. The day count is BOUNDED
-        // from parquet FOOTER ts statistics (span in days ≥ distinct
-        // days — a driver-side footer read, zero Spark jobs at build;
-        // the BuildLazinessSpec discipline), falling back to a day-
-        // dictionary count only when a writer omitted column stats.
-        // k sized to the bound is still exact: k ≥ bound ≥ actual pairs.
-        // Past ~15 years of daily data the exact sketch would stop being
-        // a sensible buffer — fail loudly with the alternative rather
-        // than silently turning approximate under an exactness oracle.
-        val nd = graft.sources.SegmentCatalog
-          .metadataColumnRangeLong(s, s"$d/events.parquet", "ts") match {
-            case Some((loNs, hiNs)) => (hiNs - loNs) / 86400000000000L + 1
-            case None => day.count()
-          }
-        val pairs = nd * (nd - 1) / 2
-        require(pairs <= (1L << 24),
-          s"q_theil_sen exact regime needs a k >= n(n-1)/2 = $pairs buffer; " +
-            "beyond ~5793 days use the bounded-error KLL regime (fixed k, " +
-            "drop the exactness oracle) or pre-thin the day series")
-        val k = math.max(65536L, pairs).toInt
+        def slopeQ(q: Double) =
+          expr(s"percentile_disc($q) WITHIN GROUP (ORDER BY slope_c)")
         val a = day.select(col("day").as("di"), col("rev_c").as("xi"))
         val b = day.select(col("day").as("dj"), col("rev_c").as("xj"))
         a.join(b, col("di") < col("dj"))
           .select(((col("xj") - col("xi")).cast("double") /
             datediff(col("dj"), col("di")).cast("double")).as("slope_c"))
           .agg(count(lit(1)).as("n_pairs"),
-            kllSketch(col("slope_c"), k).as("sk"))
-          .select(col("n_pairs"),
-            round(kllQuantile(col("sk"), lit(0.25)) / 100, 6)
-              .as("slope_q25_d"),
-            round(kllQuantile(col("sk"), lit(0.5)) / 100, 6)
-              .as("slope_med_d"),
-            round(kllQuantile(col("sk"), lit(0.75)) / 100, 6)
-              .as("slope_q75_d"))
+            round(slopeQ(0.25) / 100, 6).as("slope_q25_d"),
+            round(slopeQ(0.5) / 100, 6).as("slope_med_d"),
+            round(slopeQ(0.75) / 100, 6).as("slope_q75_d"))
       },
       Some("""WITH day AS (SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
                                   sum(CAST(round(value * 100) AS BIGINT)) AS rev_c

@@ -114,7 +114,7 @@ object StarTreeQueries {
     // sketch metric family over CONTINUOUS metrics — the approximate
     // sibling of the exact hist-cube q_percentile_cube): the fact table
     // registers a KLL sketch per cube cell and the optimizer rewrites the
-    // user-declared percentile_approx group-by onto kll_quantile over a
+    // user-declared percentile_approx group-by onto a KLL quantile over a
     // union of cell sketches — the fact is never rescanned. Approximate
     // by design (no SQL oracle); StarTreeSpec bounds the served median
     // within 2% of exact, asserts the cube-scan plan shape, and pins both
@@ -170,7 +170,7 @@ object StarTreeQueries {
     // argument pushed through the TRANSPARENT REWRITE): the fact is one
     // ship month (≤ 8k rows at every verified sf, far under KllK=16384),
     // so no cell sketch and no serve-time union ever compacts — the
-    // cube-served kll_quantile IS the true rank-ceil(q·n) order
+    // cube-served KLL quantile IS the true rank-ceil(q·n) order
     // statistic, and the whole register → rewrite → cell-union →
     // quantile path hash-verifies against an explicit rank-selection
     // oracle over the raw rows. The rewrite fires on the same

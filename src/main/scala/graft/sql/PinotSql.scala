@@ -351,20 +351,25 @@ object PinotSql {
           s"approx_count_distinct(${args.head}, ${"%.6f".format(rsd)}D)"
         }
       case "DISTINCTCOUNTTHETASKETCH" =>
-        // Pinot returns the rounded LONG estimate; the optional 2nd arg
-        // carries sketch parameters — honor nominalEntries (the one that
-        // changes the answer) and reject anything else loudly rather
-        // than translate silently-differently
+        // Pinot returns the rounded LONG estimate (theta_sketch_estimate's
+        // type); the optional 2nd arg carries sketch parameters — honor
+        // nominalEntries (the one that changes the answer) and reject
+        // anything else loudly rather than translate silently-differently.
+        // DataSketches rounds nominalEntries up to a power of two, and
+        // Spark's theta_sketch_agg takes its log2.
         arity(1, 2)
         val nominal =
-          if (args.size == 1) 4096
+          if (args.size == 1) 4096L
           else unquote(args(1)).trim match {
-            case ThetaNominal(n) => n.toInt
+            case ThetaNominal(n) => n.toLongOption.getOrElse(Long.MaxValue)
             case other => throw new IllegalArgumentException(
               "DISTINCTCOUNTTHETASKETCH: unsupported parameter string " +
                 s"'$other' (supported: nominalEntries=<int>)")
           }
-        s"CAST(round(theta_estimate(theta_sketch_agg(${args.head}, $nominal))) AS BIGINT)"
+        require(nominal >= 16 && nominal <= (1L << 26),
+          s"DISTINCTCOUNTTHETASKETCH: nominalEntries $nominal outside [16, 2^26]")
+        val lg = 64 - java.lang.Long.numberOfLeadingZeros(nominal - 1)
+        s"theta_sketch_estimate(theta_sketch_agg(${args.head}, $lg))"
       case "SEGMENTPARTITIONEDDISTINCTCOUNT" =>
         // exact under Pinot's partitioning assumption; Spark's shuffle
         // makes it exact unconditionally
@@ -426,7 +431,9 @@ object PinotSql {
               case Some("EST") | Some("TDIGEST") =>
                 s"approx_percentile(${args.head}, ${level}D)"
               case Some("KLL") =>
-                s"kll_quantile(kll_sketch_agg(${args.head}, 65536), ${level}D)"
+                // k = 65535, Spark's ceiling: exact below 65535 rows per group
+                s"kll_sketch_get_quantile_double(" +
+                  s"kll_sketch_agg_double(CAST(${args.head} AS DOUBLE), 65535), ${level}D)"
               case _ => dflt
             }
           case _ => dflt

@@ -454,53 +454,65 @@ object Realtime {
       StarTree.mergeHistCubes(_, _, dims, metric))
   }
 
-  /** Streaming DISTINCT-COUNT cube via theta sketches. KMV union is
-    * SET-idempotent (re-merging the hashes of an already-folded batch
-    * changes nothing), so an at-least-once re-delivery needs no archive
-    * and no rebuild path — the delta folds unconditionally, every time.
-    * State per dim cell is O(k) regardless of ingested volume, and the
-    * folded sketches keep the FULL set algebra: union/intersect/a-not-b
-    * across cells still work on the materialized cube.
+  /** Streaming DISTINCT-COUNT cube via theta sketches (Spark's
+    * `theta_sketch_agg`, `k` nominal entries, a power of two in
+    * [16, 2^26]). Theta union is SET-idempotent (re-merging the hashes of
+    * an already-folded batch changes nothing), so an at-least-once
+    * re-delivery needs no archive and no rebuild path — the delta folds
+    * unconditionally, every time. State per dim cell is O(k) regardless
+    * of ingested volume, and the folded sketches keep the FULL set
+    * algebra: union/intersection/difference across cells still work on
+    * the materialized cube.
     */
   def thetaCubeRefreshSink(
       stream: DataFrame, cubePath: String,
       dims: Seq[String], valueCol: String, k: Int,
-      checkpointDir: String): StreamingQuery =
+      checkpointDir: String): StreamingQuery = {
+    thetaLgNomEntries(k)
     foreachBatchSink(stream, checkpointDir)((batch, _) =>
       processThetaBatch(batch, cubePath, dims, valueCol, k))
+  }
+
+  /** log2 of a theta sketch's nominal entries `k`. */
+  private def thetaLgNomEntries(k: Int): Int = {
+    require(k >= 16 && k <= (1 << 26) && Integer.bitCount(k) == 1,
+      s"theta sketch k must be a power of two in [16, 2^26], got $k")
+    Integer.numberOfTrailingZeros(k)
+  }
 
   private[graft] def processThetaBatch(
       batch: DataFrame, cubePath: String,
       dims: Seq[String], valueCol: String, k: Int): Unit = {
-    import graft.functions.SketchFns._
+    val lg = thetaLgNomEntries(k)
     foldCubeBatch(batch, cubePath, archive = None,
-      sketchCube(dims, thetaSketch(col(valueCol), k)),
-      mergeSketchCells(dims, thetaUnion))
+      sketchCube(dims, theta_sketch_agg(col(valueCol), lg)),
+      mergeSketchCells(dims, theta_union(_, _, lg)))
   }
 
-  /** Streaming QUANTILE cube via KLL sketches: per-cell state is O(k)
+  /** Streaming QUANTILE cube via KLL sketches (Spark's
+    * `kll_sketch_agg_double`, 8 ≤ k ≤ 65535): per-cell state is O(k)
     * regardless of ingested volume, and the folded blobs keep composing
-    * (any coarser grouping unions the cells). KLL union is weight-ADDITIVE,
+    * (any coarser grouping merges the cells). KLL merge is weight-ADDITIVE,
     * so the sink keeps the archived replay guard (`foldCubeBatch`). The
-    * trade vs the hist cube: CONTINUOUS metrics work (any double column)
-    * at bounded-error instead of exact percentiles — exact while cells
-    * stay under k.
+    * trade vs the hist cube: CONTINUOUS metrics work (any numeric column,
+    * read as double) at bounded rank error instead of exact percentiles —
+    * exact while cells stay under k.
     */
   def kllCubeRefreshSink(
       stream: DataFrame, factPath: String, cubePath: String,
       dims: Seq[String], valueCol: String, k: Int,
-      checkpointDir: String): StreamingQuery =
+      checkpointDir: String): StreamingQuery = {
+    require(k >= 8 && k <= 65535, s"KLL sketch k must be in [8, 65535], got $k")
     foreachBatchSink(stream, checkpointDir)(
       processKllCubeBatch(_, _, factPath, cubePath, dims, valueCol, k))
+  }
 
   private[graft] def processKllCubeBatch(
       batch: DataFrame, id: Long, factPath: String, cubePath: String,
-      dims: Seq[String], valueCol: String, k: Int): Unit = {
-    import graft.functions.SketchFns._
+      dims: Seq[String], valueCol: String, k: Int): Unit =
     foldCubeBatch(batch, cubePath, Some(factPath -> id),
-      sketchCube(dims, kllSketch(col(valueCol), k)),
-      mergeSketchCells(dims, kllUnion))
-  }
+      sketchCube(dims, kll_sketch_agg_double(col(valueCol).cast("double"), k)),
+      mergeSketchCells(dims, kll_sketch_merge_double))
 
   /** Streaming TUPLE-sketch cube — (distinct count AND metric total) per
     * cell: tuple blobs carry a summed long metric per retained key, so

@@ -76,7 +76,7 @@ class PinotSqlSpec extends SparkSpec {
     assert(t.sql ===
       "SELECT sum(DISTINCT q) AS ds, avg(DISTINCT q) AS da, " +
         "(max(p) - min(p)) AS r, count(DISTINCT k) AS dc, " +
-        "CAST(round(theta_estimate(theta_sketch_agg(u, 4096))) AS BIGINT) AS dt FROM t")
+        "theta_sketch_estimate(theta_sketch_agg(u, 12)) AS dt FROM t")
     // the theta mapping runs end-to-end through the registered session
     // functions and is EXACT below the nominal-entry count
     val n = spark.sql(PinotSql.translate(
@@ -84,6 +84,23 @@ class PinotSqlSpec extends SparkSpec {
       .replace("FROM src", "FROM (SELECT explode(sequence(1, 500)) AS id)"))
       .head().getLong(0)
     assert(n === 500L)
+  }
+
+  test("theta nominalEntries round up to a power of two; sizes outside [16, 2^26] are rejected") {
+    def lg(n: Long): String = PinotSql.translate(
+      s"SELECT DISTINCTCOUNTTHETASKETCH(u, 'nominalEntries=$n') AS d FROM t").sql
+    assert(lg(4096) === "SELECT theta_sketch_estimate(theta_sketch_agg(u, 12)) AS d FROM t")
+    assert(lg(65536) === "SELECT theta_sketch_estimate(theta_sketch_agg(u, 16)) AS d FROM t")
+    assert(lg(5000) === "SELECT theta_sketch_estimate(theta_sketch_agg(u, 13)) AS d FROM t")
+    for (n <- Seq(8L, 1L << 27))
+      assert(intercept[IllegalArgumentException](lg(n)).getMessage
+        .contains("outside [16, 2^26]"), n)
+    // PERCENTILEKLL reads Spark's KLL at its largest k, exact below 65535 rows
+    val kll = PinotSql.translate("SELECT PERCENTILEKLL50(id) AS p FROM src").sql
+    assert(kll === "SELECT kll_sketch_get_quantile_double(" +
+      "kll_sketch_agg_double(CAST(id AS DOUBLE), 65535), 0.5D) AS p FROM src")
+    assert(spark.sql(kll.replace("FROM src", "FROM (SELECT explode(sequence(1, 500)) AS id)"))
+      .head().getDouble(0) === 250.0)
   }
 
   test("FIRSTWITHTIME/LASTWITHTIME drop the type tag; MV aggs expand") {
@@ -115,7 +132,7 @@ class PinotSqlSpec extends SparkSpec {
     // theta nominalEntries changes the sketch size the estimate rides on
     assert(PinotSql.translate(
       "SELECT DISTINCTCOUNTTHETASKETCH(u, 'nominalEntries=65536') AS d FROM t").sql
-      === "SELECT CAST(round(theta_estimate(theta_sketch_agg(u, 65536))) AS BIGINT) AS d FROM t")
+      === "SELECT theta_sketch_estimate(theta_sketch_agg(u, 16)) AS d FROM t")
     val badParam = intercept[IllegalArgumentException](PinotSql.translate(
       "SELECT DISTINCTCOUNTTHETASKETCH(u, 'samplingProbability=0.5') FROM t"))
     assert(badParam.getMessage.contains("unsupported parameter"))

@@ -149,7 +149,7 @@ class PlanLintSpec extends SparkSpec {
     // scalar n row broadcasts for the variance term
     "q_trend_mk",
     // dictionary × dictionary: pairwise slopes over the day dictionary;
-    // quantile selection is a mergeable KLL exact-regime sketch (no sort)
+    // quantile selection is percentile_disc's value-count map (no sort)
     "q_theil_sen",
     // scalar-N pattern: the single-row (n, tot, g) totals broadcast onto
     // the 20-row jackknife block dictionary
@@ -539,6 +539,10 @@ class PlanLintSpec extends SparkSpec {
     // (d): q_histogram_fd's h rounds ONE scalar computed from integer
     // IQR picks and a count — no accumulation-order sensitivity
     "q_mutual_info", "q_histogram_fd",
+    // (d): q_theil_sen's quartiles are percentile_disc ORDER-STATISTIC
+    // picks of one stored slope (one IEEE division of exact longs, the
+    // same bits in both engines) divided by 100 once — no accumulation
+    "q_theil_sen",
     // (b): q_histogram_eqdepth's lo/hi are min/max ORDER-STATISTIC picks
     // over the integer-cent dictionary (__v is an exact whole-cent
     // double) divided by 100 once — exact picks, one scalar division, no

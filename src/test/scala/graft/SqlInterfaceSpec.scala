@@ -99,13 +99,13 @@ class SqlInterfaceSpec extends SparkSpec {
     // below k, plus direct intersection of two cohort sketches
     val row = spark.sql(
       """WITH sk AS (SELECT
-           theta_sketch_agg(CASE WHEN event_type = 'click' THEN user_id END, 1024) AS c,
-           theta_sketch_agg(CASE WHEN event_type = 'purchase' THEN user_id END, 1024) AS p
+           theta_sketch_agg(CASE WHEN event_type = 'click' THEN user_id END, 10) AS c,
+           theta_sketch_agg(CASE WHEN event_type = 'purchase' THEN user_id END, 10) AS p
          FROM events)
-         SELECT theta_estimate(c) AS nc, theta_estimate(p) AS np,
-                theta_estimate(theta_intersect(c, p)) AS nboth,
-                theta_estimate(theta_union(c, p)) AS neither,
-                theta_estimate(theta_a_not_b(c, p)) AS nonly
+         SELECT theta_sketch_estimate(c) AS nc, theta_sketch_estimate(p) AS np,
+                theta_sketch_estimate(theta_intersection(c, p)) AS nboth,
+                theta_sketch_estimate(theta_union(c, p, 10)) AS neither,
+                theta_sketch_estimate(theta_difference(c, p)) AS nonly
          FROM sk""").head()
     val exact = graft.engine.Tables.events(spark, sfDir)
       .filter(col("event_type").isin("click", "purchase"))
@@ -116,7 +116,7 @@ class SqlInterfaceSpec extends SparkSpec {
     val both = exact.getOrElse("click+purchase", 0L)
     val conly = exact.getOrElse("click", 0L)
     val ponly = exact.getOrElse("purchase", 0L)
-    // k=1024 exceeds the fixture cardinality, so every estimate is exact
+    // k=2^10 exceeds the fixture cardinality, so every estimate is exact
     assert(row.getLong(0) === conly + both)
     assert(row.getLong(1) === ponly + both)
     assert(row.getLong(2) === both)
@@ -126,9 +126,9 @@ class SqlInterfaceSpec extends SparkSpec {
     // click-user count (the cube-rollup aggregate)
     val rolled = spark.sql(
       """WITH cells AS (SELECT date_trunc('day', ts) AS day,
-                               theta_sketch_agg(user_id, 1024) AS sk
+                               theta_sketch_agg(user_id, 10) AS sk
                         FROM events WHERE event_type = 'click' GROUP BY 1)
-         SELECT theta_estimate(theta_union_agg(sk, 1024)) FROM cells""").head()
+         SELECT theta_sketch_estimate(theta_union_agg(sk, 10)) FROM cells""").head()
     assert(rolled.getLong(0) === conly + both)
     // vector_avg centroid from SQL matches the Column API
     val sqlC = spark.sql(
@@ -138,6 +138,32 @@ class SqlInterfaceSpec extends SparkSpec {
       .groupBy("label").agg(graft.functions.VectorFns.vectorAvg(col("embedding")).as("c"))
       .orderBy("label").collect().map(r => r.getInt(0) -> r.getSeq[Double](1))
     assert(sqlC.toSeq === apiC.toSeq)
+  }
+
+  test("no function GraftExtensions injects shadows a Spark built-in") {
+    // an injected function replaces a built-in of the same name in every
+    // Graft session, so Spark's documented calls of it stop working
+    val injected = spark.catalog.listFunctions().collect()
+      .filter(f => Option(f.className).exists(_.startsWith("graft.")))
+      .map(_.name).toSet
+    assert(injected.contains("vector_dot"), injected)
+    val builtin = org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+      .listFunction().map(_.funcName).toSet
+    assert((injected & builtin).isEmpty)
+  }
+
+  test("Spark's documented theta sketch forms work in a Graft session") {
+    Graft.registerTables(spark, sfDir)
+    val exact = graft.engine.Tables.events(spark, sfDir)
+      .agg(countDistinct("user_id")).head().getLong(0)
+    // the one-argument form (default lgNomEntries 12 > the fixture's users)
+    assert(spark.sql(
+      "SELECT theta_sketch_estimate(theta_sketch_agg(user_id)) FROM events")
+      .head().getLong(0) === exact)
+    // an explicit lgNomEntries of 12 (k = 4096)
+    assert(spark.sql(
+      "SELECT theta_sketch_estimate(theta_sketch_agg(user_id, 12)) FROM events")
+      .head().getLong(0) === exact)
   }
 
   test("joins and subqueries from SQL") {

@@ -526,14 +526,13 @@ class StreamingSpec extends SparkSpec {
   test("theta distinct-cube folds micro-batches; replay is set-idempotent, algebra survives") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    import graft.functions.SketchFns._
     val cubePath = tempDir("theta_cube") + "/cube"
     def b(rows: (Long, String)*) = rows.toDF("user_id", "event_type")
     def process(batch: org.apache.spark.sql.DataFrame) =
       Realtime.processThetaBatch(batch, cubePath,
         dims = Seq("event_type"), valueCol = "user_id", k = 256)
     def estimates() = spark.read.parquet(cubePath)
-      .select(col("event_type"), thetaEstimate(col("sk")).as("n"))
+      .select(col("event_type"), theta_sketch_estimate(col("sk")).as("n"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
 
     process(b((1L to 60L).map(u => (u, "click")): _*))
@@ -558,8 +557,8 @@ class StreamingSpec extends SparkSpec {
     val row = spark.read.parquet(cubePath)
       .groupBy().pivot("event_type", Seq("click", "view")).agg(first("sk"))
       .select(
-        thetaEstimate(thetaUnion(col("click"), col("view"))).as("u"),
-        thetaEstimate(thetaIntersect(col("click"), col("view"))).as("i"))
+        theta_sketch_estimate(theta_union(col("click"), col("view"), 8)).as("u"),
+        theta_sketch_estimate(theta_intersection(col("click"), col("view"))).as("i"))
       .head()
     assert(row.getLong(0) === 100L)
     assert(row.getLong(1) === 10L)
@@ -568,7 +567,6 @@ class StreamingSpec extends SparkSpec {
   test("KLL quantile-cube folds micro-batches; replay rebuilds instead of double-counting") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    import graft.functions.SketchFns._
     val base = tempDir("kll_cube")
     val factPath = s"$base/fact"
     val cubePath = s"$base/cube"
@@ -577,7 +575,7 @@ class StreamingSpec extends SparkSpec {
       Realtime.processKllCubeBatch(batch, id, factPath, cubePath,
         dims = Seq("event_type"), valueCol = "value", k = 1024)
     def medians() = spark.read.parquet(cubePath)
-      .select(col("event_type"), kllQuantile(col("sk"), lit(0.5)).as("p50"))
+      .select(col("event_type"), kll_sketch_get_quantile_double(col("sk"), lit(0.5)).as("p50"))
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
 
     // two batches; k=1024 > totals so folded quantiles are EXACT order
@@ -599,7 +597,7 @@ class StreamingSpec extends SparkSpec {
     // exact multiset union — 109 values, rank ceil(0.5·109)=55, and
     // cum(50) = 50 clicks + 5 views = 55, so the median is 50.0
     val merged = spark.read.parquet(cubePath)
-      .agg(kllQuantile(kllUnionAgg(col("sk"), 1024), lit(0.5)).as("p50"))
+      .agg(kll_sketch_get_quantile_double(kll_merge_agg_double(col("sk"), 1024), lit(0.5)).as("p50"))
       .head().getDouble(0)
     assert(merged === 50.0)
   }
@@ -660,7 +658,8 @@ class StreamingSpec extends SparkSpec {
     val batch2 = (31L to 80L).map(u => ("click", u, u * 3)) ++
       (1L to 9L).map(u => ("buy", u, 250L))
     val all = (batch1 ++ batch2).toDF("event_type", "user_id", "cents")
-    // k exceeds every cell's size, so every sketch here is exact
+    // k exceeds every cell's size, so every sketch here is exact (theta
+    // takes log2 k = 10)
     val k = 1024
 
     val inputs = Seq.fill(4)(MemoryStream[(String, Long, Long)])
@@ -696,19 +695,41 @@ class StreamingSpec extends SparkSpec {
     same("hist", spark.read.parquet(dir("hist")),
       StarTree.buildHistCube(all, dims, "cents"), col("hist_cents"))
     same("theta", spark.read.parquet(dir("theta")),
-      all.groupBy("event_type").agg(thetaSketch(col("user_id"), k).as("sk")),
-      thetaEstimate(col("sk")))
-    val ranks = Seq(0.1, 0.5, 0.9, 1.0).map(p => kllQuantile(col("sk"), lit(p)))
+      all.groupBy("event_type").agg(theta_sketch_agg(col("user_id"), 10).as("sk")),
+      theta_sketch_estimate(col("sk")))
+    val ranks = Seq(0.1, 0.5, 0.9, 1.0)
+      .map(p => kll_sketch_get_quantile_double(col("sk"), lit(p)))
     same("kll", spark.read.parquet(dir("kll")),
       all.groupBy("event_type")
-        .agg(kllSketch(col("cents").cast("double"), k).as("sk")),
+        .agg(kll_sketch_agg_double(col("cents").cast("double"), k).as("sk")),
       ranks: _*)
     same("tuple", spark.read.parquet(dir("tuple")),
       all.groupBy("event_type")
         .agg(tupleSketch(col("user_id"), col("cents"), k).as("sk")),
       tupleDistinct(col("sk")), tupleSum(col("sk")))
     assert(spark.read.parquet(dir("theta")).filter(col("event_type") === "click")
-      .select(thetaEstimate(col("sk"))).head().getLong(0) === 80L)
+      .select(theta_sketch_estimate(col("sk"))).head().getLong(0) === 80L)
+  }
+
+  test("theta and KLL cube sinks reject an unsupported k before the query starts") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val base = tempDir("sketch_k")
+    val rows = MemoryStream[(String, Long)].toDF().toDF("event_type", "v")
+    val active = spark.streams.active.length
+    // theta takes k nominal entries as log2 k: a power of two in [16, 2^26]
+    for (k <- Seq(8, 1000, 1 << 27)) {
+      val e = intercept[IllegalArgumentException](Realtime.thetaCubeRefreshSink(
+        rows, s"$base/theta", Seq("event_type"), "v", k, s"$base/theta_ckpt_$k"))
+      assert(e.getMessage.contains("power of two in [16, 2^26]"), k)
+    }
+    // Spark's KLL takes 8 ≤ k ≤ 65535
+    for (k <- Seq(4, 65536)) {
+      val e = intercept[IllegalArgumentException](Realtime.kllCubeRefreshSink(
+        rows, s"$base/fact", s"$base/kll", Seq("event_type"), "v", k, s"$base/kll_ckpt_$k"))
+      assert(e.getMessage.contains("[8, 65535]"), k)
+    }
+    assert(spark.streams.active.length === active)
   }
 
   test("streaming SCD2 maintenance matches the batch build at every prefix; replay is idempotent") {

@@ -5,7 +5,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.engine.Tables
 import graft.functions.SketchFns._
-import graft.functions.expressions.{ThetaState, TupleState}
+import graft.functions.expressions.TupleState
 
 /** Tuple-sketch correctness: exactness of BOTH the distinct count and the
   * carried metric sums while untrimmed, split-invariant merging (the
@@ -26,7 +26,7 @@ class TupleSketchSpec extends SparkSpec {
 
   private def stateOf(k: Int, xs: Iterable[(Long, Long)]): TupleState = {
     val st = new TupleState(k)
-    xs.foreach { case (key, m) => st.add(ThetaState.hash63(key), m) }
+    xs.foreach { case (key, m) => st.add(TupleState.hash63(key), m) }
     st
   }
 
@@ -51,7 +51,7 @@ class TupleSketchSpec extends SparkSpec {
       val whole = stateOf(64, xs)
       val parts = Seq.fill(nParts)(new TupleState(64))
       xs.zipWithIndex.foreach { case ((key, m), i) =>
-        parts(i % nParts).add(ThetaState.hash63(key), m)
+        parts(i % nParts).add(TupleState.hash63(key), m)
       }
       val merged = new TupleState(64)
       parts.foreach(merged.mergeFrom)
