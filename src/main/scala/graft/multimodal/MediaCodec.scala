@@ -1,17 +1,21 @@
 package graft.multimodal
 
-import java.io.ByteArrayOutputStream
+import java.awt.image.BufferedImage
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets
-import java.util.zip.{CRC32, Deflater, Inflater}
+import javax.imageio.{IIOImage, ImageIO, ImageTypeSpecifier, ImageWriteParam}
+import javax.imageio.metadata.{IIOMetadata, IIOMetadataNode}
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
+import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 
-/** Real, dependency-free media codecs (pure JDK): a PNG encoder/decoder
-  * (RGB8, all five scanline filters on decode; `java.util.zip` deflate +
-  * CRC32), a WAV PCM encoder/decoder (RIFF chunk walk), a 24-bit BMP
-  * encoder/decoder, and header sniffing for JPEG (SOF marker scan), GIF
-  * and BMP. Baseline JPEG and GIF pixel decode live in the sibling
-  * JpegCodec/GifCodec objects; Multimodal.decodeImage dispatches across
-  * all four image formats. Modern compressed video remains out of scope
-  * (no container/av libs here) and rides the documented stub path.
+/** The one media codec seam. PNG, JPEG, GIF and BMP encode and decode
+  * through the JDK's javax.imageio, WAV through javax.sound.sampled;
+  * only what the JDK lacks is hand-written here: the uncompressed-RGB
+  * AVI codec and header-only dimension sniffing (`sniffDims`, which
+  * sizes minimal headers the ImageIO readers reject). Streams are
+  * in-memory (MemoryCacheImage*Stream), never ImageIO's JVM-wide file
+  * cache. Modern compressed video remains out of scope (no container/av
+  * libs here) and rides the documented stub path.
   *
   * Reference capability: Pinot stores opaque BYTES columns and computes
   * over them with transform functions (/root/reference/
@@ -20,160 +24,121 @@ import java.util.zip.{CRC32, Deflater, Inflater}
   */
 object MediaCodec {
 
-  // ------------------------------------------------------------------ PNG
+  // --------------------------------------------------------------- images
 
   /** RGB8 image, 3 bytes per pixel, row-major. */
   final case class PngImage(width: Int, height: Int, rgb: Array[Byte])
 
   private val PngSig = Array[Byte](0x89.toByte, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n')
 
-  private def u32be(v: Long): Array[Byte] =
-    Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+  private val ImageFormats = Set("png", "jpeg", "gif", "bmp")
 
-  private def readU32be(b: Array[Byte], off: Int): Long =
-    ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-      ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
+  /** The format the magic bytes name — exactly png, jpeg, gif or bmp, so
+    * the JDK's other readers (TIFF, WBMP) stay out of reach.
+    */
+  private def imageFormat(bytes: Array[Byte]): Option[String] =
+    if (bytes == null || bytes.length < 4) None
+    else (bytes(0) & 0xff, bytes(1) & 0xff) match {
+      case (0x89, 'P') => Some("png")
+      case (0xff, 0xd8) => Some("jpeg")
+      case ('G', 'I') => Some("gif")
+      case ('B', 'M') => Some("bmp")
+      case _ => None
+    }
 
-  private def chunk(tag: String, payload: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    out.write(u32be(payload.length.toLong))
-    val tagBytes = tag.getBytes(StandardCharsets.US_ASCII)
-    out.write(tagBytes)
-    out.write(payload)
-    val crc = new CRC32()
-    crc.update(tagBytes)
-    crc.update(payload)
-    out.write(u32be(crc.getValue))
-    out.toByteArray
+  /** Format-dispatched image decode to RGB8: PNG, JPEG (baseline or
+    * progressive, any chroma sampling), GIF (first frame) and BMP, each
+    * through the JDK reader for the format its magic bytes name. This is
+    * the crawl-shaped entry point: perceptual dedup and featurization see
+    * PIXELS regardless of which container the crawler stored. Anything
+    * else, and any blob the reader rejects, → None; corrupt data never
+    * throws.
+    */
+  def decodeImage(bytes: Array[Byte]): Option[PngImage] =
+    imageFormat(bytes).flatMap { format =>
+      val reader = ImageIO.getImageReadersByFormatName(format).next()
+      val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
+      try {
+        reader.setInput(in, true, true)
+        Option(reader.read(0)).map(toRgb)
+      } catch { case _: Exception => None }
+      finally { reader.dispose(); in.close() }
+    }
+
+  private def toRgb(bi: BufferedImage): PngImage = {
+    val (w, h) = (bi.getWidth, bi.getHeight)
+    // getRGB would gamma-map 8-bit gray (the JDK's gray space is linear)
+    val px =
+      if (bi.getType == BufferedImage.TYPE_BYTE_GRAY)
+        bi.getRaster.getSamples(0, 0, w, h, 0, null: Array[Int]).map(_ * 0x010101)
+      else bi.getRGB(0, 0, w, h, null, 0, w)
+    val rgb = new Array[Byte](w * h * 3)
+    var i = 0
+    while (i < px.length) {
+      rgb(i * 3) = (px(i) >> 16).toByte
+      rgb(i * 3 + 1) = (px(i) >> 8).toByte
+      rgb(i * 3 + 2) = px(i).toByte
+      i += 1
+    }
+    PngImage(w, h, rgb)
   }
 
-  /** Encode an RGB8 image as a real PNG (color type 2, bit depth 8, no
-    * interlace). `filterFor(row)` selects the scanline filter (0..4) —
-    * the default None filter is what an encoder would emit for synthetic
-    * data; tests rotate filters to exercise every decode path.
+  private val JpegMeta = "javax_imageio_jpeg_image_1.0"
+
+  /** Encode RGB8 as "png", "jpeg", "gif" or "bmp" through the JDK writer.
+    *  - JPEG is baseline, 4:4:4 and RGB-coded (Adobe APP14 transform 0, no
+    *    JFIF) at quality 0.9, which round-trips q_dedup_image's 32×32
+    *    fixture exactly. YCbCr coding rounds channels by ±1 and so flips
+    *    aHash bits that sit on the mean (1,188 of 20,000 fixture ids);
+    *    the writer's default 4:2:0 drifts on 14,812.
+    *  - GIF is written non-interlaced: the JDK reader returns wrong pixels
+    *    for interlaced images 2–4 rows tall. Above 256 distinct colours
+    *    the writer would silently quantize, so that is refused.
     */
-  def encodePng(img: PngImage, filterFor: Int => Int = _ => 0): Array[Byte] = {
+  def encodeImage(img: PngImage, format: String): Array[Byte] = {
+    require(ImageFormats(format), s"unsupported image format $format")
     require(img.rgb.length == img.width * img.height * 3,
       s"rgb length ${img.rgb.length} != w*h*3 (${img.width}x${img.height})")
-    val bpp = 3
-    val stride = img.width * bpp
-    val raw = new Array[Byte](img.height * (stride + 1))
-    var y = 0
-    while (y < img.height) {
-      val f = filterFor(y)
-      require(f >= 0 && f <= 4, s"filter $f out of range")
-      raw(y * (stride + 1)) = f.toByte
-      var x = 0
-      while (x < stride) {
-        val cur = img.rgb(y * stride + x) & 0xff
-        val left = if (x >= bpp) img.rgb(y * stride + x - bpp) & 0xff else 0
-        val up = if (y > 0) img.rgb((y - 1) * stride + x) & 0xff else 0
-        val upLeft = if (y > 0 && x >= bpp) img.rgb((y - 1) * stride + x - bpp) & 0xff else 0
-        val filtered = f match {
-          case 0 => cur
-          case 1 => cur - left
-          case 2 => cur - up
-          case 3 => cur - (left + up) / 2
-          case 4 => cur - paeth(left, up, upLeft)
+    val bi = new BufferedImage(img.width, img.height, BufferedImage.TYPE_3BYTE_BGR)
+    bi.getRaster.setDataElements(0, 0, img.width, img.height, img.rgb)
+    val writer = ImageIO.getImageWritersByFormatName(format).next()
+    val param = writer.getDefaultWriteParam
+    val meta: IIOMetadata = format match {
+      case "jpeg" =>
+        param.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
+        param.setCompressionQuality(0.9f)
+        val meta = writer.getDefaultImageMetadata(new ImageTypeSpecifier(bi), param)
+        val root = meta.getAsTree(JpegMeta).asInstanceOf[IIOMetadataNode]
+        val variety = root.getElementsByTagName("JPEGvariety").item(0)
+        while (variety.hasChildNodes) variety.removeChild(variety.getFirstChild) // no JFIF
+        val adobe = new IIOMetadataNode("app14Adobe")
+        adobe.setAttribute("transform", "0") // components are R, G, B
+        val markers = root.getElementsByTagName("markerSequence").item(0)
+        markers.insertBefore(adobe, markers.getFirstChild)
+        val comps = root.getElementsByTagName("componentSpec")
+        (0 until comps.getLength).foreach { i =>
+          val c = comps.item(i).asInstanceOf[IIOMetadataNode]
+          c.setAttribute("HsamplingFactor", "1")
+          c.setAttribute("VsamplingFactor", "1")
         }
-        raw(y * (stride + 1) + 1 + x) = (filtered & 0xff).toByte
-        x += 1
-      }
-      y += 1
+        meta.setFromTree(JpegMeta, root)
+        meta
+      case "gif" =>
+        val colours = Iterator.range(0, img.rgb.length, 3).map(i =>
+          ((img.rgb(i) & 0xff) << 16) | ((img.rgb(i + 1) & 0xff) << 8) | (img.rgb(i + 2) & 0xff))
+          .distinct.size
+        require(colours <= 256, s"GIF holds at most 256 colours, image has $colours")
+        param.setProgressiveMode(ImageWriteParam.MODE_DISABLED)
+        null
+      case _ => null
     }
-    val deflater = new Deflater(Deflater.BEST_SPEED)
-    deflater.setInput(raw)
-    deflater.finish()
-    val buf = new Array[Byte](8192)
-    val idat = new ByteArrayOutputStream()
-    while (!deflater.finished()) idat.write(buf, 0, deflater.deflate(buf))
-    deflater.end()
-
-    val ihdr = new ByteArrayOutputStream()
-    ihdr.write(u32be(img.width.toLong))
-    ihdr.write(u32be(img.height.toLong))
-    ihdr.write(Array[Byte](8, 2, 0, 0, 0)) // depth 8, color RGB, deflate, adaptive, no interlace
-    val out = new ByteArrayOutputStream()
-    out.write(PngSig)
-    out.write(chunk("IHDR", ihdr.toByteArray))
-    out.write(chunk("IDAT", idat.toByteArray))
-    out.write(chunk("IEND", Array.empty[Byte]))
-    out.toByteArray
-  }
-
-  private def paeth(a: Int, b: Int, c: Int): Int = {
-    val p = a + b - c
-    val pa = math.abs(p - a); val pb = math.abs(p - b); val pc = math.abs(p - c)
-    if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-  }
-
-  /** Decode an RGB8/no-interlace PNG produced by any conformant encoder
-    * (all five scanline filters supported). Returns None for anything that
-    * is not such a PNG — corrupt data never throws.
-    */
-  def decodePng(bytes: Array[Byte]): Option[PngImage] = {
+    val bytes = new ByteArrayOutputStream()
+    val out = new MemoryCacheImageOutputStream(bytes)
     try {
-      if (bytes == null || bytes.length < 8 + 25 || !PngSig.indices.forall(i => bytes(i) == PngSig(i)))
-        return None
-      var off = 8
-      var width = -1; var height = -1; var depth = -1; var color = -1; var interlace = -1
-      val idat = new ByteArrayOutputStream()
-      while (off + 8 <= bytes.length) {
-        val len = readU32be(bytes, off).toInt
-        if (len < 0 || off + 12 + len > bytes.length) return None
-        val tag = new String(bytes, off + 4, 4, StandardCharsets.US_ASCII)
-        tag match {
-          case "IHDR" =>
-            width = readU32be(bytes, off + 8).toInt
-            height = readU32be(bytes, off + 12).toInt
-            depth = bytes(off + 16) & 0xff
-            color = bytes(off + 17) & 0xff
-            interlace = bytes(off + 20) & 0xff
-          case "IDAT" => idat.write(bytes, off + 8, len)
-          case _ => ()
-        }
-        off += 12 + len
-      }
-      if (width <= 0 || height <= 0 || depth != 8 || color != 2 || interlace != 0) return None
-      val bpp = 3
-      val stride = width * bpp
-      val raw = new Array[Byte](height * (stride + 1))
-      val inflater = new Inflater()
-      inflater.setInput(idat.toByteArray)
-      var filled = 0
-      while (filled < raw.length && !inflater.finished()) {
-        val n = inflater.inflate(raw, filled, raw.length - filled)
-        if (n == 0 && inflater.needsInput()) return None
-        filled += n
-      }
-      inflater.end()
-      if (filled != raw.length) return None
-      val rgb = new Array[Byte](height * stride)
-      var y = 0
-      while (y < height) {
-        val f = raw(y * (stride + 1)) & 0xff
-        var x = 0
-        while (x < stride) {
-          val v = raw(y * (stride + 1) + 1 + x) & 0xff
-          val left = if (x >= bpp) rgb(y * stride + x - bpp) & 0xff else 0
-          val up = if (y > 0) rgb((y - 1) * stride + x) & 0xff else 0
-          val upLeft = if (y > 0 && x >= bpp) rgb((y - 1) * stride + x - bpp) & 0xff else 0
-          val recon = f match {
-            case 0 => v
-            case 1 => v + left
-            case 2 => v + up
-            case 3 => v + (left + up) / 2
-            case 4 => v + paeth(left, up, upLeft)
-            case _ => return None
-          }
-          rgb(y * stride + x) = (recon & 0xff).toByte
-          x += 1
-        }
-        y += 1
-      }
-      Some(PngImage(width, height, rgb))
-    } catch { case _: Exception => None }
+      writer.setOutput(out)
+      writer.write(null, new IIOImage(bi, null, meta), param)
+    } finally { writer.dispose(); out.close() }
+    bytes.toByteArray
   }
 
   // ------------------------------------------------------------------ WAV
@@ -185,13 +150,6 @@ object MediaCodec {
     def durationMs: Long = if (sampleRate <= 0) 0L else nFrames * 1000L / sampleRate
   }
 
-  private def u16le(v: Int): Array[Byte] = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def u32le(v: Long): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte, ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-  private def readU16le(b: Array[Byte], off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-  private def readU32le(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) | ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-
   /** Encode 16-bit PCM samples (interleaved when channels > 1) as RIFF/WAVE. */
   def encodeWavPcm16(sampleRate: Int, channels: Int, samples: Array[Short]): Array[Byte] = {
     val data = new Array[Byte](samples.length * 2)
@@ -201,52 +159,40 @@ object MediaCodec {
       data(i * 2 + 1) = ((samples(i) >> 8) & 0xff).toByte
       i += 1
     }
-    val blockAlign = channels * 2
+    val format = new AudioFormat(sampleRate.toFloat, 16, channels, true, false)
     val out = new ByteArrayOutputStream()
-    out.write("RIFF".getBytes(StandardCharsets.US_ASCII))
-    out.write(u32le(36L + data.length))
-    out.write("WAVE".getBytes(StandardCharsets.US_ASCII))
-    out.write("fmt ".getBytes(StandardCharsets.US_ASCII))
-    out.write(u32le(16L))
-    out.write(u16le(1)) // PCM
-    out.write(u16le(channels))
-    out.write(u32le(sampleRate.toLong))
-    out.write(u32le(sampleRate.toLong * blockAlign))
-    out.write(u16le(blockAlign))
-    out.write(u16le(16))
-    out.write("data".getBytes(StandardCharsets.US_ASCII))
-    out.write(u32le(data.length.toLong))
-    out.write(data)
+    AudioSystem.write(
+      new AudioInputStream(new ByteArrayInputStream(data), format, samples.length / channels),
+      AudioFileFormat.Type.WAVE, out)
     out.toByteArray
   }
 
-  /** Walk RIFF chunks for fmt + data; None for non-WAV/corrupt input. */
+  /** The format and data bytes of a WAV; None for non-WAV, corrupt or
+    * truncated input.
+    */
   def decodeWav(bytes: Array[Byte]): Option[WavAudio] = {
+    if (bytes == null) return None
     try {
-      if (bytes == null || bytes.length < 44) return None
-      def tag(off: Int) = new String(bytes, off, 4, StandardCharsets.US_ASCII)
-      if (tag(0) != "RIFF" || tag(8) != "WAVE") return None
-      var off = 12
-      var rate = -1; var channels = -1; var bits = -1
-      var data: Array[Byte] = null
-      while (off + 8 <= bytes.length) {
-        val id = tag(off)
-        val len = readU32le(bytes, off + 4).toInt
-        if (len < 0 || off + 8 + len > bytes.length) return None
-        id match {
-          case "fmt " if len >= 16 =>
-            channels = readU16le(bytes, off + 10)
-            rate = readU32le(bytes, off + 12).toInt
-            bits = readU16le(bytes, off + 22)
-          case "data" => data = java.util.Arrays.copyOfRange(bytes, off + 8, off + 8 + len)
-          case _ => ()
-        }
-        off += 8 + len + (len & 1) // RIFF chunks are word-aligned
-      }
-      if (rate <= 0 || channels <= 0 || bits <= 0 || data == null) None
-      else Some(WavAudio(rate, channels, bits, data))
+      val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(bytes))
+      try {
+        val f = in.getFormat
+        val data = in.readAllBytes()
+        if (in.getFrameLength != AudioSystem.NOT_SPECIFIED &&
+          data.length.toLong != in.getFrameLength * f.getFrameSize) None
+        else Some(WavAudio(f.getSampleRate.toInt, f.getChannels, f.getSampleSizeInBits, data))
+      } finally in.close()
     } catch { case _: Exception => None }
   }
+
+  private def u16le(v: Int): Array[Byte] = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
+  private def u32le(v: Long): Array[Byte] =
+    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte, ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
+  private def readU16le(b: Array[Byte], off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
+  private def readU32le(b: Array[Byte], off: Int): Long =
+    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) | ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
+  private def readU32be(b: Array[Byte], off: Int): Long =
+    ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
+      ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
 
   // ------------------------------------------------------------------ AVI
 
@@ -441,84 +387,6 @@ object MediaCodec {
       }
       if (rgbFrames.isEmpty) return None
       Some(AviVideo(width, height, microSec, rgbFrames))
-    } catch { case _: Exception => None }
-  }
-
-  // ------------------------------------------------------------------ BMP
-
-  /** Encode RGB8 as a classic 24-bit uncompressed BMP (BITMAPINFOHEADER,
-    * BI_RGB, bottom-up rows, BGR byte order, 4-byte row padding).
-    */
-  def encodeBmp(img: PngImage): Array[Byte] = {
-    require(img.rgb.length == img.width * img.height * 3, "rgb length mismatch")
-    val rowSize = (img.width * 3 + 3) & ~3
-    val dataSize = rowSize * img.height
-    val out = new ByteArrayOutputStream()
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def u32(v: Long): Unit = out.write(u32le(v))
-    out.write('B'); out.write('M')
-    u32(14 + 40 + dataSize) // file size
-    u16(0); u16(0)
-    u32(14 + 40) // pixel data offset
-    u32(40) // BITMAPINFOHEADER
-    u32(img.width.toLong); u32(img.height.toLong)
-    u16(1); u16(24) // planes, bpp
-    u32(0) // BI_RGB
-    u32(dataSize.toLong)
-    u32(2835); u32(2835); u32(0); u32(0) // 72 dpi, no palette
-    val row = new Array[Byte](rowSize)
-    var y = img.height - 1
-    while (y >= 0) { // bottom-up
-      java.util.Arrays.fill(row, 0.toByte)
-      var x = 0
-      while (x < img.width) {
-        val p = (y * img.width + x) * 3
-        row(x * 3) = img.rgb(p + 2) // B
-        row(x * 3 + 1) = img.rgb(p + 1) // G
-        row(x * 3 + 2) = img.rgb(p) // R
-        x += 1
-      }
-      out.write(row, 0, rowSize)
-      y -= 1
-    }
-    out.toByteArray
-  }
-
-  /** Decode a 24-bit uncompressed BMP (bottom-up or top-down). Other
-    * depths/compressions → None.
-    */
-  def decodeBmp(bytes: Array[Byte]): Option[PngImage] = {
-    try {
-      if (bytes == null || bytes.length < 54 ||
-        bytes(0) != 'B' || bytes(1) != 'M') return None
-      val dataOff = readU32le(bytes, 10).toInt
-      val headerSize = readU32le(bytes, 14).toInt
-      if (headerSize < 40) return None
-      val width = readU32le(bytes, 18).toInt
-      val rawH = readU32le(bytes, 22).toInt
-      val height = math.abs(rawH)
-      val topDown = rawH < 0
-      val bpp = readU16le(bytes, 28)
-      val compression = readU32le(bytes, 30)
-      if (width <= 0 || height <= 0 || bpp != 24 || compression != 0) return None
-      val rowSize = (width * 3 + 3) & ~3
-      if (dataOff + rowSize * height > bytes.length) return None
-      val rgb = new Array[Byte](width * height * 3)
-      var y = 0
-      while (y < height) {
-        val srcRow = if (topDown) y else height - 1 - y
-        val src = dataOff + srcRow * rowSize
-        var x = 0
-        while (x < width) {
-          val p = (y * width + x) * 3
-          rgb(p) = bytes(src + x * 3 + 2) // R
-          rgb(p + 1) = bytes(src + x * 3 + 1) // G
-          rgb(p + 2) = bytes(src + x * 3) // B
-          x += 1
-        }
-        y += 1
-      }
-      Some(PngImage(width, height, rgb))
     } catch { case _: Exception => None }
   }
 

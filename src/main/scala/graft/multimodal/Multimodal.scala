@@ -28,15 +28,15 @@ final case class MediaFeatures(
   * The Spark-side plumbing is real: binary schema, batched
   * `mapPartitions` (one decoder init per partition, not per row — the
   * shape a JNI codec or an ONNX session needs), deterministic
-  * partitioning. Image, audio AND video decode are REAL — pure-JDK PNG
-  * (MediaCodec), baseline JPEG incl. 4:2:0/4:2:2 (JpegCodec), GIF
-  * (GifCodec), 24-bit BMP (MediaCodec), WAV and uncompressed-RGB AVI
-  * codecs; the image EMBED step is real too (`embedImage` — a
-  * Johnson–Lindenstrauss patch projection over decoded pixels). The
-  * remaining stub is `decodeStub`, the fallback for codecs the JVM
-  * cannot decode natively (progressive JPEG, modern video) —
-  * undecodable bytes degrade to stub features rather than failing the
-  * job.
+  * partitioning. Image, audio AND video decode are REAL — PNG, JPEG
+  * (baseline and progressive), GIF, BMP and WAV through the JDK's own
+  * image and sound readers, uncompressed-RGB AVI hand-written, all
+  * behind MediaCodec; the image EMBED step is real too
+  * (`embedImage` — a Johnson–Lindenstrauss patch projection over decoded
+  * pixels). The remaining stub is `decodeStub`, the fallback for codecs
+  * the JVM cannot decode natively (modern video, arithmetic-coded or
+  * malformed JPEG) — undecodable bytes degrade to stub features rather
+  * than failing the job.
   */
 object Multimodal {
 
@@ -51,23 +51,6 @@ object Multimodal {
 
   val FeatureDim = 16
 
-  /** Format-dispatched image decode: PNG, baseline JPEG (JpegCodec —
-    * any sampling up to 4:2:0), GIF first frame (GifCodec) and 24-bit
-    * BMP all decode to RGB8; anything else → None (stub path). This is
-    * the crawl-shaped entry point: perceptual dedup and featurization
-    * see PIXELS regardless of which container the crawler stored.
-    */
-  def decodeImage(bytes: Array[Byte]): Option[MediaCodec.PngImage] = {
-    if (bytes == null || bytes.length < 4) return None
-    val b0 = bytes(0) & 0xff
-    val b1 = bytes(1) & 0xff
-    if (b0 == 0x89 && b1 == 'P') MediaCodec.decodePng(bytes)
-    else if (b0 == 0xff && b1 == 0xd8) JpegCodec.decodeJpeg(bytes)
-    else if (b0 == 'G' && b1 == 'I') GifCodec.decodeGif(bytes)
-    else if (b0 == 'B' && b1 == 'M') MediaCodec.decodeBmp(bytes)
-    else None
-  }
-
   /** Real decode where the JDK can: PNG → [width, height, meanR, meanG,
     * meanB, …]; WAV → [sampleRate, channels, durationMs, meanAbsSample,
     * …]; uncompressed-RGB AVI → [width, height, nFrames, durationMs,
@@ -81,7 +64,7 @@ object Multimodal {
       if (v.length >= FeatureDim) v.take(FeatureDim)
       else v ++ Array.fill(FeatureDim - v.length)(0f)
     kind match {
-      case "image" => decodeImage(bytes) match {
+      case "image" => C.decodeImage(bytes) match {
         case Some(img) =>
           val n = (img.rgb.length / 3).max(1)
           val sums = Array.fill(3)(0L)
@@ -149,6 +132,15 @@ object Multimodal {
     MediaCodec.PngImage(dstW, dstH, out)
   }
 
+  /** Fingerprint-or-EXCLUDE: a blob the codecs reject (arithmetic-coded
+    * or malformed JPEG, foreign containers, truncated streams) yields
+    * None so dedup pipelines DROP the row — never a shared sentinel
+    * value, which would silently group unrelated undecodable blobs as
+    * "duplicates of each other".
+    */
+  def imageFingerprint(bytes: Array[Byte]): Option[Long] =
+    MediaCodec.decodeImage(bytes).map(aHash64)
+
   /** 64-bit average-hash (aHash) perceptual fingerprint: resize to 8×8
     * (nearest-neighbor), integer grayscale, one bit per cell = gray ≥
     * mean. The training-corpus image-dedup signal: re-encoded or
@@ -158,15 +150,6 @@ object Multimodal {
     * distinct blobs. Scan-local pure compute — corpus-wide image dedup
     * is then groupBy(ahash), the same shape as q_dedup_exact.
     */
-  /** Fingerprint-or-EXCLUDE: a blob the codecs reject (progressive /
-    * arithmetic JPEG, hierarchical SOF, foreign containers, truncated
-    * streams) yields None so dedup pipelines DROP the row — never a
-    * shared sentinel value, which would silently group unrelated
-    * undecodable blobs as "duplicates of each other".
-    */
-  def imageFingerprint(bytes: Array[Byte]): Option[Long] =
-    decodeImage(bytes).map(aHash64)
-
   def aHash64(img: MediaCodec.PngImage): Long = {
     val small = resizeRgb(img, 8, 8)
     val gray = new Array[Int](64)
@@ -282,7 +265,7 @@ object Multimodal {
   /** Batched per-partition image embedding — the same seam as
     * extractFeatures (one model session per partition, batch-amortized).
     * Undecodable bytes yield a NULL embedding (excluded, never grouped —
-    * the q_dedup_image honesty rule), so a progressive JPEG in the crawl
+    * the q_dedup_image honesty rule), so an undecodable blob in the crawl
     * cannot poison similarity results.
     */
   def embedImages(items: Dataset[MediaItem], batchSize: Int = 64): DataFrame = {
@@ -290,7 +273,7 @@ object Multimodal {
     items.filter(_.kind == "image").mapPartitions { it =>
       it.grouped(batchSize).flatMap { batch =>
         batch.map { m =>
-          val emb = Option(m.bytes).flatMap(decodeImage).map(embedImage(_))
+          val emb = MediaCodec.decodeImage(m.bytes).map(embedImage(_))
             // A perfectly flat image projects to the zero vector — no
             // signal, so NULL (excluded) rather than a vector that would
             // divide-by-zero every downstream cosine (same honesty rule

@@ -8,13 +8,14 @@ import graft.functions.expressions.ImageDims
 import graft.multimodal.{MediaCodec, MediaItem, Multimodal}
 
 /** §K multimodal — binary media columns with REAL decode: documents
-  * synthesize genuine PNG files, RIFF/WAVE PCM audio, and uncompressed-
-  * RGB RIFF AVI video (graft.multimodal.MediaCodec, pure JDK), whose
-  * decoded dimensions/audio properties/frame pixels are deterministic
-  * functions of doc_id — so DuckDB verifies that every encode → decode
-  * loop is byte-correct. Compressed codecs (H.26x etc.) remain out of
-  * scope (no av libs in this container) and fall back to the documented
-  * stub feature path.
+  * synthesize genuine PNG, JPEG, GIF and BMP files and RIFF/WAVE PCM
+  * audio (the JDK's own writers) and uncompressed-RGB RIFF AVI video
+  * (hand-written), all through
+  * graft.multimodal.MediaCodec, whose decoded dimensions/audio
+  * properties/frame pixels are deterministic functions of doc_id — so
+  * DuckDB verifies that every encode → decode loop is byte-correct.
+  * Compressed video codecs (H.26x etc.) remain out of scope (no av libs
+  * in this container) and fall back to the documented stub feature path.
   */
 object MultimodalQueries {
 
@@ -33,7 +34,7 @@ object MultimodalQueries {
             val h = 1 + (id % 5).toInt
             val rgb = Array.tabulate(w * h * 3)(i => ((id * 31 + i) % 256).toByte)
             MediaItem(id, "image",
-              MediaCodec.encodePng(MediaCodec.PngImage(w, h, rgb)),
+              MediaCodec.encodeImage(MediaCodec.PngImage(w, h, rgb), "png"),
               "image/png", w, h, 0L)
           case 1 =>
             val rate = 8000 + (id % 4).toInt * 4000
@@ -59,6 +60,28 @@ object MultimodalQueries {
         }
       }
   }
+
+  /** q_dedup_image's and q_dedup_image_exact's fixture: 32×32 of 8×8
+    * high-contrast blocks, five levels per channel from 32 to 224.
+    */
+  private def blockyImage(id: Long): MediaCodec.PngImage = {
+    val (w, h, bs) = (32, 32, 8)
+    val rgb = new Array[Byte](w * h * 3)
+    var i = 0
+    while (i < w * h) {
+      val block = (i / w / bs) * (w / bs) + (i % w / bs)
+      val v = id * 2654435761L + block * 40503L
+      rgb(i * 3) = (32 + (v % 5) * 48).toByte
+      rgb(i * 3 + 1) = (32 + ((v >> 3) % 5) * 48).toByte
+      rgb(i * 3 + 2) = (32 + ((v >> 6) % 5) * 48).toByte
+      i += 1
+    }
+    MediaCodec.PngImage(w, h, rgb)
+  }
+
+  /** The fixture with every channel +24 (224+24 < 256: no clip). */
+  private def brightened(img: MediaCodec.PngImage): MediaCodec.PngImage =
+    img.copy(rgb = img.rgb.map(b => ((b & 0xff) + 24).toByte))
 
   val defs: Seq[QueryDef] = Seq(
     // Decoded image metadata via the codegen'd image_dims expression: the
@@ -194,7 +217,7 @@ object MultimodalQueries {
             val rgb = Array.tabulate(w * h * 3)(i =>
               ((c * 89 + i * (2 * c + 7)) % 256).toByte)
             MediaItem(id, "image",
-              MediaCodec.encodePng(MediaCodec.PngImage(w, h, rgb)),
+              MediaCodec.encodeImage(MediaCodec.PngImage(w, h, rgb), "png"),
               "image/png", w, h, 0L)
           }
         val emb = Multimodal.embedImages(
@@ -233,9 +256,9 @@ object MultimodalQueries {
         mediaItems(s, d)
           .filter(col("kind") === "image")
           .map { m =>
-            val out = MediaCodec.decodePng(m.bytes)
+            val out = MediaCodec.decodeImage(m.bytes)
               .map(img => Multimodal.resizeRgb(img, 4, 3))
-              .map(r => MediaCodec.decodePng(MediaCodec.encodePng(r)).get)
+              .map(r => MediaCodec.decodeImage(MediaCodec.encodeImage(r, "png")).get)
             out match {
               case Some(r) =>
                 val centre = ((1 * 4 + 2) * 3) // dst (x=2, y=1), R channel
@@ -293,7 +316,7 @@ object MultimodalQueries {
     // synthesizes one blocky image and stores it four ways — PNG,
     // baseline JPEG (lossy!), GIF, and a uniformly brightness-shifted
     // BMP. Byte-level dedup sees four unrelated blobs; the 64-bit aHash
-    // over Multimodal.decodeImage (format-dispatched pixel decode)
+    // over MediaCodec.decodeImage (format-dispatched pixel decode)
     // merges all four: high-contrast 8×8 blocks keep every hash cell
     // far from the mean, so JPEG quantization error cannot flip a bit,
     // and the shift moves grays and mean together. Corpus-wide dedup is
@@ -316,30 +339,18 @@ object MultimodalQueries {
           .select(col("doc_id")).as[Long]
           .repartition(n)
           .flatMap { id =>
-            val (w, h, bs) = (32, 32, 8)
-            val rgb = new Array[Byte](w * h * 3)
-            var i = 0
-            while (i < w * h) {
-              val block = (i / w / bs) * (w / bs) + (i % w / bs)
-              val v = id * 2654435761L + block * 40503L
-              rgb(i * 3) = (32 + (v % 5) * 48).toByte
-              rgb(i * 3 + 1) = (32 + ((v >> 3) % 5) * 48).toByte
-              rgb(i * 3 + 2) = (32 + ((v >> 6) % 5) * 48).toByte
-              i += 1
-            }
-            val img = MediaCodec.PngImage(w, h, rgb)
-            val shifted = MediaCodec.PngImage(w, h,
-              rgb.map(b => ((b & 0xff) + 24).toByte)) // 224+24 < 256: no clip
+            val img = blockyImage(id)
+            val shifted = brightened(img)
             Seq(
-              (id, 0, MediaCodec.encodePng(img)),
-              (id, 1, graft.multimodal.JpegCodec.encodeJpeg(img, quality = 90)),
-              (id, 2, graft.multimodal.GifCodec.encodeGif(img).get),
-              (id, 3, MediaCodec.encodeBmp(shifted)))
+              (id, 0, MediaCodec.encodeImage(img, "png")),
+              (id, 1, MediaCodec.encodeImage(img, "jpeg")),
+              (id, 2, MediaCodec.encodeImage(img, "gif")),
+              (id, 3, MediaCodec.encodeImage(shifted, "bmp")))
           }
           // fingerprint-or-EXCLUDE: an undecodable variant (e.g. a
-          // progressive JPEG falling off the baseline decoder) drops out
-          // rather than collapsing onto a shared sentinel hash that would
-          // group unrelated blobs (MediaCodecFormatsSpec pins this)
+          // malformed or arithmetic-coded JPEG the reader rejects) drops
+          // out rather than collapsing onto a shared sentinel hash that
+          // would group unrelated blobs (MediaCodecFormatsSpec pins this)
           .flatMap { case (id, variant, bytes) =>
             Multimodal.imageFingerprint(bytes).map(h => (id, variant, h))
           }
@@ -382,28 +393,16 @@ object MultimodalQueries {
           .filter(col("doc_id") % 11 === 0)
           .select(col("doc_id")).as[Long]
           .flatMap { id =>
-            val (w, h, bs) = (32, 32, 8)
-            val rgb = new Array[Byte](w * h * 3)
-            var i = 0
-            while (i < w * h) {
-              val block = (i / w / bs) * (w / bs) + (i % w / bs)
-              val v = id * 2654435761L + block * 40503L
-              rgb(i * 3) = (32 + (v % 5) * 48).toByte
-              rgb(i * 3 + 1) = (32 + ((v >> 3) % 5) * 48).toByte
-              rgb(i * 3 + 2) = (32 + ((v >> 6) % 5) * 48).toByte
-              i += 1
-            }
-            val img = MediaCodec.PngImage(w, h, rgb)
-            val shifted = MediaCodec.PngImage(w, h,
-              rgb.map(b => ((b & 0xff) + 24).toByte)) // 224+24 < 256: no clip
+            val img = blockyImage(id)
+            val shifted = brightened(img)
             Seq(
-              (id, 0, MediaCodec.encodePng(img)),
-              (id, 2, graft.multimodal.GifCodec.encodeGif(img).get),
-              (id, 3, MediaCodec.encodeBmp(img)),
-              (id, 4, MediaCodec.encodePng(shifted)))
+              (id, 0, MediaCodec.encodeImage(img, "png")),
+              (id, 2, MediaCodec.encodeImage(img, "gif")),
+              (id, 3, MediaCodec.encodeImage(img, "bmp")),
+              (id, 4, MediaCodec.encodeImage(shifted, "png")))
           }
           .flatMap { case (id, variant, bytes) =>
-            Multimodal.decodeImage(bytes).map { img =>
+            MediaCodec.decodeImage(bytes).map { img =>
               val md = java.security.MessageDigest.getInstance("MD5")
               (id, variant, md.digest(img.rgb)
                 .map(b => f"${b & 0xff}%02x").mkString)
@@ -506,7 +505,7 @@ object MultimodalQueries {
         mediaItems(s, d)
           .filter(col("kind") === "image")
           .map { m =>
-            val img = MediaCodec.decodePng(m.bytes).get
+            val img = MediaCodec.decodeImage(m.bytes).get
             val sums = new Array[Long](3)
             var i = 0
             while (i < img.rgb.length) {

@@ -32,34 +32,44 @@ class MultimodalSpec extends SparkSpec {
 
   import graft.multimodal.MediaCodec
 
-  test("png encode/decode round-trips pixels under every scanline filter") {
-    val w = 7; val h = 10
-    val rgb = Array.tabulate(w * h * 3)(i => ((i * 37 + 11) % 256).toByte)
-    // rotate through filters 0..4 so Sub/Up/Average/Paeth decode paths all run
-    val png = MediaCodec.encodePng(MediaCodec.PngImage(w, h, rgb), filterFor = y => y % 5)
-    val decoded = MediaCodec.decodePng(png)
-    assert(decoded.isDefined)
-    assert(decoded.get.width === w)
-    assert(decoded.get.height === h)
-    assert(decoded.get.rgb.toSeq === rgb.toSeq)
-    // and the header sniffer agrees without a full decode
-    assert(MediaCodec.sniffDims(png) === Some(("png", w, h)))
+  test("png encode/decode round-trips pixels exactly") {
+    for ((w, h) <- Seq((7, 10), (1, 1), (13, 2))) {
+      val rgb = Array.tabulate(w * h * 3)(i => ((i * 37 + 11) % 256).toByte)
+      val png = MediaCodec.encodeImage(MediaCodec.PngImage(w, h, rgb), "png")
+      val decoded = MediaCodec.decodeImage(png)
+      assert(decoded.isDefined)
+      assert(decoded.get.width === w)
+      assert(decoded.get.height === h)
+      assert(decoded.get.rgb.toSeq === rgb.toSeq)
+      // and the header sniffer agrees without a full decode
+      assert(MediaCodec.sniffDims(png) === Some(("png", w, h)))
+    }
   }
 
   test("wav encode/decode round-trips format and duration") {
     val samples = Array.tabulate(441)(i => (math.sin(i / 10.0) * 8000).toShort)
     val wav = MediaCodec.encodeWavPcm16(44100, 1, samples)
     val a = MediaCodec.decodeWav(wav).get
+    assert(wav.length === 44 + 882) // canonical 44-byte RIFF header
+    assert(a.data.toSeq === wav.drop(44).toSeq)
+    assert(a.data.grouped(2).map(b => ((b(0) & 0xff) | (b(1) << 8)).toShort).toSeq === samples.toSeq)
     assert(a.sampleRate === 44100)
     assert(a.channels === 1)
     assert(a.bitsPerSample === 16)
     assert(a.nFrames === 441)
     assert(a.durationMs === 441L * 1000 / 44100)
     // stereo: frames are per channel pair
-    val st = MediaCodec.decodeWav(MediaCodec.encodeWavPcm16(8000, 2, new Array[Short](800))).get
+    val stereo = Array.tabulate(800)(i => (i * 41 - 16000).toShort)
+    val stWav = MediaCodec.encodeWavPcm16(8000, 2, stereo)
+    val st = MediaCodec.decodeWav(stWav).get
     assert(st.channels === 2)
     assert(st.nFrames === 400)
     assert(st.durationMs === 50L)
+    assert(st.data.toSeq === stWav.drop(44).toSeq)
+    // junk and truncated bytes decode to None
+    assert(MediaCodec.decodeWav(null) === None)
+    assert(MediaCodec.decodeWav(Array[Byte](1, 2, 3)) === None)
+    assert(MediaCodec.decodeWav(stWav.take(stWav.length - 2)) === None)
   }
 
   test("avi encode/decode round-trips frames, dims and duration") {
@@ -153,13 +163,13 @@ class MultimodalSpec extends SparkSpec {
     assert(MediaCodec.sniffDims(bmp) === Some(("bmp", 320, 240)))
     assert(MediaCodec.sniffDims(Array[Byte](1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13)) === None)
     assert(MediaCodec.sniffDims(null) === None)
-    assert(MediaCodec.decodePng(Array[Byte](0x89.toByte, 'P', 'N', 'G', 0, 0, 0, 0)) === None)
+    assert(MediaCodec.decodeImage(Array[Byte](0x89.toByte, 'P', 'N', 'G', 0, 0, 0, 0)) === None)
     assert(MediaCodec.decodeWav("RIFFxxxxWAVE".getBytes("US-ASCII")) === None)
   }
 
   test("image_dims expression decodes real png headers and nulls junk") {
     import spark.implicits._
-    val png = MediaCodec.encodePng(MediaCodec.PngImage(3, 2, new Array[Byte](18)))
+    val png = MediaCodec.encodeImage(MediaCodec.PngImage(3, 2, new Array[Byte](18)), "png")
     val df = Seq((1L, png), (2L, Array[Byte](1, 2, 3)))
       .toDF("id", "bytes")
     df.createOrReplaceTempView("media_bytes")
@@ -180,7 +190,7 @@ class MultimodalSpec extends SparkSpec {
     // uniform brightness shift → identical hash
     assert(Multimodal.aHash64(base) === Multimodal.aHash64(img(7L, 5, 4, shift = 40)))
     // encode → decode round trip (a re-encoded copy) → identical hash
-    val reencoded = MediaCodec.decodePng(MediaCodec.encodePng(base)).get
+    val reencoded = MediaCodec.decodeImage(MediaCodec.encodeImage(base, "png")).get
     assert(Multimodal.aHash64(base) === Multimodal.aHash64(reencoded))
     // different content → hashes differ across a seed sweep (no trivial
     // constant-hash degeneracy)
@@ -211,7 +221,7 @@ class MultimodalSpec extends SparkSpec {
     assert(cos(e1, Multimodal.embedImage(resized)) > 0.9,
       "resized copy drifted away from its original")
     // a re-encoded copy is byte-identical content → identical embedding
-    val reenc = MediaCodec.decodePng(MediaCodec.encodePng(base)).get
+    val reenc = MediaCodec.decodeImage(MediaCodec.encodeImage(base, "png")).get
     assert(e1.toSeq === Multimodal.embedImage(reenc).toSeq)
     // different content lands far away (JL preserves separation too)
     val other = gradient(4L, 32, 24)
@@ -239,10 +249,10 @@ class MultimodalSpec extends SparkSpec {
     // constant pixels ⇒ mean-centered grid is all zeros ⇒ JL projection is
     // the zero vector ⇒ must surface as NULL so no downstream cosine can
     // divide by zero (the ScaleBench synth corpus hit exactly this)
-    val flat = MediaCodec.encodePng(
-      MediaCodec.PngImage(6, 6, Array.fill(6 * 6 * 3)(77.toByte)))
-    val grad = MediaCodec.encodePng(
-      MediaCodec.PngImage(6, 6, Array.tabulate(6 * 6 * 3)(i => (i % 97).toByte)))
+    val flat = MediaCodec.encodeImage(
+      MediaCodec.PngImage(6, 6, Array.fill(6 * 6 * 3)(77.toByte)), "png")
+    val grad = MediaCodec.encodeImage(
+      MediaCodec.PngImage(6, 6, Array.tabulate(6 * 6 * 3)(i => (i % 97).toByte)), "png")
     val ds = spark.createDataset(Seq(
       MediaItem(1L, "image", flat, "image/png", 6, 6, 0L),
       MediaItem(2L, "image", grad, "image/png", 6, 6, 0L)))

@@ -699,4 +699,24 @@ class PlanLintSpec extends SparkSpec {
       s"session or env bootstrap outside graft.Harness (use Harness.session, " +
         s"Harness.sfDir, Harness.cpus): ${found.mkString(", ")}")
   }
+
+  test("media codecs reach the JDK only through multimodal.MediaCodec") {
+    // one codec seam: a second ImageIO or AudioSystem call site would
+    // re-decide format dispatch, JPEG coding and GIF interlacing; and
+    // ImageIO.setUseCache flips a JVM-wide switch under every other reader
+    import scala.jdk.CollectionConverters._
+    val seam = java.nio.file.Paths.get("src/main/scala/graft/multimodal/MediaCodec.scala")
+    val jdkMedia = "javax\\.(?:imageio|sound)".r
+    val found = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("ImageIO.setUseCache") ||
+              (f != seam && jdkMedia.findFirstIn(line).nonEmpty) => s"$f:${i + 1}"
+        }
+      }.toSeq.sorted
+    assert(found.isEmpty,
+      s"JDK media codecs outside MediaCodec, or ImageIO.setUseCache (encode and " +
+        s"decode through MediaCodec's in-memory streams): ${found.mkString(", ")}")
+  }
 }
