@@ -1,12 +1,20 @@
 package graft.multimodal
 
-import java.awt.image.BufferedImage
+import java.awt.color.ColorSpace
+import java.awt.image.{BufferedImage, ComponentColorModel, DataBuffer, IndexColorModel}
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets
-import javax.imageio.{IIOImage, ImageIO, ImageTypeSpecifier, ImageWriteParam}
+import java.util.ServiceLoader
+import javax.imageio.{IIOImage, ImageIO, ImageReader, ImageTypeSpecifier, ImageWriteParam}
 import javax.imageio.metadata.{IIOMetadata, IIOMetadataNode}
 import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
-import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
+import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem,
+  UnsupportedAudioFileException}
+import javax.sound.sampled.spi.{AudioFileReader, AudioFileWriter}
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 /** The one media codec seam. PNG, JPEG, GIF and BMP encode and decode
   * through the JDK's javax.imageio, WAV through javax.sound.sampled;
@@ -47,31 +55,77 @@ object MediaCodec {
     }
 
   /** Format-dispatched image decode to RGB8: PNG, JPEG (baseline or
-    * progressive, any chroma sampling), GIF (first frame) and BMP, each
-    * through the JDK reader for the format its magic bytes name. This is
-    * the crawl-shaped entry point: perceptual dedup and featurization see
-    * PIXELS regardless of which container the crawler stored. Anything
-    * else, and any blob the reader rejects, → None; corrupt data never
-    * throws.
+    * progressive, any chroma sampling), GIF (first frame, on its logical
+    * screen) and BMP, each through the JDK reader for the format its magic
+    * bytes name. This is the crawl-shaped entry point: perceptual dedup and
+    * featurization see PIXELS regardless of which container the crawler
+    * stored. Anything else, and any blob the reader rejects, → None;
+    * corrupt data never throws.
     */
   def decodeImage(bytes: Array[Byte]): Option[PngImage] =
     imageFormat(bytes).flatMap { format =>
       val reader = ImageIO.getImageReadersByFormatName(format).next()
       val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
       try {
-        reader.setInput(in, true, true)
-        Option(reader.read(0)).map(toRgb)
+        reader.setInput(in, true, format != "gif") // GIF needs its screen metadata
+        Option(reader.read(0)).map { frame =>
+          if (format == "gif") gifScreen(reader, frame) else toRgb(frame)
+        }
       } catch { case _: Exception => None }
       finally { reader.dispose(); in.close() }
     }
 
+  private def metaNode(meta: IIOMetadata, format: String, tag: String): Option[IIOMetadataNode] =
+    Option(meta.getAsTree(format).asInstanceOf[IIOMetadataNode].getElementsByTagName(tag).item(0))
+      .map(_.asInstanceOf[IIOMetadataNode])
+
+  /** GIF frame 0 drawn at its offset on the logical screen over the
+    * global background colour, so the decoded size is the one `sniffDims`
+    * reports. Transparent pixels keep their palette colour: fingerprints
+    * hash what is stored, not a composite.
+    */
+  private def gifScreen(reader: ImageReader, frame: BufferedImage): PngImage = {
+    val stream = reader.getStreamMetadata
+    val screen = metaNode(stream, "javax_imageio_gif_stream_1.0", "LogicalScreenDescriptor").get
+    val w = screen.getAttribute("logicalScreenWidth").toInt
+    val h = screen.getAttribute("logicalScreenHeight").toInt
+    val at = metaNode(reader.getImageMetadata(0), "javax_imageio_gif_image_1.0", "ImageDescriptor").get
+    val left = at.getAttribute("imageLeftPosition").toInt
+    val top = at.getAttribute("imageTopPosition").toInt
+    require(w > 0 && h > 0, "empty logical screen")
+    if (left == 0 && top == 0 && frame.getWidth == w && frame.getHeight == h) toRgb(frame)
+    else {
+      val bg = metaNode(stream, "javax_imageio_gif_stream_1.0", "GlobalColorTable").flatMap { t =>
+        val entries = t.getElementsByTagName("ColorTableEntry")
+        (0 until entries.getLength).map(entries.item(_).asInstanceOf[IIOMetadataNode])
+          .find(_.getAttribute("index") == t.getAttribute("backgroundColorIndex"))
+      }.fold(0)(e => (e.getAttribute("red").toInt << 16) |
+        (e.getAttribute("green").toInt << 8) | e.getAttribute("blue").toInt)
+      val out = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+      out.setRGB(0, 0, w, h, Array.fill(w * h)(bg), 0, w)
+      val (fw, fh) = (math.min(frame.getWidth, w - left), math.min(frame.getHeight, h - top))
+      if (fw > 0 && fh > 0)
+        out.setRGB(left, top, fw, fh, frame.getRGB(0, 0, fw, fh, null, 0, fw), 0, fw)
+      toRgb(out)
+    }
+  }
+
   private def toRgb(bi: BufferedImage): PngImage = {
     val (w, h) = (bi.getWidth, bi.getHeight)
-    // getRGB would gamma-map 8-bit gray (the JDK's gray space is linear)
+    val cm = bi.getColorModel
+    // 8-bit sRGB without alpha, as PNG, JPEG and BMP decode to: the raster's
+    // data elements are already RGB8, and getRGB would take 4× as long
+    if (cm.isInstanceOf[ComponentColorModel] && cm.getColorSpace.isCS_sRGB &&
+      !cm.hasAlpha && cm.getNumComponents == 3 && cm.getComponentSize.forall(_ == 8) &&
+      cm.getTransferType == DataBuffer.TYPE_BYTE)
+      return PngImage(w, h, bi.getRaster.getDataElements(0, 0, w, h, null).asInstanceOf[Array[Byte]])
+    // getRGB would gamma-map gray of 8 bits and more (the JDK's gray space
+    // is linear), so gray samples are read from the raster
     val px =
-      if (bi.getType == BufferedImage.TYPE_BYTE_GRAY)
-        bi.getRaster.getSamples(0, 0, w, h, 0, null: Array[Int]).map(_ * 0x010101)
-      else bi.getRGB(0, 0, w, h, null, 0, w)
+      if (cm.getColorSpace.getType == ColorSpace.TYPE_GRAY && cm.getComponentSize(0) >= 8) {
+        val shift = cm.getComponentSize(0) - 8
+        bi.getRaster.getSamples(0, 0, w, h, 0, null: Array[Int]).map(s => (s >> shift) * 0x010101)
+      } else bi.getRGB(0, 0, w, h, null, 0, w)
     val rgb = new Array[Byte](w * h * 3)
     var i = 0
     while (i < px.length) {
@@ -85,22 +139,45 @@ object MediaCodec {
 
   private val JpegMeta = "javax_imageio_jpeg_image_1.0"
 
+  /** `img` as an indexed image whose palette is exactly its distinct
+    * colours, in first-seen order. Handed an RGB image, the JDK's GIF
+    * writer runs its octree quantizer instead, which cost most of an encode
+    * and silently merges colours above 256; more than 256 is refused.
+    */
+  private def onPalette(img: PngImage): BufferedImage = {
+    val slot = mutable.LinkedHashMap.empty[Int, Int]
+    val indices = Array.tabulate(img.width * img.height) { i =>
+      val c = ((img.rgb(i * 3) & 0xff) << 16) | ((img.rgb(i * 3 + 1) & 0xff) << 8) |
+        (img.rgb(i * 3 + 2) & 0xff)
+      slot.getOrElseUpdate(c, slot.size).toByte
+    }
+    require(slot.size <= 256, s"GIF holds at most 256 colours, image has ${slot.size}")
+    val Seq(r, g, b) = Seq(16, 8, 0).map(s => slot.keysIterator.map(c => (c >> s).toByte).toArray)
+    val bi = new BufferedImage(img.width, img.height, BufferedImage.TYPE_BYTE_INDEXED,
+      new IndexColorModel(8, slot.size, r, g, b))
+    bi.getRaster.setDataElements(0, 0, img.width, img.height, indices)
+    bi
+  }
+
   /** Encode RGB8 as "png", "jpeg", "gif" or "bmp" through the JDK writer.
     *  - JPEG is baseline, 4:4:4 and RGB-coded (Adobe APP14 transform 0, no
     *    JFIF) at quality 0.9, which round-trips q_dedup_image's 32×32
     *    fixture exactly. YCbCr coding rounds channels by ±1 and so flips
     *    aHash bits that sit on the mean (1,188 of 20,000 fixture ids);
     *    the writer's default 4:2:0 drifts on 14,812.
-    *  - GIF is written non-interlaced: the JDK reader returns wrong pixels
-    *    for interlaced images 2–4 rows tall. Above 256 distinct colours
-    *    the writer would silently quantize, so that is refused.
+    *  - GIF is written non-interlaced, from an exact palette: the JDK
+    *    reader returns wrong pixels for interlaced images 2–4 rows tall,
+    *    and more than 256 distinct colours is refused.
     */
   def encodeImage(img: PngImage, format: String): Array[Byte] = {
     require(ImageFormats(format), s"unsupported image format $format")
     require(img.rgb.length == img.width * img.height * 3,
       s"rgb length ${img.rgb.length} != w*h*3 (${img.width}x${img.height})")
-    val bi = new BufferedImage(img.width, img.height, BufferedImage.TYPE_3BYTE_BGR)
-    bi.getRaster.setDataElements(0, 0, img.width, img.height, img.rgb)
+    val bi = if (format == "gif") onPalette(img) else {
+      val bi = new BufferedImage(img.width, img.height, BufferedImage.TYPE_3BYTE_BGR)
+      bi.getRaster.setDataElements(0, 0, img.width, img.height, img.rgb)
+      bi
+    }
     val writer = ImageIO.getImageWritersByFormatName(format).next()
     val param = writer.getDefaultWriteParam
     val meta: IIOMetadata = format match {
@@ -124,10 +201,6 @@ object MediaCodec {
         meta.setFromTree(JpegMeta, root)
         meta
       case "gif" =>
-        val colours = Iterator.range(0, img.rgb.length, 3).map(i =>
-          ((img.rgb(i) & 0xff) << 16) | ((img.rgb(i + 1) & 0xff) << 8) | (img.rgb(i + 2) & 0xff))
-          .distinct.size
-        require(colours <= 256, s"GIF holds at most 256 colours, image has $colours")
         param.setProgressiveMode(ImageWriteParam.MODE_DISABLED)
         null
       case _ => null
@@ -150,6 +223,23 @@ object MediaCodec {
     def durationMs: Long = if (sampleRate <= 0) 0L else nFrames * 1000L / sampleRate
   }
 
+  // AudioSystem looks its providers up through ServiceLoader on every call,
+  // which cost more than the clip itself (~60 µs per clip on Spark's
+  // classpath). The JDK's own providers are stateless, so they are loaded
+  // once and tried in AudioSystem's order, except that the readers taking
+  // PCM WAV go first: a reader that rejects a blob costs ~20 µs, and the
+  // JDK's WAV readers split the format tags between them, so the order
+  // changes no result.
+  private lazy val audioWriters: Vector[AudioFileWriter] =
+    ServiceLoader.loadInstalled(classOf[AudioFileWriter]).asScala.toVector
+
+  private lazy val wavReaders: Vector[AudioFileReader] = {
+    val probe = encodeWavPcm16(8000, 1, Array[Short](0))
+    val (pcm, rest) = ServiceLoader.loadInstalled(classOf[AudioFileReader]).asScala.toVector
+      .partition(r => Try(r.getAudioInputStream(new ByteArrayInputStream(probe))).isSuccess)
+    pcm ++ rest
+  }
+
   /** Encode 16-bit PCM samples (interleaved when channels > 1) as RIFF/WAVE. */
   def encodeWavPcm16(sampleRate: Int, channels: Int, samples: Array[Short]): Array[Byte] = {
     val data = new Array[Byte](samples.length * 2)
@@ -160,10 +250,11 @@ object MediaCodec {
       i += 1
     }
     val format = new AudioFormat(sampleRate.toFloat, 16, channels, true, false)
+    val pcm = new AudioInputStream(new ByteArrayInputStream(data), format, samples.length / channels)
     val out = new ByteArrayOutputStream()
-    AudioSystem.write(
-      new AudioInputStream(new ByteArrayInputStream(data), format, samples.length / channels),
-      AudioFileFormat.Type.WAVE, out)
+    audioWriters.find(_.isFileTypeSupported(AudioFileFormat.Type.WAVE, pcm))
+      .getOrElse(throw new IllegalArgumentException(s"no WAV writer for $format"))
+      .write(pcm, AudioFileFormat.Type.WAVE, out)
     out.toByteArray
   }
 
@@ -171,16 +262,24 @@ object MediaCodec {
     * truncated input.
     */
   def decodeWav(bytes: Array[Byte]): Option[WavAudio] = {
-    if (bytes == null) return None
+    // only RIFF/WAVE: AudioSystem's other readers would hand back AIFF/AU
+    // as big-endian samples and render MIDI through a synthesizer
+    if (bytes == null || bytes.length < 12 ||
+      new String(bytes, 0, 4, StandardCharsets.US_ASCII) != "RIFF" ||
+      new String(bytes, 8, 4, StandardCharsets.US_ASCII) != "WAVE") return None
     try {
-      val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(bytes))
-      try {
-        val f = in.getFormat
-        val data = in.readAllBytes()
-        if (in.getFrameLength != AudioSystem.NOT_SPECIFIED &&
-          data.length.toLong != in.getFrameLength * f.getFrameSize) None
-        else Some(WavAudio(f.getSampleRate.toInt, f.getChannels, f.getSampleSizeInBits, data))
-      } finally in.close()
+      wavReaders.iterator.flatMap { r =>
+        try Some(r.getAudioInputStream(new ByteArrayInputStream(bytes)))
+        catch { case _: UnsupportedAudioFileException => None }
+      }.nextOption().flatMap { in =>
+        try {
+          val f = in.getFormat
+          val data = in.readAllBytes()
+          if (in.getFrameLength != AudioSystem.NOT_SPECIFIED &&
+            data.length.toLong != in.getFrameLength * f.getFrameSize) None
+          else Some(WavAudio(f.getSampleRate.toInt, f.getChannels, f.getSampleSizeInBits, data))
+        } finally in.close()
+      }
     } catch { case _: Exception => None }
   }
 

@@ -7,7 +7,7 @@ import javax.imageio.stream.MemoryCacheImageOutputStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.multimodal.Multimodal
-import graft.multimodal.MediaCodec.{PngImage, decodeImage, encodeImage}
+import graft.multimodal.MediaCodec.{PngImage, decodeImage, encodeImage, sniffDims}
 
 /** PNG/JPEG/GIF/BMP specs for MediaCodec's one image seam: exact
   * round-trips for the lossless formats, bounded error for JPEG, files
@@ -190,6 +190,29 @@ class MediaCodecFormatsSpec extends AnyFunSuite {
     assert(maxChannelDiff(img, dec.get) === 0)
   }
 
+  test("gif: a first frame offset on a larger logical screen decodes at the screen size") {
+    val img = blockImage(5, 3, 1, seed = 11)
+    val gif = encodeImage(img, "gif")
+    // widen the logical screen to 12×8 and move the frame to (4, 2)
+    val (sw, sh, left, top) = (12, 8, 4, 2)
+    gif(6) = sw.toByte; gif(7) = 0; gif(8) = sh.toByte; gif(9) = 0
+    val desc = gif.indices.find(i =>
+      gif.slice(i, i + 9).toSeq == Seq[Byte](0x2c, 0, 0, 0, 0, 5, 0, 3, 0)).get
+    gif(desc + 1) = left.toByte; gif(desc + 3) = top.toByte
+    assert(sniffDims(gif) === Some(("gif", sw, sh)))
+    val bg =
+      if ((gif(10) & 0x80) == 0) Seq[Byte](0, 0, 0)
+      else gif.slice(13 + (gif(11) & 0xff) * 3, 16 + (gif(11) & 0xff) * 3).toSeq
+    val dec = decodeImage(gif).get
+    assert((dec.width, dec.height) === ((sw, sh)))
+    for (y <- 0 until sh; x <- 0 until sw) {
+      val inFrame = x >= left && x < left + 5 && y >= top && y < top + 3
+      val p = ((y - top) * 5 + x - left) * 3
+      val want = if (inFrame) img.rgb.slice(p, p + 3).toSeq else bg
+      assert(dec.rgb.slice((y * sw + x) * 3, (y * sw + x) * 3 + 3).toSeq === want, s"($x, $y)")
+    }
+  }
+
   test("gif: >256 distinct colors refuses to encode; corrupt bytes refuse to decode") {
     // 1024 pixels, each a distinct (r,g) pair → 1024 distinct colors
     val rgb = new Array[Byte](32 * 32 * 3)
@@ -216,6 +239,27 @@ class MediaCodecFormatsSpec extends AnyFunSuite {
     val img = blockImage(15, 9, 3, seed = 2)
     val dec = decodeImage(jdkWritten(img, "bmp"))
     assert(dec.nonEmpty && maxChannelDiff(img, dec.get) === 0)
+  }
+
+  test("png: 16-bit gray and gray+alpha decode to their samples, not gamma-mapped") {
+    import java.awt.color.ColorSpace
+    import java.awt.image.{BufferedImage, ComponentColorModel, DataBuffer}
+    val (w, h) = (7, 3)
+    val levels = Array.tabulate(w * h)(i => i * 12) // 0..240, mid-greys included
+    val gray16 = new BufferedImage(w, h, BufferedImage.TYPE_USHORT_GRAY)
+    gray16.getRaster.setSamples(0, 0, w, h, 0, levels.map(v => v * 256 + 100)) // high byte v
+    val cm = new ComponentColorModel(ColorSpace.getInstance(ColorSpace.CS_GRAY),
+      true, false, java.awt.Transparency.TRANSLUCENT, DataBuffer.TYPE_BYTE)
+    val grayAlpha = new BufferedImage(cm, cm.createCompatibleWritableRaster(w, h), false, null)
+    grayAlpha.getRaster.setSamples(0, 0, w, h, 0, levels)
+    grayAlpha.getRaster.setSamples(0, 0, w, h, 1, Array.fill(w * h)(200))
+    for ((bi, name) <- Seq((gray16, "16-bit gray"), (grayAlpha, "gray+alpha"))) {
+      val out = new java.io.ByteArrayOutputStream()
+      assert(ImageIO.write(bi, "png", out), name)
+      val dec = decodeImage(out.toByteArray)
+      assert(dec.nonEmpty, name)
+      assert(dec.get.rgb.map(_ & 0xff).toSeq === levels.flatMap(v => Seq(v, v, v)).toSeq, name)
+    }
   }
 
   test("decodeImage dispatches on magic bytes across all four formats") {

@@ -70,6 +70,16 @@ class MultimodalSpec extends SparkSpec {
     assert(MediaCodec.decodeWav(null) === None)
     assert(MediaCodec.decodeWav(Array[Byte](1, 2, 3)) === None)
     assert(MediaCodec.decodeWav(stWav.take(stWav.length - 2)) === None)
+    // AIFF and AU hold big-endian samples that WavAudio cannot describe
+    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
+    for (kind <- Seq(AudioFileFormat.Type.AIFF, AudioFileFormat.Type.AU)) {
+      val pcm = new AudioInputStream(new java.io.ByteArrayInputStream(stWav.drop(44)),
+        new AudioFormat(8000f, 16, 2, true, false), 400)
+      val out = new java.io.ByteArrayOutputStream()
+      AudioSystem.write(pcm, kind, out)
+      assert(AudioSystem.getAudioInputStream(new java.io.ByteArrayInputStream(out.toByteArray)) != null)
+      assert(MediaCodec.decodeWav(out.toByteArray) === None, kind.toString)
+    }
   }
 
   test("avi encode/decode round-trips frames, dims and duration") {
